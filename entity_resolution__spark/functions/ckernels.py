@@ -4,13 +4,12 @@ jaro + LCS are ~90% of the pairwise feature kernel's single-thread CPU
 (cProfile at the 20k-pair bench batch: jaro_winkler 60%, lcs_len 30%);
 both are per-pair char loops that neither numpy batching (two rewrites
 measured slower — see the round-4 note in functions/features.py and the
-round-7 retry) nor Catalyst can absorb. rapidfuzz would be the normal
-answer but is absent from this environment, so this module compiles a
-direct C transcription of the pure-python kernels with the system gcc
-at first use (cached .so keyed on the source hash), loads it via
-ctypes, and — exactly like the rapidfuzz path in functions/strings.py —
-certifies it against the pure kernels on the parity battery before it
-is allowed to serve. Any failure (no compiler, compile error, battery
+round-7 retry) nor Catalyst can absorb. A compiled string library
+(rapidfuzz) is not a dependency, so this module compiles a direct C
+transcription of the pure-python kernels with the system gcc at first
+use (cached .so keyed on the source hash), loads it via ctypes, and
+certifies it against the pure kernels on the parity battery
+(strings._parity_battery) before it is allowed to serve. Any failure (no compiler, compile error, battery
 mismatch) silently yields the pure-python fallback; the python kernels
 remain the oracle the tests pin.
 
@@ -19,8 +18,7 @@ operation ORDER ((m/la + m/lb + (m-t)/m) / 3.0 and
 j + prefix*0.1*(1-j)), all in IEEE double on SSE2 — bit-identical
 results, enforced by the battery plus a randomized-corpus pytest.
 
-SPARK_GRAFT_PURE_KERNELS=1 disables this path (same switch as the
-rapidfuzz probe) for A/B measurement.
+SPARK_GRAFT_PURE_KERNELS=1 disables this path for A/B measurement.
 """
 
 from __future__ import annotations
@@ -324,8 +322,8 @@ def _compile() -> str | None:
 
 
 def _probe(k: _CKernels) -> bool:
-    """Exact-parity certification vs the pure-python kernels (same
-    battery + discipline as strings._probe_rapidfuzz)."""
+    """Exact-parity certification vs the pure-python kernels on
+    strings._parity_battery."""
     from entity_resolution__spark.functions import strings as S
 
     battery = S._parity_battery()

@@ -327,12 +327,11 @@ def compute_feature_struct(
     # Role/tool vocabularies are tiny, so the same (l, r) sequence combo
     # recurs across many pairs (measured 9× for tool seqs at bench
     # scale): compute once per distinct combo and scatter back.
-    er_kernel = K.edit_ratio_kernel()  # C path when rapidfuzz probe passed
     out["role_seq_sim"] = _dedup_pair_kernel(
-        er_kernel, roles_l.fillna(""), roles_r.fillna("")
+        K.edit_ratio, roles_l.fillna(""), roles_r.fillna("")
     )
     out["tool_seq_sim"] = _dedup_pair_kernel(
-        er_kernel, tools_l.fillna(""), tools_r.fillna("")
+        K.edit_ratio, tools_l.fillna(""), tools_r.fillna("")
     )
     return pd.DataFrame(out)
 

@@ -5,7 +5,7 @@ reference takes from rapidfuzz/jellyfish
 (/root/reference/src/features/feautre_extraction.py:47-59):
 
   edit_ratio    — normalized indel similarity = 2·LCS(a,b)/(|a|+|b|)
-                  (what rapidfuzz.fuzz.ratio computes)
+                  (the reference's fuzz.ratio / 100)
   lcs_ratio     — LCS(a,b)/max(|a|,|b|) (reference :26-43 — longest
                   common SUBSEQUENCE despite its "substring" comment)
   jaro_winkler  — Jaro-Winkler similarity, prefix weight 0.1, boost
@@ -68,7 +68,7 @@ def lcs_len_dp(a: str, b: str) -> int:
 
 
 def edit_ratio(a: str, b: str) -> float:
-    """Normalized indel similarity (== rapidfuzz fuzz.ratio / 100)."""
+    """Normalized indel similarity, 2·LCS(a,b)/(|a|+|b|)."""
     if not a and not b:
         return 1.0
     la, lb = len(a), len(b)
@@ -279,39 +279,34 @@ def metaphone(word: str) -> str:  # noqa: C901 - algorithm is a rule table
 
 
 # ---------------------------------------------------------------------------
-# optional C-accelerated path (rapidfuzz) — round-4 VERDICT #6
+# compiled-C tier (functions/ckernels.py) — round 7
 # ---------------------------------------------------------------------------
 # jaro + LCS are ~60% of the kernel's single-thread CPU; two pure-python
 # batched rewrites measured SLOWER (round 4), so the remaining lever is a
-# compiled kernel. rapidfuzz computes the exact same published
-# definitions (Indel ratio = 2·LCS/(|a|+|b|), LCSseq length,
-# Jaro-Winkler with prefix 4 / weight 0.1 / boost 0.7): when the library
-# is importable AND an import-time probe confirms exact agreement with
-# the pure kernels on a vector battery, the Series forms route through
-# rapidfuzz.process.cpdist (releases the GIL, C loop). The pure-python
-# kernels stay the oracle path — this container has no rapidfuzz, so CI
-# exercises the fallback; the parity pytest self-skips.
+# compiled kernel. ckernels compiles a C transcription of the two hot
+# kernels (jaro-winkler + bit-parallel LCS) with the system gcc and, at
+# load, certifies exact agreement with the pure kernels on the vector
+# battery below; only then do the Series forms route through it. The
+# pure-python kernels stay the oracle and the unconditional fallback.
 # SPARK_GRAFT_PURE_KERNELS=1 forces the fallback for A/B measurement.
-
-_RF = None  # module handle when the accelerated path is live
 
 
 def _parity_battery() -> list[tuple[str, str]]:
-    """The probe's input corpus: 13 curated pairs pinning known branch
-    points, plus a ~300-pair seeded randomized corpus (round-5 ADVICE —
-    an accelerated deployment is the ONLY place the probe runs against
-    the real library, so widen it: unicode casing, long-common-prefix
-    floats, mutation near-misses). Deterministic (fixed seed) so a
-    rejection is reproducible; exposed as a function so CI — which has
-    no rapidfuzz — still exercises corpus generation + the pure kernels
-    over it (tests/test_strings.py)."""
+    """The certification corpus ckernels._probe runs the compiled tier
+    against: 13 curated pairs pinning known branch points, plus a
+    ~300-pair seeded randomized corpus (round-5 ADVICE — widen it:
+    unicode casing, long-common-prefix floats, mutation near-misses).
+    Deterministic (fixed seed) so a rejection is reproducible; exposed
+    as a function so tests exercise corpus generation + the pure kernels
+    over it even where the compiled tier cannot build
+    (tests/test_strings.py)."""
     battery = [
         ("", ""), ("", "abc"), ("martha", "marhta"), ("dixon", "dicksonx"),
         ("jellyfish", "smellyfish"), ("ABCVWXYZ", "CABVWUXYZ"),
         ("duane", "dwayne"), ("a" * 70 + "b", "b" + "a" * 70),
         ("kitten", "sitting"), ("résumé", "resume"), ("x", "x"),
         # shared prefix but jaro ≤ 0.7: exercises the Winkler BOOST
-        # THRESHOLD branch — a rapidfuzz build applying the prefix bonus
+        # THRESHOLD branch — a compiled kernel applying the prefix bonus
         # unconditionally must be rejected here (round-5 review)
         ("abcdef", "abzzzz"), ("prefab", "prezzzzzzzz"),
     ]
@@ -345,66 +340,12 @@ def _parity_battery() -> list[tuple[str, str]]:
     return battery
 
 
-def _probe_rapidfuzz():
-    import os as _os
+try:
+    from entity_resolution__spark.functions import ckernels as _ckmod
 
-    if _os.environ.get("SPARK_GRAFT_PURE_KERNELS") == "1":
-        return None
-    try:
-        from rapidfuzz.distance import Indel as _Indel
-        from rapidfuzz.distance import LCSseq as _LCSseq
-        from rapidfuzz.distance import JaroWinkler as _JW
-        from rapidfuzz import process as _process
-    except ImportError:
-        return None
-    battery = _parity_battery()
-    for a, b in battery:
-        if _LCSseq.similarity(a, b) != lcs_len(a, b):
-            return None
-        if _JW.similarity(a, b) != jaro_winkler(a, b):
-            return None
-        if _Indel.normalized_similarity(a, b) != edit_ratio(a, b):
-            return None
-    # certify the BATCH path too: cpdist must reproduce the float64
-    # kernels bitwise (its default dtype is float32 for normalized
-    # scorers — the call sites pass float64, and this check rejects any
-    # build where that still quantizes; round-5 review)
-    av = np.array([a for a, _ in battery], dtype=object)
-    bv = np.array([b for _, b in battery], dtype=object)
-    jw_c = _process.cpdist(av, bv, scorer=_JW.similarity, dtype=np.float64, workers=1)
-    er_c = _process.cpdist(
-        av, bv, scorer=_Indel.normalized_similarity, dtype=np.float64, workers=1
-    )
-    lcs_c = _process.cpdist(av, bv, scorer=_LCSseq.similarity, dtype=np.int64, workers=1)
-    for i, (a, b) in enumerate(battery):
-        if jw_c[i] != jaro_winkler(a, b) or er_c[i] != edit_ratio(a, b):
-            return None
-        if int(lcs_c[i]) != lcs_len(a, b):
-            return None
-    return {
-        "LCSseq": _LCSseq,
-        "JW": _JW,
-        "Indel": _Indel,
-        "process": _process,
-    }
-
-
-_RF = _probe_rapidfuzz()
-
-# Compiled-C fallback tier (round 7): when rapidfuzz is absent, compile
-# the two hot kernels (jaro-winkler + bit-parallel LCS) with the system
-# gcc and certify them on the same parity battery — see
-# functions/ckernels.py. Pure python remains the oracle and the
-# unconditional fallback; SPARK_GRAFT_PURE_KERNELS=1 disables both
-# accelerated tiers.
-_CK = None
-if _RF is None:
-    try:
-        from entity_resolution__spark.functions import ckernels as _ckmod
-
-        _CK = _ckmod.load()
-    except Exception:
-        _CK = None
+    _CK = _ckmod.load()  # the certified compiled kernels, or None
+except Exception:
+    _CK = None
 
 
 # ---------------------------------------------------------------------------
@@ -418,29 +359,7 @@ def pair_series(fn, a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(np.fromiter((fn(x, y) for x, y in zip(av, bv)), dtype=np.float64, count=len(av)))
 
 
-def edit_ratio_kernel():
-    """Scalar edit_ratio — the rapidfuzz C implementation when the
-    import-time parity probe passed, else the pure-python kernel. For
-    per-distinct-combo call sites (features._dedup_pair_kernel) where a
-    Series form doesn't fit."""
-    if _RF is not None:
-        return _RF["Indel"].normalized_similarity
-    return edit_ratio
-
-
 def edit_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _RF is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        return pd.Series(
-            _RF["process"].cpdist(
-                av,
-                bv,
-                scorer=_RF["Indel"].normalized_similarity,
-                dtype=np.float64,  # default float32 would quantize
-                workers=1,
-            )
-        )
     if _CK is not None and len(a):
         av = a.fillna("").astype(str).to_numpy()
         bv = b.fillna("").astype(str).to_numpy()
@@ -471,17 +390,11 @@ def indel_and_lcs_series(
     av = a.fillna("").astype(str).to_numpy()
     bv = b.fillna("").astype(str).to_numpy()
     n = len(av)
-    if (_RF is not None or _CK is not None) and n:
-        # one C-side LCS pass (rapidfuzz or the compiled ckernels tier);
-        # both ratios are numpy arithmetic over the integer LCS lengths
-        # (identical formulas to the loop below)
-        if _RF is not None:
-            lcs = _RF["process"].cpdist(
-                av, bv, scorer=_RF["LCSseq"].similarity, dtype=np.int64,
-                workers=1,
-            ).astype(np.float64)
-        else:
-            lcs = _CK.lcs_batch(av, bv).astype(np.float64)
+    if _CK is not None and n:
+        # one C-side LCS pass (the compiled ckernels tier); both ratios
+        # are numpy arithmetic over the integer LCS lengths (identical
+        # formulas to the loop below)
+        lcs = _CK.lcs_batch(av, bv).astype(np.float64)
         la = np.fromiter((len(x) for x in av), dtype=np.int64, count=n)
         lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=n)
         tot = la + lb
@@ -506,18 +419,6 @@ def indel_and_lcs_series(
 
 
 def jaro_winkler_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _RF is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        return pd.Series(
-            _RF["process"].cpdist(
-                av,
-                bv,
-                scorer=_RF["JW"].similarity,
-                dtype=np.float64,  # default float32 would quantize
-                workers=1,
-            )
-        )
     if _CK is not None and len(a):
         av = a.fillna("").astype(str).to_numpy()
         bv = b.fillna("").astype(str).to_numpy()

@@ -1,14 +1,20 @@
-"""Distributed connected components: large-star / small-star join loop.
+"""Connected components: partition-local forest, then a driver finish or
+the large-star / small-star join loop.
 
 Replaces the reference's single-process union-find
-(/root/reference/scripts/apply_transitivity.py:21-45) with the
-alternating-star algorithm of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (SoCC'14): O(log^2 n) rounds worst case, ~log n in
-practice, each round a pair of shuffles keyed on node id. Node ids are
-any orderable type (we use conv_id strings; lexicographic order is the
+(scripts/apply_transitivity.py:21-45). Every call runs
+one min-root union-find (`_union_find`) per partition, turning each
+partition's edges into a spanning forest (`_local_forest_edges`). A
+small forest is finished by the same union-find on the driver
+(`_local_dsu_components`); a large one, or any run that snapshots its
+iterations, by the alternating-star algorithm of Kiveris et al.,
+"Connected Components in MapReduce and Beyond" (SoCC'14): O(log^2 n)
+rounds worst case, ~log n in practice, each round a pair of shuffles
+keyed on node id. Both give root = min member. Node ids are any
+orderable type (we use conv_id strings; lexicographic order is the
 total order).
 
-Scale notes:
+Star-loop scale notes:
 - Each iteration is groupBy(node).min + join — both shuffle on the node
   key; AQE handles stragglers, and the star-contraction itself removes
   high-degree hubs after round 1 (a hub's neighbors all rewire to the
@@ -23,6 +29,7 @@ Scale notes:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from itertools import chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -105,17 +112,24 @@ class CCResult:
     fingerprints: list[tuple[int, int]] = field(default_factory=list)
 
 
-def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
-    """Driver-side union-find for SMALL edge sets (same output contract
-    as the distributed loop: root = min member). Iterative find with
-    path halving; min-root maintained by always attaching the larger id
-    under the smaller — independently structured from the reference's
-    recursive rank-union DSU (apply_transitivity.py:21-45).
+def _union_find(pairs) -> tuple[list, list]:
+    """Min-root union-find over an iterable of (a, b) edges → (nodes,
+    roots), where root is the smallest member of the node's component.
+    Iterative find with path compression; min-root maintained by always
+    attaching the larger root under the smaller — independently
+    structured from the reference's recursive rank-union DSU
+    (apply_transitivity.py:21-45). The one copy behind both the
+    per-partition pre-pass and the driver finish.
 
-    `_edges_pdf`: the caller may pass the already-fetched pandas edge
-    frame (connected_components' size probe now IS the fetch) so the
-    transfer is not paid twice; `edges` still supplies schema/session.
-    """
+    `pairs` is consumed lazily, so the pre-pass can stream Arrow batches
+    through it holding only the parent dict. Feed it native python
+    values (`.tolist()`), not numpy scalars: the loop hashes every
+    endpoint into the parent dict, and numpy scalar boxing +
+    np.int64.__hash__ make that ~3× slower than native python ints
+    (measured at 1.05M edges: 10.7 s → 3.4 s; strings are object-dtype
+    either way). A numpy-vectorized CC (minimum.at relax + pointer
+    doubling) was prototyped and measured SLOWER (13.5 s — unbuffered
+    ufunc.at scatter), so the scalar DSU stays."""
     parent: dict = {}
 
     def find(x):
@@ -126,6 +140,24 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    nodes = list(parent)
+    return nodes, [find(n) for n in nodes]
+
+
+def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
+    """Driver-side finish for SMALL edge sets: `_union_find` over the
+    collected edges, same output contract as the distributed loop
+    (root = min member).
+
+    `_edges_pdf`: the caller may pass the already-fetched pandas edge
+    frame (connected_components' size probe IS the fetch) so the
+    transfer is not paid twice; `edges` still supplies schema/session.
+    """
     # Arrow transfer both ways. Round-5 A/B at 100k string edges,
     # local[8]: Row collect 0.47s → toPandas 0.18s, find-loop 0.18s →
     # 0.06s (numpy array iteration vs Row __getitem__), tuple-list
@@ -140,6 +172,7 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
     pdf = _edges_pdf
     if pdf is None:
         pdf = edges.select("src", "dst").na.drop(subset=["src", "dst"]).toPandas()
+    import pandas as pd
     import pandas.api.types as _pt
     from pyspark.sql import types as T
 
@@ -154,26 +187,9 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
                 f"_local_dsu_components: column {c!r} arrived as "
                 f"{pdf[c].dtype} for Spark type {edges.schema[c].dataType}"
             )
-    # .tolist(), not .to_numpy(): the loop hashes every endpoint into
-    # the parent dict, and numpy scalar boxing + np.int64.__hash__ make
-    # that ~3× slower than native python ints (measured at 1.05M edges:
-    # 10.7 s → 3.4 s; strings are object-dtype either way). A
-    # numpy-vectorized CC (minimum.at relax + pointer doubling) was
-    # prototyped and measured SLOWER (13.5 s — unbuffered ufunc.at
-    # scatter), so the scalar DSU stays.
-    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    import pandas as pd
-
-    nodes = list(parent)
-    out = pd.DataFrame({"node": nodes, "root": [find(n) for n in nodes]})
+    nodes, roots = _union_find(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    out = pd.DataFrame({"node": nodes, "root": roots})
     spark = edges.sparkSession
-    from pyspark.sql import types as T
-
     node_type = edges.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("root", node_type)]
@@ -196,41 +212,31 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
 
 def _local_forest_edges(edges: DataFrame) -> DataFrame:
     """Partition-local union-find pre-pass (round-6 VERDICT #1, the
-    two-level CC): each task runs the DSU over ITS partition's edges and
-    emits that partition's components as min-root star edges
+    two-level CC): each task runs `_union_find` over ITS partition's
+    edges and emits that partition's components as min-root star edges
     (node → local_root, one per non-root member). The union of these
     per-partition spanning stars is connectivity-EQUIVALENT to the
     input (each partition's edge set is replaced by a spanning forest of
-    the same local components), so the global star loop computes the
-    identical (node, min-root) assignment — but its input now has
-    diameter ≤ 2 per partition-component, so rounds collapse to
-    ~log(cross-partition path length) instead of ~log(graph diameter),
-    and on dense graphs the edge count shrinks toward |V|. At the
-    1.05M-chain-edge cc_atsize shape this replaced 11 star rounds with
-    3. No driver state: the DSU runs inside mapInPandas per task."""
+    the same local components), so either finish computes the identical
+    (node, min-root) assignment — but its input now has diameter ≤ 2 per
+    partition-component, so star rounds collapse to ~log(cross-partition
+    path length) instead of ~log(graph diameter), and on dense graphs
+    the edge count shrinks toward |V|. At the 1.05M-chain-edge
+    cc_atsize shape this replaced 11 star rounds with 3. No driver
+    state: the DSU runs inside mapInPandas per task.
+
+    Only (src, dst) is carried: extra edge columns (a weight, say) would
+    otherwise be declared in the output schema but never yielded."""
     import pandas as pd
 
-    schema = edges.schema
+    edges = edges.select("src", "dst")
 
     def forest(pdf_iter):
-        parent: dict = {}
-
-        def find(x):
-            r = parent.setdefault(x, x)
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in pdf_iter:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-        nodes = list(parent)
-        roots = [find(n) for n in nodes]
+        nodes, roots = _union_find(
+            chain.from_iterable(
+                zip(pdf["src"].tolist(), pdf["dst"].tolist()) for pdf in pdf_iter
+            )
+        )
         out = pd.DataFrame(
             {
                 "src": [n for n, r in zip(nodes, roots) if n != r],
@@ -241,7 +247,7 @@ def _local_forest_edges(edges: DataFrame) -> DataFrame:
             return
         yield out
 
-    return edges.select("src", "dst").mapInPandas(forest, schema)
+    return edges.mapInPandas(forest, edges.schema)
 
 
 def connected_components(
@@ -249,7 +255,6 @@ def connected_components(
     max_iter: int = 50,
     on_iteration=None,
     local_threshold: int = 2_000_000,
-    local_forest: bool = True,
 ) -> CCResult:
     """edges(src, dst) → (node, root) where root = min member of component.
 
@@ -257,55 +262,56 @@ def connected_components(
     union them in afterwards (see `assign_clusters`). ``on_iteration`` is
     an optional callback (it, edges_df, fingerprint) used by the
     checkpointing layer to commit per-iteration snapshots (north_rule:
-    cluster-iteration resumability).
+    cluster-iteration resumability). Columns other than src and dst are
+    ignored.
 
-    Size-adaptive execution, same spirit as Spark choosing broadcast
-    over sort-merge: an edge set under ``local_threshold`` is solved by
-    a driver-side union-find (one pass, one job) instead of paying
-    2 + 2·rounds job barriers of the star loop — at 20k edges the loop
-    is pure fixed overhead (~10 s of scheduling for <1 s of compute),
-    and at 1.05M edges the DSU still wins 4-13× (3.4-10.7 s vs 41.6 s:
-    the star loop's per-iteration barriers don't shrink with edge
-    count, which is also why the clusters stage scaled at 0.27 in the
-    round-6 4.3M-turn pair). The 2M default bounds the collect at
-    ~200 MB for string node ids against a 56g driver — the same
-    adaptive-threshold idiom as Spark's autoBroadcastJoinThreshold
-    (ADVICE round 2 flagged 2M × cohort-qualified composite keys as
-    multi-GB; those callers pass a lower threshold or dense int keys).
-    The distributed loop remains the 100 TB scale path and is FORCED
-    whenever per-iteration snapshots are requested (``on_iteration``
-    set) or ``local_threshold=0``. Both paths produce identical
-    (node, root) assignments (root = min member); tests assert parity —
-    self-loop edges are dropped up front on BOTH paths (the star loop's
-    u>v filter would otherwise drop them only on the distributed path).
+    One shape for every call: the partition-local forest pre-pass
+    (`_local_forest_edges`) always runs first, then one of two finishes.
+
+    - Driver finish: when ``on_iteration`` is unset and the forest has
+      at most ``local_threshold`` edges, it is collected and solved by
+      the driver union-find (one pass, one job) instead of paying
+      2 + 2·rounds job barriers of the star loop — at 20k edges the
+      loop is pure fixed overhead (~10 s of scheduling for <1 s of
+      compute), and at 1.05M edges the DSU still wins 4-13× (3.4-10.7 s
+      vs 41.6 s: the star loop's per-iteration barriers don't shrink
+      with edge count, which is also why the clusters stage scaled at
+      0.27 in the round-6 4.3M-turn pair). Same spirit as Spark
+      choosing broadcast over sort-merge. The forest holds at most one
+      edge per node per partition, so the collect scales with the node
+      count, not the edge count. The 2M default bounds it at ~200 MB
+      for string node ids — the same adaptive-threshold idiom as
+      Spark's autoBroadcastJoinThreshold (ADVICE round 2 flagged 2M ×
+      cohort-qualified composite keys as multi-GB; those callers pass a
+      lower threshold or dense int keys).
+    - Star loop: the distributed large-star/small-star rounds over the
+      forest, the 100 TB scale path. Forced whenever per-iteration
+      snapshots are requested (``on_iteration`` set) or
+      ``local_threshold=0``.
+
+    Both finishes produce identical (node, root) assignments; tests
+    assert parity. Self-loop edges are dropped up front (the star
+    loop's u>v filter would otherwise drop them only on that path).
     """
-    # Materialize the input edge list FIRST (one job): both the local
-    # fast path (count + collect) and the star loop (_symmetric unions
-    # the edges with their reverse — two branches that would otherwise
-    # each recompute the full upstream lineage, double-running the
-    # feature UDF stage) read it more than once.
-    edges = edges.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=True)
+    # The forest's eager checkpoint is the one materialisation of the
+    # input: the mapInPandas reads the upstream lineage once, and both
+    # finishes — the probe below, and _symmetric's union of the edges
+    # with their reverse — read the forest instead, so the feature UDF
+    # stage upstream is never recomputed. The src != dst filter also
+    # drops null endpoints (the comparison is null, which filters out).
+    forest = _local_forest_edges(
+        edges.filter(F.col("src") != F.col("dst"))
+    ).localCheckpoint(eager=True)
     if on_iteration is None and local_threshold > 0:
         # the size probe IS the fetch: one bounded Arrow transfer
-        # (limit caps driver bytes exactly like the old count probe
-        # capped the decision) replaces the separate count job + full
-        # toPandas — one job fewer per CC call on the fast path
-        probe_pdf = (
-            edges.select("src", "dst")
-            .na.drop(subset=["src", "dst"])
-            .limit(local_threshold + 1)
-            .toPandas()
-        )
+        # (limit caps driver bytes exactly like a count probe would cap
+        # the decision) instead of a count job + a full toPandas
+        probe_pdf = forest.limit(local_threshold + 1).toPandas()
         if len(probe_pdf) <= local_threshold:
-            assign = _local_dsu_components(edges, _edges_pdf=probe_pdf)
+            assign = _local_dsu_components(forest, _edges_pdf=probe_pdf)
             return CCResult(assignments=assign, iterations=0, fingerprints=[])
-    if local_forest:
-        # two-level path: collapse each partition to its spanning stars
-        # before the global loop (connectivity-equivalent input — see
-        # _local_forest_edges; the (node, root) result is identical)
-        edges = _local_forest_edges(edges).localCheckpoint(eager=True)
     e = (
-        _symmetric(edges)
+        _symmetric(forest)
         .filter(F.col("u") > F.col("v"))  # canonical directed form
         .localCheckpoint(eager=True)
     )

@@ -16,6 +16,7 @@ kill-and-rerun tests exercise.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
@@ -30,8 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def fingerprint(params: dict[str, Any]) -> str:
-    import hashlib
-
     return hashlib.sha256(
         json.dumps(params, sort_keys=True, default=str).encode()
     ).hexdigest()[:16]
@@ -206,9 +205,13 @@ class StageStore(_StageStoreContract):
         os.makedirs(stage_dir, exist_ok=True)
         spark = df.sparkSession
         # sanitize the SQL identifier (round-6 ADVICE: a stage name with
-        # a dot/space broke DROP TABLE/saveAsTable — only '-' was mapped)
+        # a dot/space broke DROP TABLE/saveAsTable — only '-' was mapped).
+        # The sanitizing is many-to-one ('s.x' and 's_x' both give 's_x'),
+        # so a short hash of the raw name keeps two such stages of one
+        # run from dropping each other's table.
         safe = re.sub(r"[^A-Za-z0-9_]", "_", f"{stage}_{self.run_id}")
-        table = f"er_stage_{safe}"
+        tag = hashlib.sha256(stage.encode()).hexdigest()[:8]
+        table = f"er_stage_{safe}_{tag}"
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         w = df.write.mode("overwrite").option("path", data_dir).bucketBy(
             n_buckets, *bucket_cols

@@ -134,6 +134,12 @@ def conversation_progress(
     Timestamps are held in state as epoch-micros longs (portable state
     encoding); the output surfaces real timestamps.
 
+    Run it under a continuous trigger and stop it explicitly. Under
+    ``trigger(availableNow=True)`` the processing-time timeout keeps
+    scheduling no-data batches while any state row is alive, so the
+    query need not terminate (observed: 17 batches in 20 s, and
+    ``processAllAvailable()`` had not returned after 170 s).
+
     Output: (conv_id, n_turns, first_ts, last_ts, n_roles, done).
     """
     import pandas as pd

@@ -128,3 +128,24 @@ def test_bucketed_commit_colocated_join(spark, tmp_path_factory):
     assert m["bucket_spec"]["bucket_cols"] == ["k"]
     again = store.read_bucketed(spark, "stage_a")
     assert again.count() == 1000
+
+
+def test_bucketed_stage_names_that_sanitize_alike(spark, tmp_path_factory):
+    """'s.x' and 's_x' map to the same SQL-safe characters; each still
+    gets its own catalog table, so committing the second does not drop
+    the first and both read back their own rows."""
+    from pyspark.sql import functions as F
+
+    store = StageStore(str(tmp_path_factory.mktemp("bucketed_alike")))
+    store.commit_bucketed(
+        spark.range(10).select(F.col("id").alias("k")), "s.x", "fp-1", 2, ["k"]
+    )
+    store.commit_bucketed(
+        spark.range(25).select(F.col("id").alias("k")), "s_x", "fp-2", 2, ["k"]
+    )
+    t1 = store.manifest("s.x")["bucket_spec"]["table"]
+    t2 = store.manifest("s_x")["bucket_spec"]["table"]
+    assert t1 != t2
+    assert spark.catalog.tableExists(t1) and spark.catalog.tableExists(t2)
+    assert store.read_bucketed(spark, "s.x").count() == 10
+    assert store.read_bucketed(spark, "s_x").count() == 25

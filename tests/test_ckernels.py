@@ -1,10 +1,9 @@
 """Parity tests for the compiled-C kernel tier (functions/ckernels.py).
 
 The pure-python kernels are the oracle; the C tier must match them
-BITWISE on the curated battery plus a randomized corpus (same
-discipline as the rapidfuzz probe). Self-skips when the environment
-cannot compile (no gcc) — load() returning None is itself the guard
-that the accelerated path can never serve uncertified.
+BITWISE on the curated battery plus a randomized corpus. Self-skips
+when the environment cannot compile (no gcc) — load() returning None is
+itself the guard that the accelerated path can never serve uncertified.
 """
 
 from __future__ import annotations

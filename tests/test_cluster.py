@@ -309,35 +309,37 @@ def test_incremental_clusters_merge_and_new_nodes(spark):
 
 def test_two_level_forest_prepass_equivalence(spark):
     """Round-7 two-level CC: the partition-local spanning-star pre-pass
-    (_local_forest_edges) must leave the distributed loop's (node,
-    min-root) result IDENTICAL — for string and for integer node ids —
-    while shrinking per-partition diameter (chain converges in fewer
-    rounds than the plain loop)."""
-    import random as _r
-
+    (_local_forest_edges) that every call runs must leave the star
+    loop's (node, min-root) result IDENTICAL to the driver union-find
+    over the raw edges — for string and for integer node ids — and the
+    pre-pass output must be a star set no larger than the node count."""
     from entity_resolution__spark.operators.cluster import (
+        _local_dsu_components,
         _local_forest_edges,
         connected_components,
     )
 
-    _r.seed(13)
+    def rows(df):
+        return {(r["node"], r["root"]) for r in df.collect()}
+
+    rng = random.Random(13)
     nodes = [f"w{i:03d}" for i in range(150)]
-    edges = [(_r.choice(nodes), _r.choice(nodes)) for _ in range(200)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(200)]
     edges = [(a, b) for a, b in edges if a != b]
     e = spark.createDataFrame(edges, ["src", "dst"]).repartition(7)
-    plain = connected_components(e, local_threshold=0, local_forest=False)
-    two = connected_components(e, local_threshold=0, local_forest=True)
-    assert {(r["node"], r["root"]) for r in plain.assignments.collect()} == {
-        (r["node"], r["root"]) for r in two.assignments.collect()
-    }
+    star = connected_components(e, local_threshold=0)
+    assert star.iterations >= 1
+    assert rows(star.assignments) == rows(_local_dsu_components(e))
 
-    # integer ids through the Arrow boundary
+    # integer ids through the Arrow boundary: one chain, analytic root 0
     ei = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 40)], "src long, dst long"
     ).repartition(5)
-    two_i = connected_components(ei, local_threshold=0, local_forest=True)
-    rows = {(r["node"], r["root"]) for r in two_i.assignments.collect()}
-    assert rows == {(i, 0) for i in range(41)}
+    want = {(i, 0) for i in range(41)}
+    star_i = connected_components(ei, local_threshold=0)
+    assert star_i.iterations >= 1
+    assert rows(star_i.assignments) == want
+    assert rows(_local_dsu_components(ei)) == want
 
     # the pre-pass output is a connectivity-equivalent star set: no
     # self rows, never more edges than nodes-1 per component
@@ -345,3 +347,57 @@ def test_two_level_forest_prepass_equivalence(spark):
     frows = f.collect()
     assert all(r["src"] != r["dst"] for r in frows)
     assert len(frows) <= 40
+
+
+def test_extra_edge_columns_same_on_both_finishes(spark):
+    """An edge frame that carries more than (src, dst) — here a weight,
+    as cluster_edges emits — clusters identically on the driver finish
+    and on the star loop: the pre-pass must declare only the columns it
+    yields, or the star loop raises RESULT_COLUMN_NAMES_MISMATCH."""
+    rng = random.Random(5)
+    nodes = [f"x{i:03d}" for i in range(80)]
+    edges = [
+        (rng.choice(nodes), rng.choice(nodes), rng.random()) for _ in range(100)
+    ]
+    e = spark.createDataFrame(
+        edges, "src string, dst string, weight double"
+    ).repartition(3)
+    local = connected_components(e)
+    star = connected_components(e, local_threshold=0)
+    assert local.iterations == 0 and star.iterations >= 1
+    lrows = {(r["node"], r["root"]) for r in local.assignments.collect()}
+    srows = {(r["node"], r["root"]) for r in star.assignments.collect()}
+    dsu = DSU()
+    linked = [(a, b) for a, b, _w in edges if a != b]
+    for a, b in linked:
+        dsu.union(a, b)
+    comp: dict = {}
+    for x in {x for p in linked for x in p}:
+        comp.setdefault(dsu.find(x), set()).add(x)
+    want = {(x, min(c)) for c in comp.values() for x in c}
+    assert lrows == srows == want
+
+
+def test_driver_finish_fetches_at_most_node_count(spark, monkeypatch):
+    """The driver finish collects the partition-local forest, not the
+    edges: on a dense graph (complete graph on 40 nodes, 780 edges) in
+    one partition the fetched frame has at most |V| - 1 rows."""
+    from entity_resolution__spark.operators import cluster
+
+    fetched = []
+    real = cluster._local_dsu_components
+
+    def spy(edges, _edges_pdf=None):
+        fetched.append(len(_edges_pdf))
+        return real(edges, _edges_pdf=_edges_pdf)
+
+    monkeypatch.setattr(cluster, "_local_dsu_components", spy)
+    n = 40
+    edges = [(i, j) for i in range(n) for j in range(i + 1, n)]
+    e = spark.createDataFrame(edges, "src long, dst long").coalesce(1)
+    res = cluster.connected_components(e)
+    assert res.iterations == 0
+    assert fetched == [n - 1]
+    assert {(r["node"], r["root"]) for r in res.assignments.collect()} == {
+        (i, 0) for i in range(n)
+    }

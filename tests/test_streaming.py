@@ -87,10 +87,14 @@ def test_stream_signature_dedup_docs(spark, tmp_path):
 
 def test_conversation_progress_stateful(spark, tmp_path):
     """Custom stateful operator (applyInPandasWithState): one summary
-    row per conversation after a single availableNow batch — correct
+    row per conversation after the first batch with input — correct
     turn counts, role counts, first/last event times, done=false (the
-    timeout leg needs wall-clock idle time; its state-removal contract
-    is covered by the operator's hasTimedOut branch)."""
+    timeout leg needs wall-clock idle time; its eviction is covered by
+    the state-bound test below).
+
+    availableNow + ProcessingTimeTimeout keeps running no-data batches
+    while state is alive and need not terminate, so the test waits for
+    the first batch that read rows, then stops the query itself."""
     import datetime as dt
     import os as _os
 
@@ -124,7 +128,14 @@ def test_conversation_progress_stateful(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert _poll(
+            15,
+            lambda: any(p["numInputRows"] > 0 for p in q.recentProgress),
+        )
+    finally:
+        q.stop()
+    assert not q.isActive
     got = {
         r["conv_id"]: r
         for r in spark.sql("select * from conv_progress_test").collect()

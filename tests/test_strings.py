@@ -185,10 +185,10 @@ def test_kernel_batch_invariance():
 
 
 def test_parity_battery_generation_and_pure_kernels():
-    """The probe corpus itself must be exercisable WITHOUT rapidfuzz
-    (round-5 ADVICE widened it to ~300 seeded random pairs — this is the
-    CI guard that the generation code and the pure kernels over it don't
-    break, since the probe body only runs in accelerated deployments)."""
+    """The certification corpus itself must be exercisable without the
+    compiled tier (round-5 ADVICE widened it to ~300 seeded random pairs
+    — this is the guard that the generation code and the pure kernels
+    over it don't break where no compiler is present)."""
     b1 = K._parity_battery()
     b2 = K._parity_battery()
     assert b1 == b2  # deterministic (fixed seed)
@@ -207,45 +207,3 @@ def test_parity_battery_generation_and_pure_kernels():
     # curated set undersamples must be populated
     highs = sum(1 for a, b in b1[163:] if K.edit_ratio(a, b) > 0.9 and a)
     assert highs > 50
-
-
-def test_rapidfuzz_parity_if_available():
-    """Round-4 VERDICT #6: the optional C-accelerated kernel path. When
-    rapidfuzz is importable the import-time probe must have accepted it
-    (exact agreement on the battery), and the Series forms must match
-    the pure-python kernels bitwise on a broad random sample. Self-skips
-    in this container (no rapidfuzz) — the fallback IS the oracle path."""
-    import pytest
-
-    from entity_resolution__spark.functions import strings as K
-
-    if K._RF is None:
-        try:
-            import rapidfuzz  # noqa: F401
-        except ImportError:
-            pytest.skip("rapidfuzz not installed; pure-python path active")
-        pytest.fail("rapidfuzz installed but the parity probe rejected it")
-
-    import random
-
-    rng = random.Random(99)
-    alpha = "abcdefgh XYZ.,-éü"
-    pairs = [
-        (
-            "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 40))),
-            "".join(rng.choice(alpha) for _ in range(rng.randrange(0, 40))),
-        )
-        for _ in range(500)
-    ]
-    a = pd.Series([p[0] for p in pairs])
-    b = pd.Series([p[1] for p in pairs])
-    er_fast, lr_fast = K.indel_and_lcs_series(a, b)
-    jw_fast = K.jaro_winkler_series(a, b)
-    er_ref = pd.Series([K.edit_ratio(x, y) for x, y in pairs])
-    lr_ref = pd.Series([K.lcs_ratio(x, y) for x, y in pairs])
-    jw_ref = pd.Series([K.jaro_winkler(x, y) for x, y in pairs])
-    assert (er_fast.to_numpy() == er_ref.to_numpy()).all()
-    assert (lr_fast.to_numpy() == lr_ref.to_numpy()).all()
-    assert (jw_fast.to_numpy() == jw_ref.to_numpy()).all()
-    kern = K.edit_ratio_kernel()
-    assert all(kern(x, y) == K.edit_ratio(x, y) for x, y in pairs[:100])

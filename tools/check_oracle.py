@@ -4,6 +4,8 @@ over the same parquet tables; compare row count, sorted-column schema,
 and an order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Runs at local[$SPARK_GRAFT_CPUS], the session factory's default.
 """
 
 from __future__ import annotations
@@ -47,7 +49,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from entity_resolution__spark.session import get_spark
 
-    spark = get_spark("check-oracle", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("check-oracle")
 
     con = duckdb.connect()
     for t in TABLES:
