@@ -92,7 +92,7 @@ def capped_salted_self_join(
     # recompute) and drops the branch from the plan entirely: measured
     # at the ER bench shape (71.6k block rows, local[8], steady state)
     # the stage goes 1.1-1.5 s/2.3-3.8 cpu-s -> 0.78-0.96 s/1.4-1.7
-    # cpu-s (tools/probe_pairs_barriers.py; the no-checkpoint variant
+    # cpu-s (one-off A/B; the no-checkpoint variant
     # measured WORSE than either - 4.6-7.3 cpu-s - so the barrier
     # itself stays). With hot buckets present the probe costs one cheap
     # scan and the salted path runs as before.

@@ -15,6 +15,7 @@ Spark DAG with explicit stage boundaries.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,23 +73,12 @@ class ERConfig:
     use_global_idf: bool = False  # costs one extra pass; off for bench
     # clustering
     cc_max_iter: int = 50
-    # bench instrumentation: force+time each stage boundary (not part of
-    # the semantic fingerprint). cpu_probe: zero-arg callable returning
-    # cumulative CPU seconds (e.g. bench._proc_tree_cpu) — sampled at
-    # stage boundaries so the bench JSON carries cpu-vs-wall per stage
-    # (host throttling shows up as cpu/wall ≪ thread count; round-2
-    # VERDICT asked for this to make throttle claims auditable).
+    # Not semantic and no longer read: every stage boundary is timed
+    # into ERResult.stage_wall. Kept only because perfbench/workloads.py
+    # still constructs ERConfig(stage_timing=...).
     stage_timing: bool = False
-    cpu_probe: object = None
-    # gc_probe: zero-arg callable returning cumulative JVM GC seconds
-    # (bench reads GarbageCollectorMXBeans via py4j). Splits each
-    # stage's cpu_sec into mutator vs collector: at the 4.3M-turn
-    # input the un-attributed local[8] cpu inflation vs local[2] could
-    # be GC (scales with threads × live set) or host physics — this
-    # makes the bench JSON carry the answer per stage.
-    gc_probe: object = None
 
-    _NON_SEMANTIC = ("stage_timing", "cpu_probe", "gc_probe")
+    _NON_SEMANTIC = ("stage_timing",)
 
     def params(self) -> dict:
         return {
@@ -106,10 +96,7 @@ class ERResult:
     dropped: DataFrame
     clusters: DataFrame
     cc_iterations: int = 0
-    stage_rows: dict = field(default_factory=dict)
-    stage_wall: dict = field(default_factory=dict)  # cfg.stage_timing=True
-    stage_cpu: dict = field(default_factory=dict)  # + cfg.cpu_probe set
-    stage_gc: dict = field(default_factory=dict)  # + cfg.gc_probe set
+    stage_wall: dict = field(default_factory=dict)  # stage → wall seconds
     # store-less mode: transient persisted dimensions (countries/prune)
     # still referenced by the LAZY edges/clusters plans — call
     # release_transients() once the outputs are materialized, or they
@@ -188,8 +175,6 @@ def run_pipeline(
     cfg = cfg or ERConfig()
     p = cfg.params()
     stage_wall: dict[str, float] = {}
-    stage_cpu: dict[str, float] = {}
-    stage_gc: dict[str, float] = {}
 
     # Input identity folded into every stage fingerprint (else a rerun
     # with a different --input but the same warehouse would silently
@@ -209,11 +194,7 @@ def run_pipeline(
         input_fp = {"semantic_hash": sem, "files": files}
 
     def staged(name: str, compute, lineage: list[str] | None = None) -> DataFrame:
-        import time as _time
-
-        cpu0 = cfg.cpu_probe() if (cfg.stage_timing and cfg.cpu_probe) else None
-        gc0 = cfg.gc_probe() if (cfg.stage_timing and cfg.gc_probe) else None
-        t0 = _time.monotonic()
+        t0 = time.monotonic()
         if store is None:
             # no snapshot store: still materialize the stage boundary once
             # — conv/scored are referenced by several downstream branches
@@ -240,11 +221,7 @@ def run_pipeline(
                 },
             }
             out = store.stage(spark, name, params, compute, lineage)
-        stage_wall[name] = round(_time.monotonic() - t0, 3)
-        if cpu0 is not None:
-            stage_cpu[name] = round(cfg.cpu_probe() - cpu0, 3)
-        if gc0 is not None:
-            stage_gc[name] = round(cfg.gc_probe() - gc0, 3)
+        stage_wall[name] = round(time.monotonic() - t0, 3)
         return out
 
     # canonicalize emits norm_text + tokens via one fused Arrow UDF
@@ -409,7 +386,5 @@ def run_pipeline(
         clusters=clusters,
         cc_iterations=cc_iter_store.get("iterations", 0),
         stage_wall=stage_wall,
-        stage_cpu=stage_cpu,
-        stage_gc=stage_gc,
         transient_persists=list(_edge_persists),
     )

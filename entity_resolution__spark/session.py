@@ -14,13 +14,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Task threads for ``local[N]``: ``$SPARK_GRAFT_CPUS`` if set, else
+    the CPUs this process may run on (its affinity mask, which a cgroup
+    cpuset or ``taskset`` narrows below ``os.cpu_count()``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "entity_resolution__spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; keeps shuffles 1 task/core, AQE coalesces further.

@@ -2,16 +2,14 @@
 
 Production launch (north_rule):
   spark-submit --py-files er.zip main.py \
-      --input cat.db.transcripts --warehouse s3://…/er_warehouse \
-      --stage all
+      --input cat.db.transcripts --warehouse s3://…/er_warehouse
 
-Local smoke (this container):
-  python main.py --synthetic 200 --warehouse .data/warehouse \
-      --master local[32]
+Local smoke (master defaults to local[$SPARK_GRAFT_CPUS], else one
+task thread per CPU this process may use):
+  python main.py --synthetic 200 --warehouse .data/warehouse
 
-Stages resume from their last committed snapshot via StageStore; pass
---stage to run a prefix of the DAG (all | canonicalize | blocking |
-pairs | score | cluster).
+Every run materialises the whole DAG; stages resume from their last
+committed snapshot via StageStore.
 """
 
 from __future__ import annotations
@@ -31,8 +29,6 @@ def parse_args(argv=None):
     p.add_argument("--synthetic", type=int, default=0, help="generate N synthetic entities instead of --input")
     p.add_argument("--warehouse", default=".data/warehouse")
     p.add_argument("--master", default=None)
-    p.add_argument("--stage", default="all",
-                   choices=["all", "canonicalize", "blocking", "pairs", "score", "cluster"])
     p.add_argument("--keep-threshold", type=float, default=0.45)
     p.add_argument("--cluster-threshold", type=float, default=0.60)
     p.add_argument("--no-minhash", action="store_true")
@@ -72,24 +68,13 @@ def main(argv=None) -> int:
     store = StageStore(args.warehouse)
     t0 = time.monotonic()
     res = run_pipeline(spark, transcripts, cfg, store=store)
-
-    # --stage: force materialization up to the requested stage only
-    stage_df = {
-        "canonicalize": res.conversations,
-        "blocking": res.blocks,
-        "pairs": res.pairs,
-        "score": res.scored,
-        "cluster": res.clusters,
-        "all": res.clusters,
-    }[args.stage]
-    n = stage_df.count()
+    n = res.clusters.count()
     wall = time.monotonic() - t0
-    if args.output and args.stage in ("all", "cluster"):
+    if args.output:
         res.clusters.write.mode("overwrite").parquet(args.output)
     print(
         json.dumps(
             {
-                "stage": args.stage,
                 "rows": n,
                 "wall_sec": round(wall, 2),
                 "cc_iterations": res.cc_iterations,

@@ -70,7 +70,7 @@ def test_spark_submit_pyfiles_launch(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
     summary = json.loads(line)
-    assert summary["stage"] == "all" and summary["rows"] > 0
+    assert summary["rows"] > 0
     # verify the parquet sink WITHOUT spark (independent reader)
     import duckdb
 
