@@ -328,22 +328,27 @@ def compute_feature_struct(
     # recurs across many pairs (measured 9× for tool seqs at bench
     # scale): compute once per distinct combo and scatter back.
     out["role_seq_sim"] = _dedup_pair_kernel(
-        K.edit_ratio, roles_l.fillna(""), roles_r.fillna("")
+        K.edit_ratio_series, roles_l.fillna(""), roles_r.fillna("")
     )
     out["tool_seq_sim"] = _dedup_pair_kernel(
-        K.edit_ratio, tools_l.fillna(""), tools_r.fillna("")
+        K.edit_ratio_series, tools_l.fillna(""), tools_r.fillna("")
     )
     return pd.DataFrame(out)
 
 
-def _dedup_pair_kernel(fn, a: pd.Series, b: pd.Series) -> np.ndarray:
-    """fn(a[i], b[i]) evaluated once per DISTINCT (a, b) combination."""
+def _dedup_pair_kernel(series_fn, a: pd.Series, b: pd.Series) -> np.ndarray:
+    """series_fn over the DISTINCT (a, b) combinations, scattered back
+    to every pair. series_fn is a batch kernel (two Series → one), so
+    the C tier serves the distinct combinations in one call."""
     codes, combos = pd.factorize(
         pd.Series(zip(a.to_numpy(), b.to_numpy())), sort=False
     )
-    vals = np.fromiter(
-        (fn(x, y) for x, y in combos), dtype=np.float64, count=len(combos)
-    )
+    if not len(combos):
+        return np.empty(0)
+    left, right = zip(*combos)
+    vals = series_fn(
+        pd.Series(left, dtype=object), pd.Series(right, dtype=object)
+    ).to_numpy(dtype=np.float64)
     return vals[codes]
 
 

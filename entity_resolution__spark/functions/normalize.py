@@ -64,21 +64,6 @@ def tokenize(s: pd.Series) -> pd.Series:
     return tokenize_series(s)
 
 
-_NT_TYPE = T.StructType(
-    [
-        T.StructField("norm_text", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-    ]
-)
-
-
-@pandas_udf(_NT_TYPE)
-def norm_and_tokens(s: pd.Series) -> pd.DataFrame:
-    """Fused normalize+tokenize: one Arrow round trip, one NFKD pass."""
-    norm = normalize_series(s)
-    return pd.DataFrame({"norm_text": norm, "tokens": norm.str.findall(_TOKEN_RE)})
-
-
 def tokens_ascii(col: Column) -> Column:
     """Catalyst-only tokenizer, exact for ASCII inputs.
 

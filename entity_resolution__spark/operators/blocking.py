@@ -278,95 +278,97 @@ def _minhash_params(num_perm: int, seed: int = 7) -> tuple[np.ndarray, np.ndarra
     return a, b
 
 
-def make_minhash_udf(num_perm: int = 32, qgram: int = 4, seed: int = 7):
-    """Vectorized pandas UDF: text → array<long> minhash signature.
+def minhash_sig_series(
+    texts: pd.Series, num_perm: int = 32, qgram: int = 4, seed: int = 7
+) -> pd.Series:
+    """text → int64[num_perm] MinHash signature, one array per row.
 
-    Shingles are character q-grams of the normalized text; the whole
-    batch stays in numpy, no per-row Python in the hot loop beyond the
-    shingle split. Hash family: (a·h + b mod 2⁶⁴) mod p per permutation
-    — numpy uint64 arithmetic WRAPS the product before the Mersenne
-    reduction, so this is a deterministic mixing family, NOT a textbook
-    Carter-Wegman universal hash (round-3 review corrected an
-    overclaiming comment; exact pairwise independence would need
-    128-bit multiplies). Empirically the minhash/Jaccard estimator is
-    unbiased on the fixtures and the blocking recall gate
-    (pair completeness ≥0.99, tests) is what actually pins behavior.
+    Shingles are character q-grams of the text; the whole batch stays in
+    numpy, no per-row Python in the hot loop beyond the shingle split.
+    Hash family: (a·h + b mod 2⁶⁴) mod p per permutation — numpy uint64
+    arithmetic WRAPS the product before the Mersenne reduction, so this
+    is a deterministic mixing family, NOT a textbook Carter-Wegman
+    universal hash (round-3 review corrected an overclaiming comment;
+    exact pairwise independence would need 128-bit multiplies).
+    Empirically the minhash/Jaccard estimator is unbiased on the
+    fixtures and the blocking recall gate (pair completeness ≥0.99,
+    tests) is what actually pins behavior. The signatures are block
+    keys, so shingling, hashing and parameters must not change.
     """
-    from pyspark.sql import types as T
-
     a, b = _minhash_params(num_perm, seed)
+    # pd.util.hash_array: deterministic 64-bit hashing (fixed-key
+    # siphash), vectorized — immune to PYTHONHASHSEED randomization.
+    # Hashing is BATCHED across rows (one call per ~200k shingles): the
+    # per-call pandas dtype-dispatch overhead was ~half the kernel's CPU
+    # when called once per row; per-element hashes are independent, so
+    # the values are identical. No sort of the shingle set either — the
+    # signature is a per-permutation MIN, order-independent.
+    out: list = []
+    buf: list[list[str]] = []
+    buf_total = 0
+
+    def flush() -> None:
+        nonlocal buf, buf_total
+        if not buf:
+            return
+        lens = [len(r) for r in buf]
+        flat = np.empty(buf_total, dtype=object)
+        pos = 0
+        for r in buf:
+            flat[pos : pos + len(r)] = r
+            pos += len(r)
+        hv = pd.util.hash_array(flat)
+        # sig[p] = min_i (a[p]*h[i] + b[p] mod m): (P, total) broadcast,
+        # then one segmented min per row
+        prod = (hv[None, :] * a[:, None] + b[:, None]) % _MERSENNE
+        offs = np.zeros(len(lens), dtype=np.int64)
+        np.cumsum(lens[:-1], out=offs[1:])
+        mins = np.minimum.reduceat(prod, offs, axis=1)
+        for k in range(len(buf)):
+            out.append(mins[:, k].astype(np.int64))
+        buf = []
+        buf_total = 0
+
+    # incremental flush: only ONE chunk's shingle lists are ever live (a
+    # whole 10k-row Arrow batch of ~350-shingle docs held ~3.5M python
+    # strings per worker before hashing)
+    for t in texts.fillna(""):
+        if len(t) < qgram:
+            r = [t] if t else [""]
+        else:
+            r = list({t[i : i + qgram] for i in range(len(t) - qgram + 1)})
+        buf.append(r)
+        buf_total += len(r)
+        if buf_total >= 200_000:
+            flush()
+    flush()
+    return pd.Series(out, index=texts.index, dtype=object)
+
+
+def make_minhash_udf(num_perm: int = 32, qgram: int = 4, seed: int = 7):
+    """minhash_sig_series as a standalone Arrow UDF: text → array<long>."""
+    from pyspark.sql import types as T
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def minhash_sig(texts: pd.Series) -> pd.Series:
-        # pd.util.hash_array: deterministic 64-bit hashing (fixed-key
-        # siphash), vectorized — immune to PYTHONHASHSEED randomization.
-        # Hashing is BATCHED across rows (one call per ~200k shingles):
-        # the per-call pandas dtype-dispatch overhead was ~half the
-        # kernel's CPU when called once per row; per-element hashes are
-        # independent, so the values are identical. No sort of the
-        # shingle set either — the signature is a per-permutation MIN,
-        # order-independent.
-        out: list = []
-        buf: list[list[str]] = []
-        buf_total = 0
-
-        def flush() -> None:
-            nonlocal buf, buf_total
-            if not buf:
-                return
-            lens = [len(r) for r in buf]
-            flat = np.empty(buf_total, dtype=object)
-            pos = 0
-            for r in buf:
-                flat[pos : pos + len(r)] = r
-                pos += len(r)
-            hv = pd.util.hash_array(flat)
-            # sig[p] = min_i (a[p]*h[i] + b[p] mod m): (P, total)
-            # broadcast, then one segmented min per row
-            prod = (hv[None, :] * a[:, None] + b[:, None]) % _MERSENNE
-            offs = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=offs[1:])
-            mins = np.minimum.reduceat(prod, offs, axis=1)
-            for k in range(len(buf)):
-                out.append(mins[:, k].astype(np.int64))
-            buf = []
-            buf_total = 0
-
-        # incremental flush: only ONE chunk's shingle lists are ever
-        # live (a whole 10k-row Arrow batch of ~350-shingle docs held
-        # ~3.5M python strings per worker before hashing)
-        for t in texts.fillna(""):
-            if len(t) < qgram:
-                r = [t] if t else [""]
-            else:
-                r = list({t[i : i + qgram] for i in range(len(t) - qgram + 1)})
-            buf.append(r)
-            buf_total += len(r)
-            if buf_total >= 200_000:
-                flush()
-        flush()
-        return pd.Series(out)
+        return minhash_sig_series(texts, num_perm, qgram, seed)
 
     return minhash_sig
 
 
 def minhash_band_keys(
     conv: DataFrame,
-    text_col: str = "full_text",
     num_perm: int = 32,
     bands: int = 8,
-    seed: int = 7,
 ) -> DataFrame:
-    """LSH banding: signature split into `bands` rows-per-band groups;
-    block_key = band index + hash of the band slice. Pairs agreeing on
-    any band become candidates (classic MinHash-LSH S-curve).
+    """LSH banding of the `sig` column canonicalize emits: the signature
+    split into `bands` rows-per-band groups; block_key = band index +
+    hash of the band slice. Pairs agreeing on any band become candidates
+    (classic MinHash-LSH S-curve).
     """
     assert num_perm % bands == 0
     rows_per_band = num_perm // bands
-    sig = conv.select(
-        "conv_id", make_minhash_udf(num_perm, seed=seed)(F.col(text_col)).alias("sig")
-    )
-    keys = sig.select(
+    keys = conv.select(
         "conv_id",
         F.explode(
             F.array(

@@ -15,22 +15,65 @@ per partition AND a second pass to collapse rows; the struct-sort form
 sorts only within each conversation's collected list. Conversations are
 bounded (≤ hundreds of turns) so the per-group list is tiny; there is no
 per-key skew beyond that bound at 10^12 turns.
+
+Python crossing: the text columns every later stage reads come from ONE
+struct-returning Arrow UDF over full_text — norm_text, tokens, the
+MinHash signature blocking bands (`sig`) and the whitelisted countries
+the geo constraint joins (`countries`). Each conversation's text ships
+to a Python worker once per pass (CIDR 2022, PAPERS.md: every crossing
+pays serialisation plus interpreter entry).
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
-from entity_resolution__spark.functions.normalize import norm_and_tokens, token_set
+from entity_resolution__spark.functions.normalize import (
+    _TOKEN_RE,
+    normalize_series,
+    token_set,
+)
+from entity_resolution__spark.operators.blocking import minhash_sig_series
+from entity_resolution__spark.operators.constraints import countries_series
 
 
-def canonicalize(transcripts: DataFrame) -> DataFrame:
+def _conversation_text_udf(num_perm: int | None):
+    """Arrow UDF full_text → struct(norm_text, tokens[, sig], countries).
+
+    `sig` is the num_perm-row MinHash signature of full_text (omitted
+    when num_perm is None); norm_text is NFKD-folded once and tokens are
+    its token runs."""
+    fields = [
+        T.StructField("norm_text", T.StringType()),
+        T.StructField("tokens", T.ArrayType(T.StringType())),
+    ]
+    if num_perm is not None:
+        fields.append(T.StructField("sig", T.ArrayType(T.LongType())))
+    fields.append(T.StructField("countries", T.ArrayType(T.StringType())))
+
+    @pandas_udf(T.StructType(fields))
+    def conversation_text(full_text: pd.Series) -> pd.DataFrame:
+        norm = normalize_series(full_text)
+        out = {"norm_text": norm, "tokens": norm.str.findall(_TOKEN_RE)}
+        if num_perm is not None:
+            out["sig"] = minhash_sig_series(full_text, num_perm)
+        out["countries"] = countries_series(full_text)
+        return pd.DataFrame(out)
+
+    return conversation_text
+
+
+def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → CONVERSATIONS.
 
     sort_array on struct(turn_idx, ...) sorts lexicographically by the
     first field — turn_idx — giving the stable turn ordering; ties cannot
-    occur (turn_idx unique per conv_id).
+    occur (turn_idx unique per conv_id). `num_perm` sizes the MinHash
+    signature; None (blocking without MinHash) emits no `sig` column.
     """
     turns = F.array_sort(
         F.collect_list(
@@ -64,10 +107,14 @@ def canonicalize(transcripts: DataFrame) -> DataFrame:
             F.array_join(F.col("turns.text"), " ").alias("full_text"),
         )
     )
-    conv = (
-        conv.withColumn("_nt", norm_and_tokens(F.col("full_text")))
-        .withColumn("norm_text", F.col("_nt.norm_text"))
-        .withColumn("tokens", F.col("_nt.tokens"))
-        .drop("_nt")
+    sig = [F.col("_ct.sig").alias("sig")] if num_perm is not None else []
+    return conv.withColumn(
+        "_ct", _conversation_text_udf(num_perm)(F.col("full_text"))
+    ).select(
+        *conv.columns,
+        F.col("_ct.norm_text").alias("norm_text"),
+        F.col("_ct.tokens").alias("tokens"),
+        token_set(F.col("_ct.tokens")).alias("token_set"),
+        *sig,
+        F.col("_ct.countries").alias("countries"),
     )
-    return conv.withColumn("token_set", token_set(F.col("tokens")))

@@ -19,7 +19,10 @@ anti-joins:
 Country extraction runs ONCE PER CONVERSATION (the reference recomputes
 per pair via driver dict, apply_transitivity.py:99-105), then both pair
 sides join the per-entity array — an O(N) derivation + two hash joins
-instead of O(pairs) regex work.
+instead of O(pairs) regex work. The kernel (`countries_series`) runs
+inside canonicalize's Arrow UDF, so `conv_countries` only selects the
+`countries` column; `extract_countries` wraps the same kernel as a
+standalone UDF.
 """
 
 from __future__ import annotations
@@ -69,43 +72,58 @@ def _undot(text: str) -> str:
     return _DOTTED.sub(lambda m: m.group(0).replace(".", "").replace(" ", ""), text)
 
 
-# country word-boundary patterns mirror _compile_country_patterns
-# (geo_constraints.py:72-80): (?<!\w)NAME(?!\w), case-insensitive. We
-# return canonical-case names (the reference lowercases; cohort keys are
-# lowered at the seed-edge step to match its cohort labels).
-_COUNTRY_RES = [
-    (c, re.compile(r"(?<!\w)" + re.escape(c) + r"(?!\w)", re.IGNORECASE))
-    for c in COUNTRY_WHITELIST
-]
+# One case-insensitive scan for all 20 names. The per-name form of
+# _compile_country_patterns (geo_constraints.py:72-80) searches
+# (?<!\w)NAME(?!\w) once per country; the alternation finds the same
+# set because no whitelisted name occurs, word-bounded, inside another
+# one, so non-overlapping matching misses nothing. Each name is its own
+# capture group and the match's group index gives the canonical name, so
+# IGNORECASE folds (Kelvin sign, long s) map back exactly. We return
+# canonical-case names (the reference lowercases; cohort keys are lowered
+# at the seed-edge step to match its cohort labels).
+_COUNTRY_ANY = re.compile(
+    r"(?<!\w)(?:" + "|".join(f"({re.escape(c)})" for c in COUNTRY_WHITELIST) + r")(?!\w)",
+    re.IGNORECASE,
+)
 # compiled with IGNORECASE exactly as _build_country_subs does
 _ACRONYM_RES = [
     (re.compile(p, re.IGNORECASE), r)
     for p, r in ACRONYM_SUBS
     if r in COUNTRY_WHITELIST
 ]
+# Exact guard: a text that no alias pattern matches is left unchanged by
+# every substitution, so one combined search decides whether the 12
+# ordered substitutions run at all.
+_ACRONYM_ANY = re.compile(
+    "|".join(f"(?:{pat.pattern})" for pat, _ in _ACRONYM_RES), re.IGNORECASE
+)
+
+
+def _countries_one(t: str) -> list[str]:
+    t = _undot(t)
+    if _ACRONYM_ANY.search(t):
+        for pat, repl in _ACRONYM_RES:
+            t = pat.sub(repl, t)
+    return sorted({COUNTRY_WHITELIST[m.lastindex - 1] for m in _COUNTRY_ANY.finditer(t)})
+
+
+def countries_series(texts: pd.Series) -> pd.Series:
+    """Per-text sorted set of whitelisted countries (P6+P7+P8 fused):
+    undot dotted acronyms → acronym substitutions → one word-boundary
+    scan. canonicalize runs it inside its Arrow UDF."""
+    return texts.fillna("").map(_countries_one)
 
 
 @pandas_udf(T.ArrayType(T.StringType()))
 def extract_countries(texts: pd.Series) -> pd.Series:
-    """Per-text sorted set of whitelisted countries (P6+P7+P8 fused):
-    undot dotted acronyms → acronym substitutions → word-boundary search.
-    Vectorized per Arrow batch; regexes compiled once per worker.
-    """
-
-    def one(t: str) -> list[str]:
-        t = _undot(t or "")
-        for pat, repl in _ACRONYM_RES:
-            t = pat.sub(repl, t)
-        return sorted({c for c, cre in _COUNTRY_RES if cre.search(t)})
-
-    return texts.fillna("").map(one)
+    """countries_series as a standalone Arrow UDF."""
+    return countries_series(texts)
 
 
-def conv_countries(conv: DataFrame, text_col: str = "full_text") -> DataFrame:
-    """(conv_id, countries) — derived once per conversation."""
-    return conv.select(
-        "conv_id", extract_countries(F.col(text_col)).alias("countries")
-    )
+def conv_countries(conv: DataFrame) -> DataFrame:
+    """(conv_id, countries): the column canonicalize derived once per
+    conversation."""
+    return conv.select("conv_id", "countries")
 
 
 def geo_prune_pairs(pairs: DataFrame, countries: DataFrame) -> DataFrame:

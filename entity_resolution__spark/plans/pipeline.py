@@ -2,12 +2,16 @@
 
 Stage DAG (each optionally checkpointed via StageStore, north_rule):
 
-  transcripts ─ canonicalize ─ conversations
-  conversations ─ blocking keys (tokens ∪ MinHash-LSH bands) ─ blocks
+  transcripts ─ canonicalize (one Arrow UDF: norm_text, tokens, MinHash
+                sig, countries) ─ conversations
+  conversations ─ blocking keys (tokens ∪ bands of sig) ─ blocks
   blocks ─ candidate_pairs (salted within-block join) ─ pairs
   pairs + conversations ─ featurize ─ score ─ scored
-  scored ─ threshold + geo/token constraints ─ edges
-  edges ─ large-star/small-star CC ─ clusters (dense ids + sizes)
+  scored ─ threshold + geo (countries column) / token constraints ─ edges
+  edges ─ connected components ─ clusters (dense ids + sizes)
+
+Conversation text crosses into Python once per pass, in canonicalize;
+blocking and the geo constraint read the columns it emitted.
 
 Mirrors the reference entry points E1–E3 (SURVEY.md §3) as one lazy
 Spark DAG with explicit stage boundaries.
@@ -97,8 +101,8 @@ class ERResult:
     clusters: DataFrame
     cc_iterations: int = 0
     stage_wall: dict = field(default_factory=dict)  # stage → wall seconds
-    # store-less mode: transient persisted dimensions (countries/prune)
-    # still referenced by the LAZY edges/clusters plans — call
+    # store-less mode: the transient persisted prune set is still
+    # referenced by the LAZY edges/clusters plans — call
     # release_transients() once the outputs are materialized, or they
     # stay cached for the session's lifetime (CacheManager holds strong
     # refs to cached SQL plans; ContextCleaner will NOT reclaim them)
@@ -119,9 +123,7 @@ def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> D
     )
     if cfg.use_minhash:
         keys = keys.unionByName(
-            minhash_band_keys(
-                conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands
-            )
+            minhash_band_keys(conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands)
         )
     return keys
 
@@ -193,7 +195,12 @@ def run_pipeline(
             sem = None
         input_fp = {"semantic_hash": sem, "files": files}
 
-    def staged(name: str, compute, lineage: list[str] | None = None) -> DataFrame:
+    def staged(
+        name: str,
+        compute,
+        lineage: list[str] | None = None,
+        columns: list[str] | None = None,
+    ) -> DataFrame:
         t0 = time.monotonic()
         if store is None:
             # no snapshot store: still materialize the stage boundary once
@@ -213,6 +220,7 @@ def run_pipeline(
             # snapshot id) invalidates everything downstream
             params = {
                 **p,
+                **({"columns": columns} if columns is not None else {}),
                 "stage": name,
                 "input": input_fp,
                 "lineage_snapshots": {
@@ -224,8 +232,14 @@ def run_pipeline(
         stage_wall[name] = round(time.monotonic() - t0, 3)
         return out
 
-    # canonicalize emits norm_text + tokens via one fused Arrow UDF
-    conv = staged("conversations", lambda: canonicalize(transcripts))
+    # canonicalize emits norm_text, tokens, sig and countries via one
+    # fused Arrow UDF. Its column list is part of the stage fingerprint:
+    # the params alone do not change when the snapshot gains columns, and
+    # a warehouse written before `sig`/`countries` existed must recompute.
+    conv_plan = canonicalize(
+        transcripts, num_perm=cfg.minhash_perm if cfg.use_minhash else None
+    )
+    conv = staged("conversations", lambda: conv_plan, columns=conv_plan.columns)
 
     # one corpus count, threaded through every operator that needs N
     # (blocking DF caps, stopword cutoffs, idf smoothing); also warms the
@@ -291,15 +305,7 @@ def run_pipeline(
     def compute_edges() -> tuple[DataFrame, DataFrame]:
         prune_sets = []
         if cfg.use_geo_constraint:
-            # materialize the derived country table BEFORE the two-branch
-            # prune join: left lazy, the UDF subtree is planned inside the
-            # join's shuffle-map stages and the composite plan measured ~9×
-            # slower (26.8s vs 3.0s at 100k turns) than joining the small
-            # cached dimension
-            countries = conv_countries(conv).persist()
-            countries.count()
-            _edge_persists.append(countries)
-            prune_sets.append(geo_prune_pairs(scored, countries))
+            prune_sets.append(geo_prune_pairs(scored, conv_countries(conv)))
         if cfg.use_token_overlap_constraint:
             sw = stopwords_by_df(conv, cfg.stopword_df_cutoff, n_docs=n_docs)
             tl = conv.select(
@@ -324,10 +330,10 @@ def run_pipeline(
         )
 
     # compute (kept, dropped) ONCE and serve both stages from the single
-    # pair — the two outputs share the country-extraction UDF and prune
-    # joins. The computation is LAZY behind the stage gate (ADVICE round
-    # 2): a warm resume that serves both edge stages from committed
-    # snapshots never runs the country-extraction pass at all.
+    # pair — the two outputs share the persisted prune set. The
+    # computation is LAZY behind the stage gate (ADVICE round 2): a warm
+    # resume that serves both edge stages from committed snapshots never
+    # plans the prune joins at all.
     _edge_cache: dict[str, tuple[DataFrame, DataFrame]] = {}
 
     def _edges_pair() -> tuple[DataFrame, DataFrame]:
@@ -339,12 +345,12 @@ def run_pipeline(
         kept = staged("edges", lambda: _edges_pair()[0], ["scores"])
         dropped = staged("edges_dropped", lambda: _edges_pair()[1], ["scores"])
         # both outputs are committed snapshots now — the transient
-        # country/prune caches have served their purpose
+        # prune cache has served its purpose
         for df in _edge_persists:
             df.unpersist()
         _edge_persists = []
     else:
-        # store-less mode returns LAZY kept/dropped: the caches must
+        # store-less mode returns LAZY kept/dropped: the prune cache must
         # outlive this function (they feed both downstream branches).
         # They are handed to the caller via ERResult.transient_persists
         # — long-lived sessions running many store-less pipelines must

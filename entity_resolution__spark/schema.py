@@ -23,6 +23,10 @@ TRANSCRIPTS = T.StructType(
 )
 
 # Canonicalized entity view: one row per conversation, turns ordered.
+# norm_text, tokens, sig and countries come from canonicalize's one Arrow
+# UDF over full_text: sig is the MinHash signature blocking bands (absent
+# when blocking runs without MinHash), countries the sorted whitelisted
+# countries the geo constraint compares.
 CONVERSATIONS = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -34,6 +38,8 @@ CONVERSATIONS = T.StructType(
         T.StructField("norm_text", T.StringType(), False),
         T.StructField("tokens", T.ArrayType(T.StringType()), False),
         T.StructField("token_set", T.ArrayType(T.StringType()), False),
+        T.StructField("sig", T.ArrayType(T.LongType()), False),
+        T.StructField("countries", T.ArrayType(T.StringType()), False),
     ]
 )
 

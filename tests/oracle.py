@@ -13,12 +13,19 @@ identical kernels on both sides.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from entity_resolution__spark.functions.features import compute_feature_struct
 from entity_resolution__spark.functions.normalize import (
     normalize_series,
     tokenize_series,
+)
+from entity_resolution__spark.operators.constraints import (
+    ACRONYM_SUBS,
+    COUNTRY_WHITELIST,
+    _undot,
 )
 from entity_resolution__spark.operators.score import SCORE_WEIGHTS
 
@@ -49,6 +56,28 @@ class DSU:
         self.parent[rb] = ra
         if self.rank[ra] == self.rank[rb]:
             self.rank[ra] += 1
+
+
+# The reference's country extraction in its direct form
+# (geo_constraints.py:14-27, 72-80): one (?<!\w)NAME(?!\w) search per
+# whitelisted country, after all 12 ordered alias substitutions. The
+# engine's single-scan kernel (constraints.countries_series) must agree.
+_COUNTRY_RES = [
+    (c, re.compile(r"(?<!\w)" + re.escape(c) + r"(?!\w)", re.IGNORECASE))
+    for c in COUNTRY_WHITELIST
+]
+_ACRONYM_RES = [
+    (re.compile(p, re.IGNORECASE), r)
+    for p, r in ACRONYM_SUBS
+    if r in COUNTRY_WHITELIST
+]
+
+
+def countries_ref(text: str | None) -> list[str]:
+    t = _undot(text or "")
+    for pat, repl in _ACRONYM_RES:
+        t = pat.sub(repl, t)
+    return sorted({c for c, cre in _COUNTRY_RES if cre.search(t)})
 
 
 def canonicalize_pd(transcripts: pd.DataFrame) -> pd.DataFrame:

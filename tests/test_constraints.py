@@ -4,8 +4,11 @@ conservative semantics) + dotted-acronym handling + threshold/anti-join."""
 from __future__ import annotations
 
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from entity_resolution__spark.operators.constraints import (
+    COUNTRY_WHITELIST,
     apply_constraints,
     extract_countries,
     geo_prune_pairs,
@@ -29,7 +32,7 @@ def test_extract_countries_batch():
         t = _undot(t or "")
         for pat, repl in _ACRONYM_RES:
             t = pat.sub(repl, t)
-        from entity_resolution__spark.operators.constraints import _COUNTRY_RES
+        from tests.oracle import _COUNTRY_RES
 
         return sorted({c for c, cre in _COUNTRY_RES if cre.search(t)})
 
@@ -44,11 +47,8 @@ def test_extract_countries_batch():
 def test_extract_countries_reference_aliases():
     """All 12 reference alias substitutions (geo_constraints.py:14-27),
     compiled IGNORECASE, applied in order after undotting."""
-    from entity_resolution__spark.operators.constraints import (
-        _ACRONYM_RES,
-        _COUNTRY_RES,
-        _undot,
-    )
+    from entity_resolution__spark.operators.constraints import _ACRONYM_RES, _undot
+    from tests.oracle import _COUNTRY_RES
 
     def one(t):
         t = _undot(t or "")
@@ -186,3 +186,45 @@ def test_extract_countries_spark(spark):
     )
     row = df.select(extract_countries(F.col("text")).alias("c")).collect()[0]
     assert row["c"] == ["Japan", "United States"]
+
+
+# Fragments the Hypothesis parity test assembles texts from: every
+# whitelisted name, the reference aliases in dotted and spaced forms,
+# word-edge traps and non-ASCII word characters (including the letters
+# IGNORECASE folds onto ASCII: Kelvin sign, long s, dotted/dotless i).
+_COUNTRY_FRAGMENTS = (
+    COUNTRY_WHITELIST
+    + [
+        "USA", "U.S.A.", "U.S.", "US", "U.K.", "UK", "ROC", "P.R.China",
+        "P. R. China", "PR China", "People's Republic of China", "UAE",
+        "U.A.E.", "CH", "GR", "S'pore", "Spore", "Singapor", "HongKong",
+        "Hong   Kong", "Hong\nKong", "E.U.", "Chinatown", "US-based",
+        "USAF", "Indiana", "Japanese", "xChina", "China2", "_Japan",
+        "Brazil_", "Canadaé", "éCanada", "Françe", "Kong",
+        "Hong Kong", "ſwitzerland", "İndia", "ındia",
+        "中国", "日本Japan", "the", "office", "a.b.c.", "A.B.C.",
+    ]
+)
+
+
+_CASE = st.sampled_from([str, str.lower, str.upper, str.title, str.swapcase])
+_FRAG = st.builds(lambda f, c: c(f), st.sampled_from(_COUNTRY_FRAGMENTS), _CASE)
+_SEP = st.sampled_from([" ", "", "-", ".", ", ", "_", "\n", " . ", "é", "'"])
+_PIECE = st.one_of(_FRAG, st.text(alphabet="abcUSKR.'é_ üK", max_size=6))
+_TEXTS = st.lists(st.tuples(_PIECE, _SEP), max_size=8).map(
+    lambda xs: "".join(p + s for p, s in xs)
+)
+
+
+@settings(max_examples=400, deadline=None, derandomize=True)
+@given(st.lists(_TEXTS, min_size=1, max_size=20))
+def test_countries_series_matches_reference_form(batch):
+    """The single-scan kernel (one alternation, guarded substitutions)
+    against the reference's direct form in tests/oracle.py: 20 per-name
+    searches after all 12 ordered substitutions."""
+    from entity_resolution__spark.operators.constraints import countries_series
+    from tests.oracle import countries_ref
+
+    got = countries_series(pd.Series(batch))
+    assert list(got) == [countries_ref(t) for t in batch]
+    assert list(countries_series(pd.Series([None, ""]))) == [[], []]

@@ -201,3 +201,50 @@ def test_token_overlap_constraint_wiring(spark, tiny_transcripts, tiny_transcrip
     labeled = make_labeled_pairs(tiny_transcripts, seed=42)
     f1 = pairwise_f1(labeled, clusters, gold)
     assert f1 >= 0.99, f"pairwise F1 with token-overlap constraint {f1:.4f}"
+
+
+def test_single_conversation_gives_one_cluster(spark):
+    one = spark.createDataFrame(
+        [("c0", 0, "user", "hello from Japan", None, None),
+         ("c0", 1, "assistant", "hi there", "search", None)],
+        schema=TRANSCRIPTS,
+    )
+    res = run_pipeline(spark, one, ERConfig())
+    rows = res.clusters.collect()
+    res.release_transients()
+    assert [(r["conv_id"], r["cluster_size"]) for r in rows] == [("c0", 1)]
+
+
+def test_conversations_snapshot_without_new_columns_is_recomputed(
+    spark, tiny_transcripts_sdf, tmp_path_factory
+):
+    """A conversations snapshot committed before canonicalize emitted
+    `sig` and `countries` has the same ERConfig params; its fingerprint
+    (the pre-column-list form) must not resume it, or blocking would
+    read a missing `sig` column."""
+    wh = str(tmp_path_factory.mktemp("warehouse_old_conv"))
+    cfg = ERConfig()
+    store = StageStore(wh)
+    old_params = {
+        **cfg.params(),
+        "stage": "conversations",
+        "input": {
+            "semantic_hash": tiny_transcripts_sdf.semanticHash(),
+            "files": sorted(tiny_transcripts_sdf.inputFiles()),
+        },
+        "lineage_snapshots": {},
+    }
+    old_cols = ["conv_id", "n_turns", "turn_texts", "roles", "tools",
+                "full_text", "norm_text", "tokens", "token_set"]
+    from entity_resolution__spark.operators.canonicalize import canonicalize
+
+    store.stage(
+        spark, "conversations", old_params,
+        lambda: canonicalize(tiny_transcripts_sdf).select(*old_cols),
+    )
+    old_snap = store.manifest("conversations")["snapshot_id"]
+
+    res = run_pipeline(spark, tiny_transcripts_sdf, cfg, store=StageStore(wh))
+    assert store.manifest("conversations")["snapshot_id"] != old_snap
+    assert {"sig", "countries"} <= set(res.conversations.columns)
+    assert res.clusters.count() == tiny_transcripts_sdf.select("conv_id").distinct().count()

@@ -51,3 +51,26 @@ def test_no_cartesian_in_gate_query(spark, name):
             assert "Broadcast" in line, (
                 f"{name} plans a non-broadcast nested loop join:\n{plan}"
             )
+
+
+def test_one_python_crossing_per_conversation(spark):
+    """canonicalize ships the text to Python once (one ArrowEvalPython
+    node); blocking and the geo constraint read its columns and add no
+    Python node of their own."""
+    from entity_resolution__spark.data.synth import make_transcripts
+    from entity_resolution__spark.operators.canonicalize import canonicalize
+    from entity_resolution__spark.operators.constraints import conv_countries
+    from entity_resolution__spark.plans.pipeline import ERConfig, build_blocks
+    from entity_resolution__spark.schema import TRANSCRIPTS
+
+    # an input no other test caches: a cached canonicalize plan would be
+    # served as an InMemoryRelation whose string repeats the UDF node
+    transcripts = spark.createDataFrame(
+        make_transcripts(seed=5, n_entities=6), schema=TRANSCRIPTS
+    )
+    conv = canonicalize(transcripts)
+    assert _plan_of(conv).count("ArrowEvalPython") == 1, _plan_of(conv)
+    conv = conv.localCheckpoint(eager=True)
+    for df in (build_blocks(conv, ERConfig(), n_docs=conv.count()), conv_countries(conv)):
+        plan = _plan_of(df)
+        assert "ArrowEvalPython" not in plan, plan

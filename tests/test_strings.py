@@ -207,3 +207,34 @@ def test_parity_battery_generation_and_pure_kernels():
     # curated set undersamples must be populated
     highs = sum(1 for a, b in b1[163:] if K.edit_ratio(a, b) > 0.9 and a)
     assert highs > 50
+
+
+def test_role_tool_seq_sim_matches_edit_ratio():
+    """compute_feature_struct scores the distinct role/tool sequence
+    combinations with the batch edit_ratio_series (C tier when loaded);
+    every pair must equal the pure edit_ratio, empty sequences included."""
+    import random
+
+    import pandas as pd
+
+    from entity_resolution__spark.functions.features import (
+        _dedup_pair_kernel,
+        compute_feature_struct,
+    )
+
+    rng = random.Random(11)
+    vocab = ["user", "assistant", "tool", "system", "", "ü"]
+
+    def seq() -> str:
+        return "\x1f".join(rng.choice(vocab) for _ in range(rng.randrange(0, 7)))
+
+    a = pd.Series([seq() for _ in range(400)] + ["", "", "user"])
+    b = pd.Series([seq() for _ in range(400)] + ["", "user", ""])
+    want = [K.edit_ratio(x, y) for x, y in zip(a, b)]
+    assert list(_dedup_pair_kernel(K.edit_ratio_series, a, b)) == want
+    assert len(_dedup_pair_kernel(K.edit_ratio_series, a[:0], b[:0])) == 0
+
+    text = pd.Series(["alpha beta"] * len(a))
+    feats = compute_feature_struct(text, text, a, b, b, a)
+    assert list(feats["role_seq_sim"]) == want
+    assert list(feats["tool_seq_sim"]) == [K.edit_ratio(y, x) for x, y in zip(a, b)]
