@@ -82,7 +82,9 @@ def _undot(text: str) -> str:
 # canonical-case names (the reference lowercases; cohort keys are lowered
 # at the seed-edge step to match its cohort labels).
 _COUNTRY_ANY = re.compile(
-    r"(?<!\w)(?:" + "|".join(f"({re.escape(c)})" for c in COUNTRY_WHITELIST) + r")(?!\w)",
+    r"(?<!\w)(?:"
+    + "|".join(f"({re.escape(c)})" for c in COUNTRY_WHITELIST)
+    + r")(?!\w)",
     re.IGNORECASE,
 )
 # compiled with IGNORECASE exactly as _build_country_subs does
@@ -104,7 +106,9 @@ def _countries_one(t: str) -> list[str]:
     if _ACRONYM_ANY.search(t):
         for pat, repl in _ACRONYM_RES:
             t = pat.sub(repl, t)
-    return sorted({COUNTRY_WHITELIST[m.lastindex - 1] for m in _COUNTRY_ANY.finditer(t)})
+    return sorted(
+        {COUNTRY_WHITELIST[m.lastindex - 1] for m in _COUNTRY_ANY.finditer(t)}
+    )
 
 
 def countries_series(texts: pd.Series) -> pd.Series:

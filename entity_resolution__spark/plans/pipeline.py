@@ -8,7 +8,7 @@ Stage DAG (each optionally checkpointed via StageStore, north_rule):
   blocks ─ candidate_pairs (salted within-block join) ─ pairs
   pairs + conversations ─ featurize ─ score ─ scored
   scored ─ threshold + geo (countries column) / token constraints ─ edges
-  edges ─ connected components ─ clusters (dense ids + sizes)
+  edges ─ large-star/small-star CC ─ clusters (dense ids + sizes)
 
 Conversation text crosses into Python once per pass, in canonicalize;
 blocking and the geo constraint read the columns it emitted.
@@ -123,7 +123,9 @@ def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> D
     )
     if cfg.use_minhash:
         keys = keys.unionByName(
-            minhash_band_keys(conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands)
+            minhash_band_keys(
+                conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands
+            )
         )
     return keys
 
