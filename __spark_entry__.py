@@ -453,10 +453,10 @@ def q_events_hourly(spark, sf):
 
 
 def q_event_sessions(spark, sf):
-    """Gap-based sessionization (batch analog of the streaming session
-    window in streaming/ingest.py): a new session starts when a user is
-    idle > 30 min; emits per-session bounds and aggregates. Pure window
-    functions — lag + conditional running sum."""
+    """Gap-based sessionization (the batch form of a streaming session
+    window): a new session starts when a user is idle > 30 min; emits
+    per-session bounds and aggregates. Pure window functions — lag +
+    conditional running sum."""
     from pyspark.sql import Window
 
     e = _t(spark, sf, "events")

@@ -13,7 +13,6 @@ Layout:
   operators/   relational-level operators: canonicalize, blocking, pair
                generation, clustering, dedup, ANN similarity, text stats
   plans/       end-to-end pipeline orchestration + stage checkpointing
-  streaming/   Structured-Streaming ingest plumbing
 """
 
 __version__ = "0.1.0"

@@ -13,11 +13,10 @@ dmetaphone_match (/root/reference/src/features/feautre_extraction.py:
 
 Design deviation (documented, SURVEY.md §7 hard parts): the reference
 fits TF-IDF on each candidate-pair batch (feautre_extraction.py:89-98),
-making feature values depend on batch composition. We fit IDF GLOBALLY
-once per run (a small token→idf table broadcast into the UDF), so
-features are partition-invariant and deterministic under any shuffle.
-Char 3-5-gram cosine uses hashed sublinear TF without IDF (vocabulary-
-free at scale).
+making feature values depend on batch composition. Here no IDF is fit:
+tfidf_word_cosine is the cosine of sublinear TF (1+ln tf) token vectors,
+so features are partition-invariant and deterministic under any shuffle.
+Char 3-5-gram cosine uses hashed counts (vocabulary-free at scale).
 
 Vectorized execution (round-3 rewrite of the round-2 per-row loop;
 round 4 made the remaining per-pair work C-resident): the three cosine
@@ -51,8 +50,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -94,36 +91,8 @@ _EMPTY_F64 = np.empty(0, dtype=np.float64)
 _EMPTY_TOK = np.empty(0, dtype=object)
 
 
-def _token_profile(s: str, idf: dict[str, float]):
-    """One string → (sorted unique tokens, count weights, tfidf weights,
-    |count|, |tfidf|). Sublinear TF (1+ln tf) × global idf (unseen
-    token idf=1), matching the round-2 Counter kernel exactly.
-
-    Kept as the reference per-string form (tests); the batch kernel
-    applies idf through a per-batch vocabulary gather instead
-    (_apply_idf_weights) — same values, no per-key dict lookups."""
-    toks = _TOKEN_RE.findall(s)
-    if not toks:
-        return (_EMPTY_TOK, _EMPTY_F64, _EMPTY_F64, 0.0, 0.0)
-    keys, cnt = np.unique(np.asarray(toks, dtype=object), return_counts=True)
-    w_tc = cnt.astype(np.float64)
-    w_tf = 1.0 + np.log(w_tc)
-    if idf:
-        w_tf = w_tf * np.fromiter(
-            (idf.get(t, 1.0) for t in keys), dtype=np.float64, count=len(keys)
-        )
-    return (
-        keys,
-        w_tc,
-        w_tf,
-        float(np.sqrt((w_tc * w_tc).sum())),
-        float(np.sqrt((w_tf * w_tf).sum())),
-    )
-
-
 def _count_profile(s: str):
-    """One string → (sorted unique tokens, count weights, |count|) —
-    the idf-free part of _token_profile."""
+    """One string → (sorted unique tokens, count weights, |count|)."""
     toks = _TOKEN_RE.findall(s)
     if not toks:
         return (_EMPTY_TOK, _EMPTY_F64, 0.0)
@@ -163,15 +132,6 @@ def _ngram_profile(s: str):
     return (keys, wt, float(np.sqrt((wt * wt).sum())))
 
 
-def _sparse_dot(ka, wa, kb, wb) -> float:
-    """Dot product of two sorted-unique sparse vectors (reference form —
-    kept for tests; the batch path uses _searchsorted_dot)."""
-    _, ia, ib = np.intersect1d(ka, kb, assume_unique=True, return_indices=True)
-    if len(ia) == 0:
-        return 0.0
-    return float((wa[ia] * wb[ib]).sum())
-
-
 def _flatten_profiles(profiles: list, key_ix: int, weight_ixs: tuple[int, ...]):
     """list of per-unique-string profiles → (flat_keys, [flat_weights…],
     offsets) — the concatenated form the batch code-mapping consumes."""
@@ -207,17 +167,15 @@ def _flatten_profiles(profiles: list, key_ix: int, weight_ixs: tuple[int, ...]):
 def _coded_token_keys(tok_prof: list):
     """Per-profile token-key arrays remapped to int64 codes whose order
     equals the token string order (sorted-unique in, sorted-unique out).
-    Also returns the batch vocabulary in code order, so per-batch
-    weights (idf) become one array gather instead of per-key dict gets.
     """
     flat_tok, _, offs = _flatten_profiles(tok_prof, 0, ())
     if not len(flat_tok):
-        return [np.empty(0, dtype=np.int64) for _ in tok_prof], []
+        return [np.empty(0, dtype=np.int64) for _ in tok_prof]
     c0, vocab = pd.factorize(flat_tok, sort=False)
     order = np.argsort(vocab, kind="stable")
     rank = np.empty(len(vocab), dtype=np.int64)
     rank[order] = np.arange(len(vocab))
-    return np.split(rank[c0], offs[1:-1]), np.asarray(vocab, dtype=object)[order]
+    return np.split(rank[c0], offs[1:-1])
 
 
 def _searchsorted_match(ka: np.ndarray, kb: np.ndarray):
@@ -239,7 +197,6 @@ def compute_feature_struct(
     roles_r: pd.Series,
     tools_l: pd.Series,
     tools_r: pd.Series,
-    idf: dict[str, float] | None = None,
 ) -> pd.DataFrame:
     """Batch kernel shared by the Spark UDF and the test oracle.
 
@@ -248,7 +205,6 @@ def compute_feature_struct(
     Zero-norm convention follows the reference (feautre_extraction.py:
     63-75): cosine denominator 0 → 1.0.
     """
-    idf = idf or {}
     full_l = norm_l.fillna("")
     full_r = norm_r.fillna("")
     tl = full_l.str.slice(0, MAX_KERNEL_CHARS)
@@ -274,24 +230,13 @@ def compute_feature_struct(
     # batch-level factorize; no object comparisons per pair) + one
     # searchsorted pass per intersection (see the rejected-design note
     # above for why there is no global sort here)
-    tok_keys, vocab_sorted = _coded_token_keys(tok_prof)
-    # tfidf weights via one vocabulary gather (same values and float
-    # order as _token_profile's per-key idf.get form)
-    idf_arr = None
-    if idf and len(vocab_sorted):
-        idf_arr = np.fromiter(
-            (idf.get(t, 1.0) for t in vocab_sorted),
-            dtype=np.float64,
-            count=len(vocab_sorted),
-        )
+    tok_keys = _coded_token_keys(tok_prof)
     wf_prof = []
-    for p, (_, wc, _norm) in enumerate(tok_prof):
+    for _, wc, _norm in tok_prof:
         if not len(wc):
             wf_prof.append((_EMPTY_F64, 0.0))
             continue
         wf = 1.0 + np.log(wc)
-        if idf_arr is not None:
-            wf = wf * idf_arr[tok_keys[p]]
         wf_prof.append((wf, float(np.sqrt((wf * wf).sum()))))
     tc = np.empty(n)
     twc = np.empty(n)
@@ -352,9 +297,7 @@ def _dedup_pair_kernel(series_fn, a: pd.Series, b: pd.Series) -> np.ndarray:
     return vals[codes]
 
 
-def make_feature_udf(idf_map: dict[str, float] | None = None):
-    idf = dict(idf_map or {})
-
+def make_feature_udf():
     @pandas_udf(_UDF_RETURN)
     def feature_struct(
         norm_l: pd.Series,
@@ -364,37 +307,6 @@ def make_feature_udf(idf_map: dict[str, float] | None = None):
         tools_l: pd.Series,
         tools_r: pd.Series,
     ) -> pd.DataFrame:
-        return compute_feature_struct(
-            norm_l, norm_r, roles_l, roles_r, tools_l, tools_r, idf
-        )
+        return compute_feature_struct(norm_l, norm_r, roles_l, roles_r, tools_l, tools_r)
 
     return feature_struct
-
-
-def global_idf(
-    conv: DataFrame, max_vocab: int = 1 << 20, n_docs: int | None = None
-) -> dict[str, float]:
-    """token → smoothed idf over all conversations, capped to the top
-    `max_vocab` terms by document frequency (rare tail defaults to idf=1
-    inside the UDF — at 10^12-turn scale the broadcast stays bounded).
-    Smoothing matches sklearn's TfidfVectorizer: ln((1+N)/(1+df)) + 1.
-    """
-    if n_docs is None:
-        n_docs = conv.count()
-    rows = (
-        conv.select(F.explode("token_set").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .orderBy(F.col("df").desc())
-        .limit(max_vocab)
-        .collect()
-    )
-    return {
-        r["token"]: float(np.log((1.0 + n_docs) / (1.0 + r["df"])) + 1.0) for r in rows
-    }
-
-
-def token_jaccard_col(tokens_l: Column, tokens_r: Column) -> Column:
-    from entity_resolution__spark.functions.normalize import jaccard
-
-    return jaccard(tokens_l, tokens_r)

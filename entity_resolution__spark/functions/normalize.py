@@ -3,10 +3,9 @@
 Reproduces the reference's normalization semantics
 (/root/reference/src/common_methods.py:7-18): lowercase → NFKD
 accent-strip → extract ``[a-z0-9]+`` token runs. The accent strip needs
-Python's unicodedata, so the exact path is a vectorized pandas UDF
-(Arrow-batched, `Series.str` ops — no per-row Python loops); an
-ASCII-only Catalyst expression is provided for oracle-comparable queries
-where inputs are known-ASCII (e.g. the testdata `documents` table).
+Python's unicodedata, so the exact path is vectorized pandas Series
+kernels (`Series.str` ops — no per-row Python loops) that canonicalize's
+Arrow UDF calls; token sets and Jaccard stay in Catalyst.
 """
 
 from __future__ import annotations
@@ -16,8 +15,6 @@ import unicodedata
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _TOKEN_RE = r"[a-z0-9]+"
 
@@ -50,29 +47,6 @@ def normalize_series(s: pd.Series) -> pd.Series:
 def tokenize_series(s: pd.Series) -> pd.Series:
     """Token lists exactly as the reference's tokenize()."""
     return normalize_series(s).str.findall(_TOKEN_RE)
-
-
-# DataType objects (not DDL strings): lets these UDFs be declared at
-# import time, before any SparkSession exists.
-@pandas_udf(T.StringType())
-def normalize_text(s: pd.Series) -> pd.Series:
-    return normalize_series(s)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def tokenize(s: pd.Series) -> pd.Series:
-    return tokenize_series(s)
-
-
-def tokens_ascii(col: Column) -> Column:
-    """Catalyst-only tokenizer, exact for ASCII inputs.
-
-    Matches tokenize() whenever the input has no characters that NFKD
-    would fold — true for the synthetic `documents` testdata. Stays in
-    whole-stage codegen and is DuckDB-expressible
-    (regexp_extract_all(lower(text), '[a-z0-9]+')).
-    """
-    return F.regexp_extract_all(F.lower(col), F.lit(_TOKEN_RE), 0)
 
 
 def token_set(col: Column) -> Column:

@@ -374,10 +374,6 @@ def edit_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
     return pair_series(edit_ratio, a, b)
 
 
-def lcs_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pair_series(lcs_ratio, a, b)
-
-
 def indel_and_lcs_series(
     a: pd.Series, b: pd.Series
 ) -> tuple[pd.Series, pd.Series]:

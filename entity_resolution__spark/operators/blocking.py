@@ -4,7 +4,7 @@ The reference blocks by brute-force TF-IDF cosine kNN over all N entities
 (/root/reference/scripts/run_blocking.py:28-37) — O(N²), impossible at
 10^12 turns. We replace it (per north_star) with key-based blocking:
 
-  * token keys   — rarest / leading normalized tokens per conversation
+  * token keys   — rarest normalized tokens per conversation
   * q-gram MinHash-LSH bands — near-duplicate-robust keys computed in a
     vectorized pandas UDF (numpy, Arrow-batched)
 
@@ -26,21 +26,6 @@ from pyspark.sql.functions import pandas_udf
 # ---------------------------------------------------------------------------
 # token blocking keys
 # ---------------------------------------------------------------------------
-
-
-def first_token_keys(conv: DataFrame) -> DataFrame:
-    """block_key = first normalized token (simple, recall-light baseline)."""
-    return conv.select(
-        F.col("conv_id"), F.try_element_at("tokens", F.lit(1)).alias("block_key")
-    ).filter(F.col("block_key").isNotNull())
-
-
-def prefix_token_keys(conv: DataFrame, n_tokens: int = 2) -> DataFrame:
-    """block_key = join of the first n normalized tokens."""
-    return conv.select(
-        "conv_id",
-        F.array_join(F.slice("tokens", 1, n_tokens), "_").alias("block_key"),
-    ).filter(F.length("block_key") > 0)
 
 
 def rare_token_keys(
@@ -84,184 +69,14 @@ def rare_token_keys(
 
 def token_doc_freq(conv: DataFrame) -> DataFrame:
     """(token, df) over the corpus — the one DF-count subplan shared by
-    rare_token_keys / stopwords_by_idf / constraints.stopwords_by_df
-    (round-3 review: it was hand-rolled three times; semantics fixes now
-    land in one place). Map-side combined; shuffle carries one row per
+    rare_token_keys and constraints.stopwords_by_df (one place for its
+    semantics). Map-side combined; shuffle carries one row per
     distinct (token, partial count)."""
     return (
         conv.select(F.explode("token_set").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-
-
-def stopwords_by_idf(
-    conv: DataFrame,
-    idf_pct: float = 0.20,
-    df_cut: float = 0.20,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """TF-IDF-based auto-stopwords (reference B8,
-    visualize_k_value_for_blocking.py:61-75): tokens whose idf is in the
-    lowest `idf_pct` quantile OR whose document frequency STRICTLY
-    exceeds `df_cut` of docs (strict >, matching the reference's
-    df_frac > HIGH_DF_PERCENT — round-3 review caught a >= here).
-    Distributed: ONE DF aggregate (persisted across the quantile action
-    and the filter; round 3 — it used to run twice) + approxQuantile.
-    Empty corpus → empty stopword set."""
-    if n_docs is None:
-        n_docs = conv.count()
-    dfreq = token_doc_freq(conv).withColumn(
-        "idf", F.log((F.lit(1.0 + n_docs)) / (F.col("df") + 1.0)) + 1.0
-    ).persist()
-    try:
-        q = dfreq.approxQuantile("idf", [idf_pct], 0.001)
-        if not q:
-            return dfreq.sparkSession.createDataFrame([], "token string")
-        out = dfreq.filter(
-            (F.col("idf") <= q[0]) | (F.col("df") > df_cut * n_docs)
-        ).select("token")
-        # materialize before unpersisting: the result is small (stopword
-        # dimension) and callers broadcast it anyway
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        dfreq.unpersist()
-
-
-def blocking_quality(
-    blocks: DataFrame,
-    labeled_pairs: DataFrame,
-    n_entities: int,
-    pairs: DataFrame | None = None,
-    **candidate_kwargs,
-) -> dict:
-    """Blocking diagnostics (reference B7 k-sweep analog,
-    visualize_k_value_for_blocking.py:109-173): pair completeness
-    (recall of true pairs through the blocks) and reduction ratio
-    1 - |candidate pairs| / C(N,2). All aggregates, collected as scalars.
-
-    Pass the PIPELINE's pair table via `pairs`, or its candidate_pairs
-    knobs via **candidate_kwargs (max_block/salt_threshold/n_salts) —
-    round-3 review: evaluating hardcoded defaults here could green-light
-    a config whose real candidate generator drops different blocks.
-    """
-    from entity_resolution__spark.operators.pairs import candidate_pairs
-
-    if pairs is None:
-        pairs = candidate_pairs(blocks, **candidate_kwargs)
-    n_pairs = pairs.count()
-    pos = labeled_pairs.filter(F.col("label") == 1).select(
-        F.col("conv_id_a").alias("id_left"), F.col("conv_id_b").alias("id_right")
-    )
-    n_pos = pos.count()
-    hit = pos.join(pairs, ["id_left", "id_right"], "left_semi").count()
-    total_possible = n_entities * (n_entities - 1) / 2
-    return {
-        "candidate_pairs": n_pairs,
-        "pair_completeness": hit / n_pos if n_pos else 1.0,
-        "reduction_ratio": 1.0 - n_pairs / total_possible if total_possible else 0.0,
-    }
-
-
-def blocking_quality_sweep(
-    conv: DataFrame,
-    pairs: DataFrame,
-    k_values: tuple[int, ...] = (5, 10, 20, 30, 40),
-    jaccard_min: float = 0.30,
-    idf_pct: float = 0.20,
-    df_cut: float = 0.20,
-    n_docs: int | None = None,
-) -> dict[int, dict[str, float]]:
-    """B7 k-sweep (reference visualize_k_value_for_blocking.py:109-173):
-    OverlapPurity@k, JaccardPurity@k (J ≥ jaccard_min on IMPORTANT token
-    sets = tokens minus auto-stopwords plus acronyms), AvgCosine@k, and
-    the directed reduction ratio, for each k.
-
-    The reference sweeps brute-force TF-IDF kNN neighbors (O(N²)); here
-    neighbors are the engine's own blocking candidates ranked per source
-    by binary token cosine — the metrics evaluate the ACTUAL candidate
-    generator at any scale. Purity denominators use k (missing neighbors
-    count as misses), mirroring the reference's share/k; AvgCosine@k
-    averages over the neighbors that exist.
-
-    One ranked-neighbor pass + one aggregate; returns driver-side
-    scalars (k_values is a small constant grid).
-    """
-    from entity_resolution__spark.operators.textstats import acronyms_col
-
-    spark = conv.sparkSession
-    if n_docs is None:
-        n_docs = conv.count()
-    sw = stopwords_by_idf(conv, idf_pct=idf_pct, df_cut=df_cut, n_docs=n_docs)
-    sw_arr = F.broadcast(sw.agg(F.collect_set("token").alias("sw")))
-    imp = (
-        conv.crossJoin(sw_arr)
-        .select(
-            "conv_id",
-            F.array_union(
-                F.array_except("token_set", "sw"),
-                acronyms_col(F.col("full_text")),
-            ).alias("imp"),
-        )
-        .persist()
-    )
-    sym = pairs.select(
-        F.col("id_left").alias("src"), F.col("id_right").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("id_right").alias("src"), F.col("id_left").alias("dst"))
-    )
-    il = imp.select(F.col("conv_id").alias("src"), F.col("imp").alias("imp_s"))
-    ir = imp.select(F.col("conv_id").alias("dst"), F.col("imp").alias("imp_d"))
-    ts = conv.select(F.col("conv_id").alias("src"), F.col("token_set").alias("ts_s"))
-    td = conv.select(F.col("conv_id").alias("dst"), F.col("token_set").alias("td_d"))
-    j = sym.join(il, "src").join(ir, "dst").join(ts, "src").join(td, "dst")
-    # imp_s/imp_d are sets (array_union of distinct arrays is distinct),
-    # so |union| = |imp_s|+|imp_d|-inter — skips a per-pair array build
-    inter_imp = F.size(F.array_intersect("imp_s", "imp_d")).cast("double")
-    union_imp = (F.size("imp_s") + F.size("imp_d")).cast("double") - inter_imp
-    jac = F.when(union_imp > 0, inter_imp / union_imp).otherwise(0.0)
-    denom = F.sqrt(F.size("ts_s").cast("double") * F.size("td_d").cast("double"))
-    cos = F.when(
-        denom > 0,
-        F.size(F.array_intersect("ts_s", "td_d")).cast("double") / denom,
-    ).otherwise(0.0)
-    scored = j.select(
-        "src",
-        "dst",
-        (inter_imp > 0).cast("int").alias("overlap_hit"),
-        (jac >= F.lit(jaccard_min)).cast("int").alias("jac_hit"),
-        cos.alias("cos"),
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst").asc())
-    max_k = max(k_values)
-    ranked = scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= max_k
-    )
-    aggs = []
-    for k in k_values:
-        within = F.when(F.col("rk") <= k, 1).otherwise(0)
-        aggs += [
-            F.sum(within * F.col("overlap_hit")).alias(f"ov_{k}"),
-            F.sum(within * F.col("jac_hit")).alias(f"jc_{k}"),
-            F.sum(within * F.col("cos")).alias(f"cs_{k}"),
-            F.sum(within).alias(f"nn_{k}"),
-        ]
-    row = ranked.agg(*aggs).collect()[0]
-    imp.unpersist()
-    out: dict[int, dict[str, float]] = {}
-    total_pairs = n_docs * (n_docs - 1)
-    for k in k_values:
-        nn = row[f"nn_{k}"] or 0
-        out[k] = {
-            "overlap_purity": float((row[f"ov_{k}"] or 0) / (n_docs * k)),
-            "jaccard_purity": float((row[f"jc_{k}"] or 0) / (n_docs * k)),
-            "avg_cosine": float((row[f"cs_{k}"] or 0.0) / nn) if nn else 0.0,
-            "reduction_ratio": (
-                1.0 - (n_docs * k) / total_pairs if total_pairs else 0.0
-            ),
-        }
-    return out
 
 
 # ---------------------------------------------------------------------------

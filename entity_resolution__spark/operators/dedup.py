@@ -531,10 +531,10 @@ def shared_window_pairs(
     Scale shape: explode(distinct windows) → the shared
     capped/triangle-salted self-join (saltjoin.py) → one pair-keyed
     count. Stopword-grade window keys (bucket > max_bucket) are dropped
-    on both engines — same audited recall trade as the MinHash path
-    (dropped_hot_buckets reports them). At 100 TB the window hash is
-    the shuffle key; cardinality ≈ total tokens, so this is the
-    suffix-array-free approximation that fits a shuffle-based engine.
+    on both engines — same recall trade as the MinHash path. At 100 TB
+    the window hash is the shuffle key; cardinality ≈ total tokens, so
+    this is the suffix-array-free approximation that fits a
+    shuffle-based engine.
     """
     from entity_resolution__spark.operators.saltjoin import capped_salted_self_join
 

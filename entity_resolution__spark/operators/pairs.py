@@ -26,10 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def block_sizes(blocks: DataFrame) -> DataFrame:
-    return blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
-
-
 def candidate_pairs(
     blocks: DataFrame,
     max_block: int = 2000,
@@ -60,27 +56,6 @@ def candidate_pairs(
         )
         .dropDuplicates(["id_left", "id_right"])
         .select("id_left", "id_right", "block_key")
-    )
-
-
-def collapse_undirected_max(
-    scored: DataFrame,
-    left: str = "id_left",
-    right: str = "id_right",
-    value: str = "prob_match",
-) -> DataFrame:
-    """Undirected max-collapse: (a,b)/(b,a) duplicates keep the max value
-    (reference scripts/run_blocking.py:59-67 sort+group-first idiom →
-    one groupBy(max), no sort)."""
-    other = [c for c in scored.columns if c not in (left, right)]
-    return (
-        scored.select(
-            F.least(left, right).alias(left),
-            F.greatest(left, right).alias(right),
-            *other,
-        )
-        .groupBy(left, right)
-        .agg(F.max(value).alias(value))
     )
 
 

@@ -5,8 +5,7 @@ point (/root/reference/models/pairwise_classifier.py:284-371,239-256).
 Classifier randomness threatens the determinism the F1≥0.99 gate needs
 (SURVEY.md §7), so the default matcher is a DETERMINISTIC fixed-weight
 convex combination of the feature family — the same scoring applied by
-the pandas/NumPy oracle in tests. A learned matcher can be swapped in by
-broadcasting any sklearn-API model into `apply_model_udf`.
+the pandas/NumPy oracle in tests.
 
 Output schema mirrors classifier_predictions_xgb_k40.csv
 (/root/reference/scripts/train_classifier.py:27-30).
@@ -14,11 +13,8 @@ Output schema mirrors classifier_predictions_xgb_k40.csv
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from entity_resolution__spark.functions.features import (
     FEATURE_COLS,
@@ -48,7 +44,6 @@ DEFAULT_THRESHOLD = 0.60  # pred_match cut; mirrors transitivity seed 0.60
 
 def featurize_pairs(
     pairs_with_payload: DataFrame,
-    idf_map: dict[str, float] | None = None,
     min_token_jaccard: float = 0.15,
 ) -> DataFrame:
     """Pairs joined with payload cols (norm_text/token_set/roles_seq/
@@ -64,7 +59,7 @@ def featurize_pairs(
     so blocking false-positives never pay the string-kernel cost. The
     pandas oracle applies the identical rule (tests/oracle.py).
     """
-    feat = make_feature_udf(idf_map)
+    feat = make_feature_udf()
     df = pairs_with_payload.withColumn(
         "token_jaccard", jaccard(F.col("token_set_l"), F.col("token_set_r"))
     )
@@ -106,18 +101,3 @@ def score_pairs(features_df: DataFrame, threshold: float = DEFAULT_THRESHOLD) ->
         "pred_match", (F.col("prob_match") >= F.lit(threshold)).cast("int")
     )
     return df
-
-
-def apply_model_udf(model, feature_cols: list[str] | None = None):
-    """Broadcastable learned-matcher path (reference M3 analog,
-    models/pairwise_classifier.py:225-234): any picklable object with
-    predict_proba applied Arrow-batched."""
-    cols = feature_cols or FEATURE_COLS
-
-    @pandas_udf(T.DoubleType())
-    def predict(*feats: pd.Series) -> pd.Series:
-        X = pd.concat(feats, axis=1)
-        X.columns = cols
-        return pd.Series(model.predict_proba(X)[:, 1])
-
-    return predict

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
 Brute-force cosine top-k as the exactness baseline, plus two scale
-paths: random-hyperplane LSH bucketing (SimHash for vectors) and a
-centroid-partitioned IVF variant. Dot products stay JVM-side via
+paths: axis-aligned sign-bucket LSH and a centroid-partitioned IVF
+variant. Dot products stay JVM-side via
 F.zip_with + F.aggregate (no Python); the IVF assignment uses a numpy
 pandas UDF over Arrow batches.
 
@@ -160,22 +160,8 @@ def knn_join_topk(
 
 
 # ---------------------------------------------------------------------------
-# LSH bucketing (random hyperplanes) — the scale path
+# LSH bucketing (sign patterns) — the scale path
 # ---------------------------------------------------------------------------
-
-
-def make_hyperplane_udf(dim: int, n_planes: int = 16, seed: int = 13):
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-
-    @pandas_udf(T.LongType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (M @ planes.T) > 0  # (batch, planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return bucket
 
 
 def _rerank_bucket_pairs(
@@ -183,9 +169,8 @@ def _rerank_bucket_pairs(
     cand: DataFrame,
     id_col: str,
     vec_col: str,
-    extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id_left, id_right[, extra]) candidates + exact-cosine rerank via
+    """(id_left, id_right) candidates + exact-cosine rerank via
     two id-keyed hash joins back onto the vector table — the same staged
     rerank shape as dedup.ngram_jaccard_pairs (never ships vectors
     through the bucket self-join)."""
@@ -202,41 +187,8 @@ def _rerank_bucket_pairs(
             "id_left",
             "id_right",
             F.round(cosine(F.col("_v_l"), F.col("_v_r")), 6).alias("cos_sim"),
-            *extra_cols,
         )
     )
-
-
-def lsh_bucket_candidates(
-    emb: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket: int = 4096,
-    salt_threshold: int = 512,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Near-neighbor candidate pairs: same random-hyperplane bucket.
-    Shuffle is keyed on the bucket; per-bucket volume is ~N/2^planes ON
-    AVERAGE — but embedding spaces are lumpy (a dense cluster or an
-    all-zeros region floods one bucket), so the self-join goes through
-    saltjoin.capped_salted_self_join (round-3 VERDICT: no per-bucket
-    cap = quadratic risk at 100×): buckets over `max_bucket` dropped,
-    over `salt_threshold` triangle-salted to (n/S)² per task."""
-    from entity_resolution__spark.operators.saltjoin import capped_salted_self_join
-
-    b = make_hyperplane_udf(dim, n_planes)
-    bucketed = emb.select(F.col(id_col), b(F.col(vec_col)).alias("bucket"))
-    cand = capped_salted_self_join(
-        bucketed,
-        ["bucket"],
-        id_col=id_col,
-        max_bucket=max_bucket,
-        salt_threshold=salt_threshold,
-        n_salts=n_salts,
-    )
-    return _rerank_bucket_pairs(emb, cand, id_col, vec_col, extra_cols=("bucket",))
 
 
 def sign_bucket_neardup_pairs(
@@ -253,10 +205,9 @@ def sign_bucket_neardup_pairs(
     bucket = sign pattern of the first n_dims coordinates; candidates =
     same-bucket pairs; exact cosine reranks and thresholds.
 
-    The axis-aligned variant of the random-hyperplane LSH above — fully
+    The axis-aligned variant of random-hyperplane LSH — fully
     deterministic and expressible in plain SQL, so the DuckDB oracle
-    reproduces the exact candidate set (the hyperplane version's planes
-    live in a numpy closure). Same scale shape: shuffle keyed on bucket,
+    reproduces the exact candidate set. Scale shape: shuffle keyed on bucket,
     per-bucket volume ~N/2^n_dims, never an all-pairs cross join — and
     (round 4) the bucket self-join is capped + triangle-salted via
     saltjoin.capped_salted_self_join, with the cap mirrored in the
@@ -335,7 +286,7 @@ def ivf_topk(
     driver (centroids are dimension-sized by construction), scan ONLY
     the `n_probe` nearest inverted lists, and brute-rerank inside them
     with the batch matmul kernel. This is the complete scale path the
-    round-3 VERDICT accepted in parts (ivf_assign + train_centroids):
+    round-3 VERDICT accepted in parts (ivf_assign + centroids):
     at 10⁹ vectors the scan touches n_probe/n_centroids of the corpus,
     and with `assigned` persisted/partitioned by list_id the filter is
     partition pruning, not a full scan.
@@ -388,26 +339,6 @@ def hash_sampled_centroids(
     )
     rows.sort(key=lambda r: r[id_col])
     return np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-
-
-def train_centroids_sample(
-    emb: DataFrame, n_centroids: int = 16, sample: int = 2048,
-    vec_col: str = "embedding", seed: int = 11, iters: int = 8,
-) -> np.ndarray:
-    """Driver-side mini k-means on a bounded sample (Lloyd's, numpy).
-    The sample is capped so driver memory is constant w.r.t. corpus size."""
-    rows = emb.select(vec_col).limit(sample).collect()
-    X = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(iters):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)
-        for j in range(len(C)):
-            pts = X[a == j]
-            if len(pts):
-                C[j] = pts.mean(0)
-    return C
 
 
 def kmeans_assign_literal(

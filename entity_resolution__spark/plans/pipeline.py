@@ -25,7 +25,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entity_resolution__spark.functions.features import global_idf
 from entity_resolution__spark.operators.blocking import (
     minhash_band_keys,
     rare_token_keys,
@@ -66,7 +65,6 @@ class ERConfig:
     min_token_jaccard: float = 0.15
     keep_threshold: float = 0.45
     cluster_threshold: float = 0.60
-    use_geo_constraint: bool = True
     # C4 standalone form (reference token_overlap_constraint.py): prune
     # scored pairs whose STOPWORD-FILTERED token jaccard < 0.20, skipping
     # pairs with an empty side. Off by default — the featurize pre-gate
@@ -74,7 +72,6 @@ class ERConfig:
     use_token_overlap_constraint: bool = False
     token_overlap_min_jaccard: float = 0.20
     stopword_df_cutoff: float = 0.30
-    use_global_idf: bool = False  # costs one extra pass; off for bench
     # clustering
     cc_max_iter: int = 50
     # Not semantic and no longer read: every stage boundary is timed
@@ -244,7 +241,7 @@ def run_pipeline(
     conv = staged("conversations", lambda: conv_plan, columns=conv_plan.columns)
 
     # one corpus count, threaded through every operator that needs N
-    # (blocking DF caps, stopword cutoffs, idf smoothing); also warms the
+    # (blocking DF caps, stopword cutoffs); also warms the
     # conv persist so downstream branches read from cache
     n_docs = conv.count()
 
@@ -262,8 +259,6 @@ def run_pipeline(
         ),
         ["blocks"],
     )
-
-    idf_map = global_idf(conv, n_docs=n_docs) if cfg.use_global_idf else None
 
     def compute_scored() -> DataFrame:
         # slim payload: the feature kernel derives token vectors from
@@ -288,9 +283,7 @@ def run_pipeline(
         # size-based coalescing would shrink this stage to a handful of
         # tasks — pin it to the core count so kernels use every core
         payload = payload.repartition(spark.sparkContext.defaultParallelism)
-        feats = featurize_pairs(
-            payload, idf_map, min_token_jaccard=cfg.min_token_jaccard
-        )
+        feats = featurize_pairs(payload, min_token_jaccard=cfg.min_token_jaccard)
         return score_pairs(feats, threshold=cfg.cluster_threshold).select(
             "id_left",
             "id_right",
@@ -305,9 +298,7 @@ def run_pipeline(
     _edge_persists: list[DataFrame] = []
 
     def compute_edges() -> tuple[DataFrame, DataFrame]:
-        prune_sets = []
-        if cfg.use_geo_constraint:
-            prune_sets.append(geo_prune_pairs(scored, conv_countries(conv)))
+        prune_sets = [geo_prune_pairs(scored, conv_countries(conv))]
         if cfg.use_token_overlap_constraint:
             sw = stopwords_by_df(conv, cfg.stopword_df_cutoff, n_docs=n_docs)
             tl = conv.select(

@@ -100,7 +100,6 @@ def canonicalize_pd(transcripts: pd.DataFrame) -> pd.DataFrame:
 def score_pairs_pd(
     conv: pd.DataFrame,
     pairs: pd.DataFrame,
-    idf: dict | None = None,
     min_token_jaccard: float = 0.15,
 ) -> pd.DataFrame:
     """Feature + weighted score for (conv_id_a, conv_id_b) pairs.
@@ -119,7 +118,6 @@ def score_pairs_pd(
         a["norm_text"], b["norm_text"],
         j(a["roles"]), j(b["roles"]),
         j(a["tools"]), j(b["tools"]),
-        idf or {},
     )
     # token_jaccard with the reference's empty conventions
     def jac(x, y):
@@ -157,13 +155,13 @@ def all_pairs(conv: pd.DataFrame) -> pd.DataFrame:
 
 
 def reference_clusters(
-    transcripts: pd.DataFrame, threshold: float = 0.60, idf: dict | None = None
+    transcripts: pd.DataFrame, threshold: float = 0.60
 ) -> pd.DataFrame:
     """Brute-force reference clustering: all pairs → score ≥ threshold →
     DSU → (conv_id, cluster_id, cluster_size), dense renumber by sorted
     min member (apply_transitivity.py:159-168)."""
     conv = canonicalize_pd(transcripts)
-    scored = score_pairs_pd(conv, all_pairs(conv), idf)
+    scored = score_pairs_pd(conv, all_pairs(conv))
     dsu = DSU()
     for cid in conv["conv_id"]:
         dsu.find(cid)

@@ -235,10 +235,7 @@ def test_round4_operators_empty_inputs(spark):
         exact_dedup,
         ngram_jaccard_pairs,
     )
-    from entity_resolution__spark.operators.graph_export import (
-        modularity,
-        refine_communities,
-    )
+    from entity_resolution__spark.operators.graph_export import modularity
     from entity_resolution__spark.operators.packing import (
         pack_documents,
         packing_stats,
@@ -261,7 +258,6 @@ def test_round4_operators_empty_inputs(spark):
     no_edges = spark.createDataFrame([], "src string, dst string")
     no_labels = spark.createDataFrame([], "node string, community string")
     assert modularity(no_edges, no_labels) == 0.0
-    assert refine_communities(no_edges, no_labels).count() == 0
 
 
 def test_token_budget_sample_boundary(spark):

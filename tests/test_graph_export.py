@@ -1,4 +1,4 @@
-"""Graph export family (reference S3/G6/G7 data side)."""
+"""Graph communities (reference G7 data side): LPA, modularity, Louvain."""
 
 from __future__ import annotations
 
@@ -13,22 +13,6 @@ def _edges(spark):
         ("x", "y"),
     ]
     return spark.createDataFrame(rows, ["src", "dst"])
-
-
-def test_bfs_subgraph_depth_limits(spark):
-    from entity_resolution__spark.operators.graph_export import bfs_subgraph
-
-    nodes1, edges1 = bfs_subgraph(_edges(spark), ["a"], depth=1)
-    got1 = {r["node"] for r in nodes1.collect()}
-    assert got1 == {"a", "b", "c"}
-    e1 = {(r["src"], r["dst"]) for r in edges1.collect()}
-    assert e1 == {("a", "b"), ("b", "c"), ("a", "c")}
-
-    nodes2, _ = bfs_subgraph(_edges(spark), ["a"], depth=2)
-    assert {r["node"] for r in nodes2.collect()} == {"a", "b", "c", "d"}
-    # x/y unreachable at any depth
-    nodes4, _ = bfs_subgraph(_edges(spark), ["a"], depth=4)
-    assert "x" not in {r["node"] for r in nodes4.collect()}
 
 
 def test_label_propagation_components(spark):
@@ -105,26 +89,6 @@ def test_weighted_lpa_no_bipartite_oscillation(spark):
     assert len(set(out.values())) == 1
 
 
-def test_to_gexf_string(spark):
-    from entity_resolution__spark.operators.graph_export import (
-        bfs_subgraph,
-        to_gexf,
-    )
-    import pytest
-
-    nodes, edges = bfs_subgraph(_edges(spark), ["a"], depth=1)
-    xml = to_gexf(nodes, edges)
-    assert xml.startswith('<?xml version="1.0"')
-    assert '<node id="a"' in xml and '<edge id="0"' in xml
-    assert xml.count("<node ") == 3 and xml.count("<edge ") == 3
-    with pytest.raises(ValueError):
-        to_gexf(nodes, edges, max_nodes=2)
-    # edge side is bounded too (ADVICE round 2: node-bounded graphs can
-    # still carry O(n²) edges into the driver)
-    with pytest.raises(ValueError, match="max_edges"):
-        to_gexf(nodes, edges, max_edges=2)
-
-
 def test_modularity_pinned_values(spark):
     """Q on the two-K4 + unit-bridge fixture against hand-computed
     values: the 2-community partition scores 2·(12/26 − (13/26)²) =
@@ -152,57 +116,13 @@ def test_modularity_pinned_values(spark):
     assert modularity(edges, merged) == _pytest.approx(0.0, abs=1e-12)
 
 
-def test_refine_communities_merges_oversplit_not_weak_bridge(spark):
-    """The CNM refinement pass (a) merges an OVERSPLIT K4 (halved labels
-    → whole-clique labels, strictly higher Q), (b) refuses to merge two
-    K4s across a weak bridge (ΔQ < 0), and (c) does merge them across a
-    strong bridge (ΔQ > 0) — the Louvain phase-2 criterion both ways."""
-    from itertools import combinations
-
-    from entity_resolution__spark.operators.graph_export import (
-        modularity,
-        refine_communities,
-    )
-
-    def k4s(bridge_w):
-        rows = [(u, v, 1.0) for u, v in combinations("abcd", 2)]
-        rows += [(u, v, 1.0) for u, v in combinations("efgh", 2)]
-        rows += [("d", "e", bridge_w)]
-        return spark.createDataFrame(rows, ["src", "dst", "weight"])
-
-    # (a)+(b): weak bridge, each K4 oversplit into halves
-    oversplit = spark.createDataFrame(
-        [("a", "L1"), ("b", "L1"), ("c", "L2"), ("d", "L2"),
-         ("e", "R1"), ("f", "R1"), ("g", "R2"), ("h", "R2")],
-        ["node", "community"],
-    )
-    weak = k4s(0.1)
-    refined = refine_communities(weak, oversplit)
-    got = {r["node"]: r["community"] for r in refined.collect()}
-    assert len({got[n] for n in "abcd"}) == 1
-    assert len({got[n] for n in "efgh"}) == 1
-    assert {got[n] for n in "abcd"} != {got[n] for n in "efgh"}  # (b)
-    assert modularity(weak, refined) > modularity(weak, oversplit)
-
-    # (c): strong bridge → the bridge IS merged across (ΔQ(L2,R1) =
-    # 40/64 − 2·(26/64)(26/64) ≈ +0.295, the largest gain) and Q rises;
-    # greedy CNM then legitimately stops — further merges all have
-    # ΔQ < 0 from where it stands (single-pass greedy, not exhaustive)
-    strong = k4s(20.0)
-    refined2 = refine_communities(strong, oversplit)
-    got2 = {r["node"]: r["community"] for r in refined2.collect()}
-    assert got2["d"] == got2["e"]
-    assert modularity(strong, refined2) > modularity(strong, oversplit)
-
-
 def test_louvain_moves_single_node_cnm_cannot(spark):
     """Round-4 VERDICT gap #3 (true Louvain): with a singleton start
     (labels=None — node-level Louvain, the reference's nx semantics
     minus the RNG) the two-K4 + weak-bridge optimum is recovered exactly
-    (pinned Q = 11/26). A merge-only CNM refinement of a MISLABELED
-    partition (node e welded into the left community) cannot reach that
-    optimum — whole-group merging can't split a community — which is
-    precisely the capability the node-level phase-1 moves add."""
+    (pinned Q = 11/26). Node-level phase-1 moves are what a merge-only
+    (CNM) pass lacks: it cannot move node e out of a group it was
+    wrongly welded into."""
     from itertools import combinations
 
     import pytest as _pytest
@@ -210,26 +130,18 @@ def test_louvain_moves_single_node_cnm_cannot(spark):
     from entity_resolution__spark.operators.graph_export import (
         louvain_refine,
         modularity,
-        refine_communities,
     )
 
     rows = [(u, v, 1.0) for u, v in combinations("abcd", 2)]
     rows += [(u, v, 1.0) for u, v in combinations("efgh", 2)]
     rows += [("d", "e", 1.0)]
     edges = spark.createDataFrame(rows, ["src", "dst", "weight"])
-    mislabeled = spark.createDataFrame(
-        [(n, "L") for n in "abcde"] + [(n, "R") for n in "fgh"],
-        ["node", "community"],
-    )
     lv = louvain_refine(edges)  # singleton start
     got = {r["node"]: r["community"] for r in lv.collect()}
     assert len({got[n] for n in "abcd"}) == 1
     assert len({got[n] for n in "efgh"}) == 1
     assert {got[n] for n in "abcd"} != {got[n] for n in "efgh"}
     assert modularity(edges, lv) == _pytest.approx(11.0 / 26.0, abs=1e-12)
-    # CNM merge-only cannot perform the single-node repair
-    cnm = refine_communities(edges, mislabeled)
-    assert modularity(edges, cnm) < 11.0 / 26.0 - 1e-9
 
 
 def test_louvain_multilevel_from_singletons_and_deterministic(spark):

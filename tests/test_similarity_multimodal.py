@@ -1,10 +1,9 @@
-"""ANN similarity + multimodal plumbing tests."""
+"""ANN similarity tests: brute top-k, kNN join, IVF."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -69,127 +68,18 @@ def test_knn_join_topk_refuses_big_query_side(spark, emb):
     assert len(knn_join_topk(df, q, k=1, max_queries=10).collect()) == 10
 
 
-def test_lsh_buckets_find_identical(spark, emb):
-    from entity_resolution__spark.operators.similarity import lsh_bucket_candidates
-
-    df, rows = emb
-    # add an exact duplicate of vec 0 with id 999
-    dup = spark.createDataFrame(
-        [(999, rows[0][1])], "vec_id long, embedding array<double>"
-    )
-    cand = lsh_bucket_candidates(df.union(dup), dim=8, n_planes=6)
-    pairs = {(r["id_left"], r["id_right"]) for r in cand.collect()}
-    assert (0, 999) in pairs  # identical vectors always share every bucket
-
-
 def test_ivf_assign_and_centroids(spark, emb):
     from entity_resolution__spark.operators.similarity import (
+        hash_sampled_centroids,
         ivf_assign,
-        train_centroids_sample,
     )
 
     df, _ = emb
-    C = train_centroids_sample(df, n_centroids=4, sample=50)
+    C = hash_sampled_centroids(df, n=4)
     assert C.shape == (4, 8)
     out = ivf_assign(df, C).collect()
     assert len(out) == 50
     assert all(0 <= r["list_id"] < 4 for r in out)
-
-
-def test_multimodal_feature_plumbing(spark):
-    from entity_resolution__spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-        frame_sample_plan,
-    )
-
-    rows = [
-        ("m1", "image", b"\x89PNGfake", (64, 48, None, "image/png")),
-        ("m2", "image", b"\x89PNGfake", (64, 48, None, "image/png")),
-        ("m3", "video", b"\x00\x00vid", (320, 240, 3500, "video/mp4")),
-        ("m4", "audio", None, (None, None, 1200, "audio/wav")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r["media_id"]: r for r in extract_features(media, dim=8).collect()}
-    assert feats["m1"]["feature"] == feats["m2"]["feature"]  # same payload
-    assert feats["m1"]["feature"] != feats["m3"]["feature"]
-    assert feats["m4"]["n_bytes"] == 0
-    assert len(feats["m1"]["feature"]) == 8
-
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    # video m3: 3500ms → ts 0,1000,2000,3000
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
-
-
-def test_multimodal_stub_raises_without_fake(spark):
-    from entity_resolution__spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_features,
-    )
-    from py4j.protocol import Py4JJavaError
-
-    media = spark.createDataFrame(
-        [("m1", "image", b"x", (1, 1, None, "image/png"))], MEDIA_SCHEMA
-    )
-    with pytest.raises(Exception):  # NotImplementedError inside the UDF
-        extract_features(media, deterministic_fake=False).collect()
-
-
-def test_bmp_roundtrip_and_feature_values():
-    """decode_bmp inverts encode_bmp exactly, including non-multiple-of-4
-    widths (row padding) and asymmetric images (row order)."""
-    import numpy as np
-
-    from entity_resolution__spark.operators.multimodal import (
-        _image_feature,
-        decode_bmp,
-        encode_bmp,
-    )
-
-    rng = np.random.default_rng(3)
-    for h, w in [(1, 1), (2, 3), (5, 7), (8, 4)]:
-        img = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (decode_bmp(encode_bmp(img)) == img).all()
-    # solid-color image: the real-pixel feature IS the color
-    red = np.zeros((4, 4, 3), dtype=np.uint8)
-    red[:, :, 0] = 255
-    f = _image_feature(decode_bmp(encode_bmp(red)), dim=18)
-    assert np.allclose(f[[0, 3, 6, 9, 12]], 1.0)  # R blocks + global mean
-    assert np.allclose(f[[1, 2, 15, 16, 17]], 0.0)  # G/B means, all stds
-
-
-def test_multimodal_real_bmp_decode_through_spark(spark):
-    """Round-4 VERDICT #8: deterministic_fake=False runs a REAL decode
-    end-to-end for BMP through the mapInPandas stage — the stub seam is
-    proven pluggable — while non-BMP payloads still hit the documented
-    NotImplementedError seam."""
-    import numpy as np
-
-    from entity_resolution__spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmp,
-        extract_features,
-    )
-
-    green = np.zeros((6, 5, 3), dtype=np.uint8)
-    green[:, :, 1] = 255
-    grad = np.zeros((4, 4, 3), dtype=np.uint8)
-    grad[:, :, 2] = np.arange(16, dtype=np.uint8).reshape(4, 4) * 17
-    rows = [
-        ("g", "image", encode_bmp(green), (5, 6, None, "image/bmp")),
-        ("d", "image", encode_bmp(grad), (4, 4, None, "image/bmp")),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {
-        r["media_id"]: r
-        for r in extract_features(media, dim=18, deterministic_fake=False).collect()
-    }
-    g = np.array(out["g"]["feature"])
-    assert np.allclose(g[[1, 4, 7, 10, 13]], 1.0, atol=1e-6)  # G channel
-    assert np.allclose(g[[0, 2, 12, 14]], 0.0, atol=1e-6)  # R/B
-    d = np.array(out["d"]["feature"])
-    assert abs(d[14] - (np.arange(16).reshape(4, 4) * 17 / 255.0).mean()) < 1e-6
-    assert out["g"]["n_bytes"] == len(encode_bmp(green))
 
 
 def test_ivf_topk_search(spark, emb):
@@ -199,13 +89,13 @@ def test_ivf_topk_search(spark, emb):
     cluster) still surface — the standard recall trade."""
     from entity_resolution__spark.operators.similarity import (
         brute_topk,
+        hash_sampled_centroids,
         ivf_assign,
         ivf_topk,
-        train_centroids_sample,
     )
 
     df, rows = emb
-    C = train_centroids_sample(df, n_centroids=4, sample=50)
+    C = hash_sampled_centroids(df, n=4)
     probe = rows[0][1]
     assigned = df.sparkSession.createDataFrame(
         ivf_assign(df, C).collect(),

@@ -103,18 +103,14 @@ def test_grouped_pair_dots_match_per_pair_oracle():
     a = pd.Series([p[0] for p in pairs])
     b = pd.Series([p[1] for p in pairs])
     empty = pd.Series([""] * len(pairs))
-    idf = {w: 1.0 + i * 0.01 for i, w in enumerate(vocab)}
 
-    got = compute_feature_struct(a, b, empty, empty, empty, empty, idf)
+    got = compute_feature_struct(a, b, empty, empty, empty, empty)
 
-    def tok_cos(x, y, use_idf):
+    def tok_cos(x, y, sublinear):
         cx, cy = Counter(x.split()), Counter(y.split())
         def w(c):
-            return {
-                t: (1.0 + math.log(n)) * (idf.get(t, 1.0) if use_idf else 1.0)
-                for t, n in c.items()
-            }
-        wx, wy = (w(cx), w(cy)) if use_idf else (
+            return {t: 1.0 + math.log(n) for t, n in c.items()}
+        wx, wy = (w(cx), w(cy)) if sublinear else (
             {t: float(n) for t, n in cx.items()},
             {t: float(n) for t, n in cy.items()},
         )
@@ -176,7 +172,7 @@ def test_kernel_batch_invariance():
         a = pd.Series([p[0] for p in pairs])
         b = pd.Series([p[1] for p in pairs])
         s = pd.Series([e] * len(pairs))
-        return compute_feature_struct(a, b, s, s, s, s, {"alpha": 1.7, "beta": 2.1})
+        return compute_feature_struct(a, b, s, s, s, s)
 
     solo = run([(x, y)])
     packed = run(filler + [(x, y)] + filler[::-1])
