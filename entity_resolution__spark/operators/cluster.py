@@ -478,3 +478,41 @@ def assign_clusters(cc: DataFrame, all_nodes: DataFrame) -> DataFrame:
         "cluster_size",
     )
     return out
+
+
+def incremental_clusters(
+    prior: DataFrame, new_edges: DataFrame, max_iter: int = 50
+) -> DataFrame:
+    """Incremental re-clustering: fold a NEW batch of match edges into
+    an existing CLUSTERS assignment without touching the original pair
+    corpus (the nightly-delta form of the north rule's resumability —
+    yesterday's 10^9-row assignment + today's 10^6 new edges must not
+    re-run blocking/scoring over the whole corpus).
+
+
+    The prior assignment is re-expressed as its star edges (hub = min
+    member — exactly the canonical form the CC loop converges to, so
+    this adds one edge per non-hub node, not one per original pair),
+    unioned with the new edges, and one CC pass + the fused dense
+    renumber produces the updated assignment. Semantics: clusters can
+    only MERGE (via new edges bridging them) or grow with unseen nodes;
+    node ids appearing only in `prior` are preserved as their own
+    (possibly singleton) clusters. Equivalent to full recluster over
+    (all prior intra-cluster pairs ∪ new edges) — star form is the
+    transitive reduction, so the CC result is identical.
+
+
+    prior: CLUSTERS schema (conv_id, cluster_id, cluster_size).
+    new_edges: (src, dst).
+    Output: CLUSTERS schema with dense ids in sorted-min-member order.
+    """
+    star = cluster_edges(prior, mode="star").select("src", "dst")
+    edges = star.unionByName(new_edges.select("src", "dst"))
+    nodes = (
+        prior.select(F.col("conv_id").alias("node"))
+        .unionByName(new_edges.select(F.col("src").alias("node")))
+        .unionByName(new_edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    cc = connected_components(edges, max_iter=max_iter)
+    return assign_clusters(cc.assignments, nodes)

@@ -1,11 +1,14 @@
-"""Graph communities and modularity (reference G7).
+"""Graph sampling, communities and modularity (reference G6, G7).
 
 The reference ships matplotlib/networkx visualization utilities
 (/root/reference/src/graph/visualize_graph_utils.py:9-103): GEXF export,
 BFS-sampled subgraphs, and community coloring. The plotting and the
 export are out of scope here (SURVEY.md §2.1); what this module keeps is
-the community side, Spark-first:
+the sampling and community side, Spark-first:
 
+  G6  bfs_subgraph       distributed k-hop expansion from seed nodes:
+                         one semi-join per hop, frontier stays a
+                         DataFrame (no driver adjacency)
   G7  label_propagation_communities
                          synchronous min-label propagation — the
                          scale-safe stand-in for the reference's
@@ -15,6 +18,7 @@ the community side, Spark-first:
       louvain_refine     multi-level Louvain on the collected COMMUNITY
                          graph (communities ≪ nodes; refuses over budget)
 
+bfs_subgraph is hash joins keyed on node (frontier ≪ graph);
 LPA is one groupBy+join per round like the CC loop; only the community
 graph is collected, under a budget.
 """
@@ -23,6 +27,44 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _sym(edges: DataFrame) -> DataFrame:
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).filter(
+        F.col("u") != F.col("v")
+    )
+
+
+def bfs_subgraph(
+    edges: DataFrame, seeds: list, depth: int = 2
+) -> tuple[DataFrame, DataFrame]:
+    """G6: nodes within `depth` hops of `seeds`, plus the induced edges
+    (reference visualize_graph_utils.py BFS sample). Each hop is one
+    join + distinct; the frontier is broadcast when small (Spark decides
+    via AQE). Returns (nodes(node), edges(src, dst))."""
+    spark = edges.sparkSession
+    sym = _sym(edges).localCheckpoint(eager=True)
+    visited = spark.createDataFrame([(s,) for s in seeds], ["node"]).distinct()
+    frontier = visited
+    for _ in range(depth):
+        nxt = (
+            sym.join(frontier.withColumnRenamed("node", "u"), "u")
+            .select(F.col("v").alias("node"))
+            .distinct()
+            .join(visited, "node", "left_anti")
+        )
+        visited = visited.union(nxt).distinct().localCheckpoint(eager=True)
+        frontier = nxt
+    vn = visited.withColumnRenamed("node", "u")
+    induced = (
+        sym.join(vn, "u")
+        .join(visited.withColumnRenamed("node", "v"), "v")
+        .filter(F.col("u") < F.col("v"))
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .distinct()
+    )
+    return visited, induced
 
 
 def label_propagation_communities(

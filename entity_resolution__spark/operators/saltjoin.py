@@ -1,7 +1,7 @@
 """Skew-safe within-bucket self-join: the shared candidate-pair engine.
 
 Every LSH family in this repo (ER blocking keys, MinHash bands over
-shingles, embedding sign buckets) ends in the same shape: a
+shingles, embedding sign/hyperplane buckets) ends in the same shape: a
 self-join on a bucket key emitting all within-bucket pairs. A hot bucket
 of size n makes the naive join emit n² rows through ONE shuffle
 partition — the round-3 VERDICT's last remaining quadratic-blowup path
@@ -53,7 +53,7 @@ def capped_salted_self_join(
     emitted exactly once PER BUCKET it shares (callers joining several
     buckets/bands per row dedup on the pair afterwards). Buckets larger
     than `max_bucket` are dropped (documented recall trade — see module
-    docstring). Buckets
+    docstring; NOT silent: `dropped_hot_buckets` reports them). Buckets
     in (salt_threshold, max_bucket] go through the triangle-salted join.
 
     id values must be orderable (<, least/greatest) — strings or ints.
@@ -136,3 +136,16 @@ def capped_salted_self_join(
         )
     )
     return pairs_small.unionByName(pairs_big)
+
+
+def dropped_hot_buckets(
+    keyed: DataFrame, key_cols: list[str], max_bucket: int = 4096
+) -> DataFrame:
+    """(key_cols..., bucket_size) for buckets the cap would drop — the
+    'no silent caps' audit companion to capped_salted_self_join. One
+    groupBy; log/stage its count next to any capped run."""
+    return (
+        keyed.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .filter(F.col("bucket_size") > max_bucket)
+    )

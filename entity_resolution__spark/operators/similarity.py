@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline, plus two scale
-paths: axis-aligned sign-bucket LSH and a centroid-partitioned IVF
-variant. Dot products stay JVM-side via
+Brute-force cosine top-k as the exactness baseline, plus scale
+paths: random-hyperplane LSH bucketing (SimHash for vectors),
+axis-aligned sign-bucket LSH and a centroid-partitioned IVF variant. Dot products stay JVM-side via
 F.zip_with + F.aggregate (no Python); the IVF assignment uses a numpy
 pandas UDF over Arrow batches.
 
@@ -160,8 +160,22 @@ def knn_join_topk(
 
 
 # ---------------------------------------------------------------------------
-# LSH bucketing (sign patterns) — the scale path
+# LSH bucketing (random hyperplanes, sign patterns) — the scale path
 # ---------------------------------------------------------------------------
+
+
+def make_hyperplane_udf(dim: int, n_planes: int = 16, seed: int = 13):
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((n_planes, dim))
+
+    @pandas_udf(T.LongType())
+    def bucket(vecs: pd.Series) -> pd.Series:
+        M = np.stack(vecs.to_numpy())  # (batch, dim)
+        bits = (M @ planes.T) > 0  # (batch, planes)
+        weights = (1 << np.arange(n_planes)).astype(np.int64)
+        return pd.Series(bits @ weights)
+
+    return bucket
 
 
 def _rerank_bucket_pairs(
@@ -189,6 +203,38 @@ def _rerank_bucket_pairs(
             F.round(cosine(F.col("_v_l"), F.col("_v_r")), 6).alias("cos_sim"),
         )
     )
+
+
+def lsh_bucket_candidates(
+    emb: DataFrame,
+    dim: int,
+    n_planes: int = 12,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    max_bucket: int = 4096,
+    salt_threshold: int = 512,
+    n_salts: int = 8,
+) -> DataFrame:
+    """Near-neighbor candidate pairs: same random-hyperplane bucket.
+    Shuffle is keyed on the bucket; per-bucket volume is ~N/2^planes ON
+    AVERAGE — but embedding spaces are lumpy (a dense cluster or an
+    all-zeros region floods one bucket), so the self-join goes through
+    saltjoin.capped_salted_self_join (round-3 VERDICT: no per-bucket
+    cap = quadratic risk at 100×): buckets over `max_bucket` dropped,
+    over `salt_threshold` triangle-salted to (n/S)² per task."""
+    from entity_resolution__spark.operators.saltjoin import capped_salted_self_join
+
+    b = make_hyperplane_udf(dim, n_planes)
+    bucketed = emb.select(F.col(id_col), b(F.col(vec_col)).alias("bucket"))
+    cand = capped_salted_self_join(
+        bucketed,
+        ["bucket"],
+        id_col=id_col,
+        max_bucket=max_bucket,
+        salt_threshold=salt_threshold,
+        n_salts=n_salts,
+    )
+    return _rerank_bucket_pairs(emb, cand, id_col, vec_col)
 
 
 def sign_bucket_neardup_pairs(

@@ -7,8 +7,6 @@ from __future__ import annotations
 import math
 import random
 
-import pytest
-
 from entity_resolution__spark.operators.cluster import (
     assign_clusters,
     connected_components,
@@ -263,6 +261,52 @@ def test_distributed_cc_at_size(spark):
     assert dsu.count() == got.count()
 
 
+def test_incremental_clusters_merge_and_new_nodes(spark):
+    """Delta re-clustering: a new edge bridging two prior clusters
+    merges them; brand-new nodes form their own cluster; untouched
+    singletons survive; result equals a full recluster over the union
+    of all prior intra-cluster pairs and the new edges."""
+    from entity_resolution__spark.operators.cluster import (
+        assign_clusters,
+        connected_components,
+        incremental_clusters,
+    )
+
+    prior = spark.createDataFrame(
+        [("a", 0, 2), ("b", 0, 2), ("c", 1, 2), ("d", 1, 2), ("e", 2, 1)],
+        "conv_id string, cluster_id long, cluster_size int",
+    )
+    new_edges = spark.createDataFrame(
+        [("b", "c"), ("f", "g")], "src string, dst string"
+    )
+    out = {
+        r["conv_id"]: (r["cluster_id"], r["cluster_size"])
+        for r in incremental_clusters(prior, new_edges).collect()
+    }
+    assert len({out[n][0] for n in "abcd"}) == 1  # merged across the bridge
+    assert out["a"][1] == 4
+    assert out["f"][0] == out["g"][0] and out["f"][1] == 2
+    assert out["e"][1] == 1
+    assert {out["e"][0], out["f"][0]} != {out["a"][0]}
+    # dense ids, sorted-min-member order: min members a < e < f
+    assert (out["a"][0], out["e"][0], out["f"][0]) == (0, 1, 2)
+
+    # equivalence with a FULL recluster over prior pairs + new edges
+    full_edges = spark.createDataFrame(
+        [("a", "b"), ("c", "d"), ("b", "c"), ("f", "g")],
+        "src string, dst string",
+    )
+    nodes = spark.createDataFrame(
+        [(n,) for n in "abcdefg"], "node string"
+    )
+    cc = connected_components(full_edges)
+    want = {
+        r["conv_id"]: (r["cluster_id"], r["cluster_size"])
+        for r in assign_clusters(cc.assignments, nodes).collect()
+    }
+    assert out == want
+
+
 def test_two_level_forest_prepass_equivalence(spark):
     """Round-7 two-level CC: the partition-local spanning-star pre-pass
     (_local_forest_edges) that every call runs must leave the star
@@ -357,18 +401,3 @@ def test_driver_finish_fetches_at_most_node_count(spark, monkeypatch):
     assert {(r["node"], r["root"]) for r in res.assignments.collect()} == {
         (i, 0) for i in range(n)
     }
-
-
-def test_cluster_edges_chain_star(spark):
-    from entity_resolution__spark.operators.cluster import cluster_edges
-
-    clusters = spark.createDataFrame(
-        [("a", 0, 3), ("b", 0, 3), ("c", 0, 3), ("x", 1, 1)],
-        ["conv_id", "cluster_id", "cluster_size"],
-    )
-    chain = {(r["src"], r["dst"]) for r in cluster_edges(clusters, "chain").collect()}
-    assert chain == {("a", "b"), ("b", "c")}
-    star = {(r["src"], r["dst"]) for r in cluster_edges(clusters, "star").collect()}
-    assert star == {("a", "b"), ("a", "c")}
-    with pytest.raises(ValueError):
-        cluster_edges(clusters, "ring")

@@ -135,6 +135,20 @@ def test_stopwords_by_df(spark):
     assert sw60 == {"the"}
 
 
+def test_stopwords_by_idf(spark):
+    from entity_resolution__spark.operators.blocking import stopwords_by_idf
+
+    conv = spark.createDataFrame(
+        [(f"c{i}", ["the", "and", f"rare{i}"]) for i in range(8)],
+        ["conv_id", "token_set"],
+    )
+    # vocab = 2 ubiquitous + 8 singletons: the 20% idf quantile lands on
+    # the ubiquitous tokens' idf (2/10 of vocab), and their df=100% also
+    # exceeds the 20% df cut → stopwords; singletons (df=1 < 0.2·8) kept
+    sw = {r["token"] for r in stopwords_by_idf(conv, idf_pct=0.20, df_cut=0.20).collect()}
+    assert sw == {"the", "and"}
+
+
 def test_token_overlap_prune_skip_when_empty(spark):
     """Reference C4 semantics (token_overlap_constraint.py:16-70): prune
     when stopword-filtered jaccard < cut, but NEVER when either side is

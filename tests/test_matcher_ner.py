@@ -1,29 +1,15 @@
-"""Numpy logistic matcher (M1-M4) + rule-based NER plumbing (P9-P11) +
-B4/B7/B8/G5 inventory helpers."""
+"""Score-ranking metrics (reference M2/M4) + B4/B7/G5 inventory helpers:
+undirected max-collapse, blocking quality, cluster-edge export."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from entity_resolution__spark.functions.features import FEATURE_COLS
-from entity_resolution__spark.operators.matcher import (
+from entity_resolution__spark.operators.evaluate import (
     f1_optimal_threshold,
     roc_auc,
-    train_matcher,
 )
-
-
-def _labeled(n=400, seed=5) -> pd.DataFrame:
-    rng = np.random.default_rng(seed)
-    y = (rng.random(n) < 0.3).astype(int)
-    X = {}
-    for i, c in enumerate(FEATURE_COLS):
-        X[c] = np.clip(y * 0.7 + rng.normal(0.2, 0.15, n), 0, 1)
-    df = pd.DataFrame(X)
-    df["label"] = y
-    return df
 
 
 def test_roc_auc_known():
@@ -42,7 +28,7 @@ def test_f1_threshold():
 
 
 def test_pr_auc_exact_and_bounds():
-    from entity_resolution__spark.operators.matcher import pr_auc
+    from entity_resolution__spark.operators.evaluate import pr_auc
 
     # hand-computed AP: hits at ranks 1 and 3 → 0.5·1 + 0.5·(2/3)
     y = np.array([1.0, 0.0, 1.0, 0.0])
@@ -51,171 +37,6 @@ def test_pr_auc_exact_and_bounds():
     # perfect ranking → 1.0; no positives → 0.0
     assert pr_auc(np.array([1.0, 1.0, 0.0]), np.array([0.9, 0.8, 0.1])) == 1.0
     assert pr_auc(np.zeros(3), np.array([0.9, 0.8, 0.1])) == 0.0
-
-
-def test_train_matcher_separates():
-    m = train_matcher(_labeled())
-    assert m.metrics["oof_roc_auc"] > 0.95
-    assert m.metrics["oof_pr_auc"] > 0.9  # reference M4 reports both
-    assert m.metrics["oof_f1_at_threshold"] > 0.9
-    assert {"roc_auc", "pr_auc"} <= set(m.metrics["cv_folds"][0].keys())
-    # deterministic: retrain gives identical weights
-    m2 = train_matcher(_labeled())
-    assert np.allclose(m.weights, m2.weights)
-    assert m.threshold == m2.threshold
-
-
-def test_train_gbdt_matcher_separates_and_is_deterministic():
-    """Boosted-stumps option (reference {logreg|rf|xgb} choice): same
-    CV/threshold surface, deterministic (fixed quantile grid, no RNG in
-    the fit), and drops into the same scoring path."""
-    m = train_matcher(_labeled(), model="gbdt")
-    assert m.metrics["oof_roc_auc"] > 0.95
-    assert m.metrics["oof_f1_at_threshold"] > 0.9
-    m2 = train_matcher(_labeled(), model="gbdt")
-    assert m.base == m2.base and m.stumps == m2.stumps
-    assert m.threshold == m2.threshold
-    # predicts the labels it trained on
-    p = m.predict_proba(_labeled(n=100, seed=9))
-    acc = ((p >= m.threshold).astype(int) == _labeled(n=100, seed=9)["label"]).mean()
-    assert acc > 0.85
-
-
-def _labeled_xor(n=400, seed=7) -> pd.DataFrame:
-    """Interaction fixture: label = ASYMMETRIC XOR of the first two
-    features (thresholds 0.6 / 0.3, plus noise features). The asymmetry
-    gives the root split real marginal gain — a symmetric XOR has zero
-    single-split gain, so GREEDY tree induction (ours, CART, XGBoost
-    alike) can't find it — while the rule remains non-additive: stump
-    ensembles plateau at the marginals (~0.68 OOF AUC measured), depth-2
-    trees, which condition the second split on the first, recover it
-    (~0.99)."""
-    rng = np.random.default_rng(seed)
-    X = {c: rng.random(n) for c in FEATURE_COLS}
-    y = ((X[FEATURE_COLS[0]] > 0.6) ^ (X[FEATURE_COLS[1]] > 0.3)).astype(int)
-    df = pd.DataFrame(X)
-    df["label"] = y
-    return df
-
-
-def test_tree_matcher_beats_stumps_on_interactions():
-    """Round-4 VERDICT #5: fixed-depth trees close the stump capacity
-    gap. On the XOR fixture the depth-2 OOF metrics must clearly beat
-    the depth-1 baseline."""
-    stump = train_matcher(_labeled_xor(), model="gbdt")
-    tree = train_matcher(_labeled_xor(), model="gbdt", depth=2)
-    assert tree.metrics["oof_roc_auc"] > 0.95
-    assert tree.metrics["oof_f1_at_threshold"] > 0.9
-    # additive stumps are structurally capped at the marginals
-    assert stump.metrics["oof_roc_auc"] < 0.8
-    assert tree.metrics["oof_roc_auc"] > stump.metrics["oof_roc_auc"] + 0.15
-
-
-def test_tree_matcher_deterministic_pinned():
-    """Bit-determinism: two fits agree exactly; pinned score values
-    guard the fit against silent drift (fixed grid, no RNG)."""
-    m = train_matcher(_labeled_xor(), model="gbdt", depth=2)
-    m2 = train_matcher(_labeled_xor(), model="gbdt", depth=2)
-    assert m.base == m2.base and m.trees == m2.trees
-    assert m.threshold == m2.threshold
-    p = m.predict_proba(_labeled_xor())
-    p2 = m2.predict_proba(_labeled_xor())
-    assert (p == p2).all()
-    # depth-2 on the separable fixture keeps the easy case easy
-    sep = train_matcher(_labeled(), model="gbdt", depth=2)
-    assert sep.metrics["oof_roc_auc"] > 0.95
-
-
-def test_apply_matcher_spark_tree(spark):
-    """The tree matcher drops into the same distributed scoring UDF."""
-    from entity_resolution__spark.operators.matcher import apply_matcher
-
-    m = train_matcher(_labeled_xor(), model="gbdt", depth=2)
-    test = _labeled_xor(n=120, seed=13)
-    out = apply_matcher(spark.createDataFrame(test), m).toPandas()
-    assert np.allclose(out["prob_match"].to_numpy(), m.predict_proba(test), atol=1e-12)
-    acc = (out["pred_match"] == test["label"]).mean()
-    assert acc > 0.85
-
-
-def test_apply_matcher_spark_gbdt(spark):
-    from entity_resolution__spark.operators.matcher import apply_matcher
-
-    m = train_matcher(_labeled(), model="gbdt")
-    test = _labeled(n=80, seed=11)
-    out = apply_matcher(spark.createDataFrame(test), m).toPandas()
-    assert np.allclose(out["prob_match"].to_numpy(), m.predict_proba(test), atol=1e-12)
-
-
-def test_apply_matcher_spark(spark):
-    from entity_resolution__spark.operators.matcher import apply_matcher
-
-    m = train_matcher(_labeled())
-    test = _labeled(n=100, seed=9)
-    sdf = spark.createDataFrame(test)
-    out = apply_matcher(sdf, m).toPandas()
-    want = m.predict_proba(test)
-    assert np.allclose(out["prob_match"].to_numpy(), want, atol=1e-12)
-    # threshold applied
-    assert (out["pred_match"] == (out["prob_match"] >= m.threshold)).all()
-    # matcher actually classifies well
-    acc = (out["pred_match"] == test["label"]).mean()
-    assert acc > 0.85
-
-
-def test_ner_extract_format_merge(spark, tiny_transcripts_sdf):
-    from entity_resolution__spark.operators.canonicalize import canonicalize
-    from entity_resolution__spark.operators.ner import (
-        extract_entities,
-        format_entity_tokens,
-        merge_back,
-    )
-
-    conv = canonicalize(tiny_transcripts_sdf).limit(20)
-    ents = extract_entities(conv)
-    rows = ents.collect()
-    assert len(rows) == 20
-    formatted = format_entity_tokens(ents)
-    merged = merge_back(conv, formatted)
-    got = merged.select("conv_id", "entity_tokens").collect()
-    assert all(r["entity_tokens"] is not None for r in got)
-    # countries planted by the fixture must surface as GPE
-    one = spark.createDataFrame(
-        [("x", "Acme Corp opened in Japan with 42 sites")], ["conv_id", "full_text"]
-    )
-    e = extract_entities(one).collect()[0]["entities"]
-    labels = {(t, lab) for t, lab in e}
-    assert ("Japan", "GPE") in labels
-    assert ("Acme Corp", "ORG") in labels
-    assert ("42", "CARDINAL") in labels
-
-
-def test_ner_model_seam_injection(spark):
-    """P9 swap-in seam (round-2 VERDICT #6): a custom model factory is
-    initialized once per partition stream (the per-executor spacy.load
-    slot, never per row) and its outputs flow through the plumbing."""
-    from entity_resolution__spark.operators.ner import extract_entities
-
-    inits = spark.sparkContext.accumulator(0)
-
-    class FakeModel:
-        def __init__(self):
-            inits.add(1)
-
-        def pipe(self, texts):
-            return [[(t.split()[0], "FAKE")] if t else [] for t in texts]
-
-    df = spark.createDataFrame(
-        [(f"c{i}", f"doc{i} body text") for i in range(12)],
-        ["conv_id", "full_text"],
-    ).repartition(3)
-    rows = extract_entities(df, model_factory=FakeModel).collect()
-    assert len(rows) == 12
-    ents = {r["conv_id"]: r["entities"] for r in rows}
-    for i in range(12):
-        assert list(ents[f"c{i}"][0]) == [f"doc{i}", "FAKE"]
-    # once per partition stream, not once per row (12 rows, 3 partitions)
-    assert 1 <= inits.value <= 3
 
 
 def test_collapse_undirected_max(spark):
@@ -247,35 +68,6 @@ def test_blocking_quality_metrics(spark, tiny_transcripts, tiny_transcripts_sdf)
     assert q["reduction_ratio"] > 0.5
 
 
-def test_blocking_quality_sweep(spark, tiny_transcripts, tiny_transcripts_sdf):
-    """B7 k-sweep (reference visualize_k_value_for_blocking.py:109-173):
-    purity metrics are well-formed and behave monotonically — duplicate
-    families make low-k neighbors purer than high-k ones."""
-    from entity_resolution__spark.operators.blocking import (
-        blocking_quality_sweep,
-        rare_token_keys,
-    )
-    from entity_resolution__spark.operators.canonicalize import canonicalize
-    from entity_resolution__spark.operators.pairs import candidate_pairs
-
-    conv = canonicalize(tiny_transcripts_sdf).persist()
-    pairs = candidate_pairs(rare_token_keys(conv))
-    sweep = blocking_quality_sweep(conv, pairs, k_values=(2, 5, 10))
-    assert set(sweep.keys()) == {2, 5, 10}
-    for k, m in sweep.items():
-        assert set(m) == {"overlap_purity", "jaccard_purity", "avg_cosine",
-                          "reduction_ratio"}
-        assert 0.0 <= m["overlap_purity"] <= 1.0
-        assert 0.0 <= m["jaccard_purity"] <= 1.0
-        assert 0.0 <= m["avg_cosine"] <= 1.0
-    # duplicate families are ~2-4 convs: top-2 neighbors are near-pure,
-    # and purity cannot rise as k grows past the family size
-    assert sweep[2]["jaccard_purity"] > 0.5
-    assert sweep[2]["jaccard_purity"] >= sweep[5]["jaccard_purity"] >= sweep[10]["jaccard_purity"]
-    # directed reduction ratio grows toward 1 as k shrinks
-    assert sweep[2]["reduction_ratio"] > sweep[10]["reduction_ratio"]
-
-
 def test_cluster_edges_chain_star(spark):
     from entity_resolution__spark.operators.cluster import cluster_edges
 
@@ -289,79 +81,3 @@ def test_cluster_edges_chain_star(spark):
     assert star == {("a", "b"), ("a", "c")}
     with pytest.raises(ValueError):
         cluster_edges(clusters, "ring")
-
-
-def test_spacy_adapter_contract(spark):
-    """SpacyAdapter satisfies the injected-factory contract end-to-end
-    through the mapInPandas seam WITHOUT spaCy installed: a stub nlp
-    exposing the spaCy surface the adapter touches (pipe() → docs with
-    .ents of .text/.label_) stands in for the real Language object."""
-    from entity_resolution__spark.operators.ner import (
-        SpacyAdapter,
-        extract_entities,
-    )
-
-    class Ent:
-        def __init__(self, text, label):
-            self.text, self.label_ = text, label
-
-    class Doc:
-        def __init__(self, ents):
-            self.ents = ents
-
-    class FakeNlp:
-        def pipe(self, texts):
-            return [
-                Doc([Ent(w, "ORG") for w in t.split() if w.istitle()])
-                for t in texts
-            ]
-
-    df = spark.createDataFrame(
-        [("c1", "Acme hired Bob from Initech"), ("c2", "nothing capitalized")],
-        ["conv_id", "full_text"],
-    )
-    rows = {
-        r["conv_id"]: r["entities"]
-        for r in extract_entities(
-            df, model_factory=lambda: SpacyAdapter(FakeNlp())
-        ).collect()
-    }
-    assert [(e["text"], e["label"]) for e in rows["c1"]] == [
-        ("Acme", "ORG"),
-        ("Bob", "ORG"),
-        ("Initech", "ORG"),
-    ]
-    assert rows["c2"] == []
-
-
-def test_spacy_adapter_real_if_available(spark):
-    """Runs the real spaCy load chain when spaCy is importable (skips
-    cleanly in this container): the factory must yield a working pipe()
-    even with no model packages downloaded (blank-English fallback)."""
-    pytest.importorskip("spacy")
-    from entity_resolution__spark.operators.ner import spacy_model_factory
-
-    adapter = spacy_model_factory()()
-    out = adapter.pipe(["Apple is a company", ""])
-    assert isinstance(out, list) and len(out) == 2
-    assert all(isinstance(ents, list) for ents in out)
-
-
-def test_xgb_matcher_flag():
-    """model='xgb' is the opt-in REAL-xgboost path (round-5 VERDICT
-    'what's missing' #2). With the library absent the flag must fail
-    fast with an actionable message naming the deterministic
-    equivalent; with it present the trained model must share the
-    predict_proba/threshold surface and separate the toy problem."""
-    from entity_resolution__spark.operators.matcher import train_matcher
-
-    try:
-        import xgboost  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="gbdt"):
-            train_matcher(_labeled(), model="xgb")
-        return
-    m = train_matcher(_labeled(), model="xgb")
-    assert m.metrics["oof_roc_auc"] > 0.9
-    p = m.predict_proba(_labeled(n=100, seed=9))
-    assert ((p >= m.threshold).astype(int) == _labeled(n=100, seed=9)["label"]).mean() > 0.8

@@ -40,6 +40,22 @@ KEEP = {
     "functions/strings.py:lcs_ratio": "the scalar LCS-ratio reference the LCS kernels are tested against",
     "plans/pipeline.py:cohort_seed_edges": "the reference pipeline's E3 cohort-seed edges (paper semantics)",
     "plans/pipeline.py:run_cohort_transitivity": "the reference pipeline's E3 cohort-transitivity output (paper semantics)",
+    # Small tested helpers of the reference's analysis side, kept so this
+    # diet stays within a bounded number of removed tests; next to go
+    # unless a root starts to use them (ROADMAP direction 6).
+    "functions/normalize.py:tokenize": "the Spark-column form of tokenize_series, pinned equal to it",
+    "operators/blocking.py:blocking_quality": "reference B7 pair completeness and reduction ratio of a blocking",
+    "operators/blocking.py:stopwords_by_idf": "reference B8 TF-IDF auto-stopwords",
+    "operators/cluster.py:incremental_clusters": "folds a new edge batch into a prior CLUSTERS assignment without re-blocking",
+    "operators/evaluate.py:f1_optimal_threshold": "reference M2 F1-optimal threshold sweep over scores",
+    "operators/evaluate.py:pr_auc": "reference M4 average precision of scores",
+    "operators/evaluate.py:roc_auc": "reference M4 rank AUC of scores",
+    "operators/graph_export.py:_sym": "the symmetric edge list bfs_subgraph expands over",
+    "operators/graph_export.py:bfs_subgraph": "reference G6 k-hop sampled subgraph",
+    "operators/pairs.py:collapse_undirected_max": "reference B4 undirected max-collapse of scored pairs",
+    "operators/saltjoin.py:dropped_hot_buckets": "audit of the buckets capped_salted_self_join drops",
+    "operators/similarity.py:lsh_bucket_candidates": "random-hyperplane LSH near-neighbor candidates for embeddings",
+    "operators/similarity.py:make_hyperplane_udf": "the hyperplane bucket UDF lsh_bucket_candidates keys on",
 }
 
 

@@ -138,6 +138,7 @@ def test_round5_ops_empty_input_probes(spark):
     identity) result with the right schema, no exceptions."""
     from pyspark.sql import functions as F
 
+    from entity_resolution__spark.operators.cluster import incremental_clusters
     from entity_resolution__spark.operators.dedup import simhash_neardup_pairs
     from entity_resolution__spark.operators.graph_export import louvain_refine
     from entity_resolution__spark.operators.packing import chunk_documents
@@ -156,6 +157,19 @@ def test_round5_ops_empty_input_probes(spark):
     # no edges → labeling passes through unchanged
     got = {r["node"]: r["community"] for r in louvain_refine(empty_edges, labels).collect()}
     assert got == {"a": "a", "b": "b"}
+
+    prior = spark.createDataFrame(
+        [("a", 0, 1)], "conv_id string, cluster_id long, cluster_size int"
+    )
+    no_delta = spark.createDataFrame([], "src string, dst string")
+    out = incremental_clusters(prior, no_delta).collect()
+    assert [(r["conv_id"], r["cluster_id"], r["cluster_size"]) for r in out] == [
+        ("a", 0, 1)
+    ]
+    empty_prior = spark.createDataFrame(
+        [], "conv_id string, cluster_id long, cluster_size int"
+    )
+    assert incremental_clusters(empty_prior, no_delta).count() == 0
 
 
 # ---------------------------------------------------------------------------

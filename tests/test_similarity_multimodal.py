@@ -1,4 +1,4 @@
-"""ANN similarity tests: brute top-k, kNN join, IVF."""
+"""ANN similarity tests: brute top-k, kNN join, hyperplane LSH, IVF."""
 
 from __future__ import annotations
 
@@ -66,6 +66,19 @@ def test_knn_join_topk_refuses_big_query_side(spark, emb):
     with pytest.raises(ValueError, match="max_queries"):
         knn_join_topk(df, q, k=2, max_queries=5)
     assert len(knn_join_topk(df, q, k=1, max_queries=10).collect()) == 10
+
+
+def test_lsh_buckets_find_identical(spark, emb):
+    from entity_resolution__spark.operators.similarity import lsh_bucket_candidates
+
+    df, rows = emb
+    # add an exact duplicate of vec 0 with id 999
+    dup = spark.createDataFrame(
+        [(999, rows[0][1])], "vec_id long, embedding array<double>"
+    )
+    cand = lsh_bucket_candidates(df.union(dup), dim=8, n_planes=6)
+    pairs = {(r["id_left"], r["id_right"]) for r in cand.collect()}
+    assert (0, 999) in pairs  # identical vectors always share every bucket
 
 
 def test_ivf_assign_and_centroids(spark, emb):
