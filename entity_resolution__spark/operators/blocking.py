@@ -9,10 +9,12 @@ The reference blocks by brute-force TF-IDF cosine kNN over all N entities
     vectorized pandas UDF (numpy, Arrow-batched)
 
 Two conversations become a candidate pair iff they share ≥1 key. Hot
-keys (skew) are handled by `salt_blocks`: a block larger than `cap` is
-split into S salted sub-blocks and pairs are generated per sub-block
-PAIR (triangle enumeration), so every original pair is still emitted
-exactly once but no single task holds the whole hot block.
+keys (skew) are handled by `saltjoin.capped_salted_self_join`, which
+`pairs.candidate_pairs` calls: a block larger than `max_block` is
+dropped, and a block larger than `salt_threshold` is split into S salted
+sub-blocks whose pairs are generated per sub-block PAIR (triangle
+enumeration), so every pair is still emitted exactly once but no single
+task holds the whole hot block.
 """
 
 from __future__ import annotations
@@ -69,9 +71,9 @@ def rare_token_keys(
 
 def token_doc_freq(conv: DataFrame) -> DataFrame:
     """(token, df) over the corpus — the one DF-count subplan shared by
-    rare_token_keys / stopwords_by_idf / constraints.stopwords_by_df
-    (one place for its semantics). Map-side combined; shuffle carries one row per
-    distinct (token, partial count)."""
+    rare_token_keys / stopwords_by_idf (one place for its semantics).
+    Map-side combined; shuffle carries one row per distinct (token,
+    partial count)."""
     return (
         conv.select(F.explode("token_set").alias("token"))
         .groupBy("token")

@@ -68,7 +68,9 @@ def _conversation_text_udf(num_perm: int | None):
 
 
 def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame:
-    """transcripts(conv_id, turn_idx, role, text, tool, ts) → CONVERSATIONS.
+    """transcripts(conv_id, turn_idx, role, text, tool, ts) → one row per
+    conversation: (conv_id, n_turns, turn_texts, roles, tools, full_text,
+    norm_text, tokens, token_set, sig, countries).
 
     sort_array on struct(turn_idx, ...) sorts lexicographically by the
     first field — turn_idx — giving the stable turn ordering; ties cannot

@@ -450,7 +450,8 @@ def cluster_edges(clusters: DataFrame, mode: str = "star") -> DataFrame:
 
 
 def assign_clusters(cc: DataFrame, all_nodes: DataFrame) -> DataFrame:
-    """(node, root) + all_nodes(node) → CLUSTERS schema with dense ids.
+    """(node, root) + all_nodes(node) → (conv_id, cluster_id,
+    cluster_size) with dense ids.
 
     Mirrors the reference's global renumber + size attach
     (/root/reference/scripts/apply_transitivity.py:159-168): cluster ids
@@ -484,10 +485,11 @@ def incremental_clusters(
     prior: DataFrame, new_edges: DataFrame, max_iter: int = 50
 ) -> DataFrame:
     """Incremental re-clustering: fold a NEW batch of match edges into
-    an existing CLUSTERS assignment without touching the original pair
-    corpus (the nightly-delta form of the north rule's resumability —
-    yesterday's 10^9-row assignment + today's 10^6 new edges must not
-    re-run blocking/scoring over the whole corpus).
+    an existing (conv_id, cluster_id, cluster_size) assignment without
+    touching the original pair corpus (the nightly-delta form of the
+    north rule's resumability — yesterday's 10^9-row assignment +
+    today's 10^6 new edges must not re-run blocking/scoring over the
+    whole corpus).
 
 
     The prior assignment is re-expressed as its star edges (hub = min
@@ -502,9 +504,10 @@ def incremental_clusters(
     transitive reduction, so the CC result is identical.
 
 
-    prior: CLUSTERS schema (conv_id, cluster_id, cluster_size).
+    prior: (conv_id, cluster_id, cluster_size).
     new_edges: (src, dst).
-    Output: CLUSTERS schema with dense ids in sorted-min-member order.
+    Output: (conv_id, cluster_id, cluster_size) with dense ids in
+    sorted-min-member order.
     """
     star = cluster_edges(prior, mode="star").select("src", "dst")
     edges = star.unionByName(new_edges.select("src", "dst"))

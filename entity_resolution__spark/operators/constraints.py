@@ -2,25 +2,24 @@
 
 Rebuilds the reference's constraint stage
 (/root/reference/scripts/apply_constraints.py:15-67) as Catalyst
-anti-joins:
+column expressions, one projection over the thresholded pairs:
 
-  C2 apply_constraints   threshold filter → anti-join prune set; kept +
-                         dropped outputs + stats
-  C3 geo-mismatch prune  both sides mention ≥1 whitelisted country and
-                         the sets are disjoint → prune (conservative
+  C2 threshold           prob_match ≥ keep threshold; kept and dropped
+                         are the two sides of the geo flag
+  C3 geo-mismatch flag   both sides mention ≥1 whitelisted country and
+                         the sets are disjoint → geo_pruned (conservative
                          when either side has no evidence,
                          geo_constraints.py:143-147)
-  C4 token-overlap prune stopword-aware Jaccard < 0.20 → prune. (The
-                         reference module is broken as shipped — bad
-                         `_tokenize` import at
-                         token_overlap_constraint.py:8 — rebuilt working
-                         per SURVEY.md §2.6.)
+
+The reference's C4 stopword-aware token-overlap prune has no counterpart:
+its module is broken as shipped (SURVEY.md §2.6), and featurize's raw
+token-Jaccard pre-gate applies the cheap form before scoring.
 
 Country extraction runs ONCE PER CONVERSATION (the reference recomputes
 per pair via driver dict, apply_transitivity.py:99-105), then both pair
 sides join the per-entity array — an O(N) derivation + two hash joins
 instead of O(pairs) regex work. The kernel (`countries_series`) runs
-inside canonicalize's Arrow UDF, so `conv_countries` only selects the
+inside canonicalize's Arrow UDF, so `flag_geo` only reads the
 `countries` column; `extract_countries` wraps the same kernel as a
 standalone UDF.
 """
@@ -124,88 +123,21 @@ def extract_countries(texts: pd.Series) -> pd.Series:
     return countries_series(texts)
 
 
-def conv_countries(conv: DataFrame) -> DataFrame:
-    """(conv_id, countries): the column canonicalize derived once per
-    conversation."""
-    return conv.select("conv_id", "countries")
-
-
-def geo_prune_pairs(pairs: DataFrame, countries: DataFrame) -> DataFrame:
-    """Pairs to prune: both sides have country evidence AND disjoint sets
-    (geo_constraints.py:112-152)."""
-    cl = countries.select(
-        F.col("conv_id").alias("id_left"), F.col("countries").alias("c_l")
-    )
-    cr = countries.select(
-        F.col("conv_id").alias("id_right"), F.col("countries").alias("c_r")
-    )
-    joined = pairs.join(cl, "id_left").join(cr, "id_right")
-    return joined.filter(
+def flag_geo(scored: DataFrame, conv: DataFrame, min_prob: float = 0.45) -> DataFrame:
+    """Pairs with prob_match ≥ min_prob, plus `geo_pruned`: both sides
+    have country evidence AND the sets are disjoint
+    (geo_constraints.py:112-152, apply_constraints.py:40-66). A side
+    missing from `conv` has no evidence, so its pair is not pruned."""
+    cl = conv.select(F.col("conv_id").alias("id_left"), F.col("countries").alias("c_l"))
+    cr = conv.select(F.col("conv_id").alias("id_right"), F.col("countries").alias("c_r"))
+    pruned = (
         (F.size("c_l") > 0)
         & (F.size("c_r") > 0)
         & (F.size(F.array_intersect("c_l", "c_r")) == 0)
-    ).select("id_left", "id_right")
-
-
-def stopwords_by_df(
-    conv: DataFrame, cutoff: float = 0.30, n_docs: int | None = None
-) -> DataFrame:
-    """Tokens appearing in ≥ cutoff of conversations
-    (stopwords_extractor.py:10-22 semantics, distributed)."""
-    from entity_resolution__spark.operators.blocking import token_doc_freq
-
-    n = n_docs if n_docs is not None else conv.count()
-    return token_doc_freq(conv).filter(F.col("df") >= cutoff * n).select("token")
-
-
-def token_overlap_prune_pairs(
-    pairs_with_tokens: DataFrame,
-    stopwords: DataFrame,
-    min_jaccard: float = 0.20,
-) -> DataFrame:
-    """Prune pairs with stopword-filtered Jaccard < min_jaccard; SKIP
-    (never prune) when either side is empty after stopword removal
-    (token_overlap_constraint.py:16-70 semantics)."""
-    sw = F.broadcast(stopwords).agg(F.collect_set("token").alias("sw"))
-    df = pairs_with_tokens.crossJoin(sw)
-    df = df.withColumn("t_l", F.array_except("token_set_l", "sw")).withColumn(
-        "t_r", F.array_except("token_set_r", "sw")
     )
-    # t_l/t_r are sets (array_except of distinct token_set), so
-    # |union| = |t_l|+|t_r|-inter — no array_union materialization
-    inter = F.size(F.array_intersect("t_l", "t_r")).cast("double")
-    union = (F.size("t_l") + F.size("t_r")).cast("double") - inter
-    jac = inter / union
-    return df.filter(
-        (F.size("t_l") > 0) & (F.size("t_r") > 0) & (jac < F.lit(min_jaccard))
-    ).select("id_left", "id_right")
-
-
-def apply_constraints(
-    scored: DataFrame,
-    prune_sets: list[DataFrame],
-    min_prob: float = 0.45,
-    persisted_out: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(kept, dropped): threshold filter then anti-join the union of
-    prune sets (apply_constraints.py:40-66). `dropped` logs the pruned
-    edges (the *_dropped_geo.csv analog).
-
-    `persisted_out`: optional sink the internally persisted prune set is
-    appended to, so the caller can unpersist once both outputs are
-    materialized (ADVICE round 2: the persist leaked)."""
-    thresholded = scored.filter(F.col("prob_match") >= F.lit(min_prob))
-    if not prune_sets:
-        return thresholded, thresholded.limit(0)
-    prune = prune_sets[0]
-    for p in prune_sets[1:]:
-        prune = prune.unionByName(p)
-    # both outputs consume the prune set (anti + semi join) — persist it
-    # so the country-extraction UDF and prune joins run once, not per
-    # output branch
-    prune = prune.dropDuplicates(["id_left", "id_right"]).persist()
-    if persisted_out is not None:
-        persisted_out.append(prune)
-    kept = thresholded.join(prune, ["id_left", "id_right"], "left_anti")
-    dropped = thresholded.join(prune, ["id_left", "id_right"], "left_semi")
-    return kept, dropped
+    return (
+        scored.filter(F.col("prob_match") >= F.lit(min_prob))
+        .join(cl, "id_left", "left")
+        .join(cr, "id_right", "left")
+        .select(*scored.columns, F.coalesce(pruned, F.lit(False)).alias("geo_pruned"))
+    )

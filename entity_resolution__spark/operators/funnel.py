@@ -11,8 +11,8 @@ the standard windowed-funnel semantics, cf. ClickHouse
 
 Scale shape: one conditional aggregate per step, every groupBy/join
 keyed on the SAME user column — at 100 TB this is k co-partitioned
-hash exchanges over a user-bucketed event table (with bucketed staging,
-plans/checkpoint.py, the exchanges collapse entirely). No window over
+hash exchanges over a user-bucketed event table (a bucketed staging
+of that table would collapse the exchanges entirely). No window over
 the raw event stream, no per-user event collection: state per user is
 one timestamp per step regardless of event count.
 """

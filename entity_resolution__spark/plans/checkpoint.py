@@ -19,7 +19,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import shutil
 import time
 import uuid
@@ -167,117 +166,6 @@ class StageStore(_StageStoreContract):
         for d in others[:-1]:
             shutil.rmtree(os.path.join(stage_dir, d), ignore_errors=True)
         return out
-
-    def commit_bucketed(
-        self,
-        df: DataFrame,
-        stage: str,
-        fp: str,
-        n_buckets: int,
-        bucket_cols: list[str],
-        sort_cols: list[str] | None = None,
-        lineage: list[str] | None = None,
-    ) -> DataFrame:
-        """Commit a stage snapshot BUCKETED by its downstream join key.
-
-        The big-pipeline lever plain parquet snapshots can't offer: two
-        stages bucketed by the same key with the same bucket count
-        sort-merge-join with NO Exchange on either side — the shuffle is
-        paid once at write time and every downstream consumer (re-join
-        after resume, incremental delta merge, next round's pass over
-        the same key) reads co-located buckets. At 100 TB that converts
-        a per-query full shuffle of the fact table into a one-time cost.
-
-        Spark only persists bucketing through the catalog, so this path
-        writes an EXTERNAL table (data under the store root, metadata in
-        the session catalog). The default in-memory catalog loses table
-        metadata across sessions — on a real deployment the catalog is
-        Hive/Glue/Iceberg and the bucket spec survives; here the
-        manifest records the spec, and a fresh session falls back to
-        read() semantics (plain parquet at the same path, one re-shuffle
-        to recover co-location). Tests pin the no-Exchange plan within
-        a session (tests/test_checkpoint_backends.py).
-        """
-        t0 = time.monotonic()
-        stage_dir = self._dir(stage)
-        snap_id = f"snap-{self.run_id}-{uuid.uuid4().hex[:8]}"
-        data_dir = os.path.join(stage_dir, snap_id)
-        os.makedirs(stage_dir, exist_ok=True)
-        spark = df.sparkSession
-        # sanitize the SQL identifier (round-6 ADVICE: a stage name with
-        # a dot/space broke DROP TABLE/saveAsTable — only '-' was mapped).
-        # The sanitizing is many-to-one ('s.x' and 's_x' both give 's_x'),
-        # so a short hash of the raw name keeps two such stages of one
-        # run from dropping each other's table.
-        safe = re.sub(r"[^A-Za-z0-9_]", "_", f"{stage}_{self.run_id}")
-        tag = hashlib.sha256(stage.encode()).hexdigest()[:8]
-        table = f"er_stage_{safe}_{tag}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        w = df.write.mode("overwrite").option("path", data_dir).bucketBy(
-            n_buckets, *bucket_cols
-        )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(table)
-        out = spark.table(table)
-        # rows from the parquet footers, same as commit() — the old
-        # out.count() re-scanned the snapshot it had just written
-        import pyarrow.parquet as pq
-
-        rows_out = sum(
-            int(pq.ParquetFile(os.path.join(data_dir, fn)).metadata.num_rows)
-            for fn in os.listdir(data_dir)
-            if fn.endswith(".parquet")
-        )
-        manifest = {
-            "stage": stage,
-            "snapshot_id": snap_id,
-            "fingerprint": fp,
-            "run_id": self.run_id,
-            "committed": True,
-            "lineage": lineage or [],
-            "bucket_spec": {
-                "table": table,
-                "n_buckets": n_buckets,
-                "bucket_cols": bucket_cols,
-                "sort_cols": sort_cols or [],
-            },
-            "metrics": {
-                "rows_out": rows_out,
-                "wall_ms": int((time.monotonic() - t0) * 1000),
-            },
-        }
-        tmp = self._manifest_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path(stage))
-        # same snapshot GC as commit(): keep current + most recent other
-        # (round-6 ADVICE: repeated bucketed recommits leaked disk)
-        others = sorted(
-            (d for d in os.listdir(stage_dir)
-             if d.startswith("snap-") and d != snap_id),
-            key=lambda d: os.path.getmtime(os.path.join(stage_dir, d)),
-        )
-        for d in others[:-1]:
-            shutil.rmtree(os.path.join(stage_dir, d), ignore_errors=True)
-        return out
-
-    def read_bucketed(self, spark: SparkSession, stage: str) -> DataFrame:
-        """Catalog-backed read of a bucketed snapshot (bucket-aware plan
-        within the committing session / a shared metastore); falls back
-        to the plain parquet files when the catalog no longer knows the
-        table (fresh in-memory catalog after restart)."""
-        m = self.manifest(stage)
-        if not m or "bucket_spec" not in m:
-            return self.read(spark, stage)
-        table = m["bucket_spec"]["table"]
-        if spark.catalog.tableExists(table):
-            return spark.table(table)
-        return spark.read.parquet(
-            os.path.join(self._dir(stage), m["snapshot_id"])
-        )
 
 
 @dataclass

@@ -7,11 +7,14 @@ Stage DAG (each optionally checkpointed via StageStore, north_rule):
   conversations ─ blocking keys (tokens ∪ bands of sig) ─ blocks
   blocks ─ candidate_pairs (salted within-block join) ─ pairs
   pairs + conversations ─ featurize ─ score ─ scored
-  scored ─ threshold + geo (countries column) / token constraints ─ edges
+  scored ─ threshold + geo_pruned flag (countries column) ─ edges;
+           kept and dropped are the two sides of the flag
   edges ─ large-star/small-star CC ─ clusters (dense ids + sizes)
 
 Conversation text crosses into Python once per pass, in canonicalize;
-blocking and the geo constraint read the columns it emitted.
+blocking and the geo constraint read the columns it emitted. With a
+store, the edges (flag included) are one committed snapshot; without
+one they stay lazy and run inside the clusters stage.
 
 Mirrors the reference entry points E1–E3 (SURVEY.md §3) as one lazy
 Spark DAG with explicit stage boundaries.
@@ -35,13 +38,7 @@ from entity_resolution__spark.operators.cluster import (
     cohort_transitive_clusters,
     connected_components,
 )
-from entity_resolution__spark.operators.constraints import (
-    apply_constraints,
-    conv_countries,
-    geo_prune_pairs,
-    stopwords_by_df,
-    token_overlap_prune_pairs,
-)
+from entity_resolution__spark.operators.constraints import flag_geo
 from entity_resolution__spark.operators.pairs import attach_pair_payload, candidate_pairs
 from entity_resolution__spark.operators.score import featurize_pairs, score_pairs
 from entity_resolution__spark.plans.checkpoint import StageStore
@@ -65,13 +62,6 @@ class ERConfig:
     min_token_jaccard: float = 0.15
     keep_threshold: float = 0.45
     cluster_threshold: float = 0.60
-    # C4 standalone form (reference token_overlap_constraint.py): prune
-    # scored pairs whose STOPWORD-FILTERED token jaccard < 0.20, skipping
-    # pairs with an empty side. Off by default — the featurize pre-gate
-    # already applies the cheap raw-token form before the feature UDF.
-    use_token_overlap_constraint: bool = False
-    token_overlap_min_jaccard: float = 0.20
-    stopword_df_cutoff: float = 0.30
     # clustering
     cc_max_iter: int = 50
     # Not semantic and no longer read: every stage boundary is timed
@@ -98,17 +88,11 @@ class ERResult:
     clusters: DataFrame
     cc_iterations: int = 0
     stage_wall: dict = field(default_factory=dict)  # stage → wall seconds
-    # store-less mode: the transient persisted prune set is still
-    # referenced by the LAZY edges/clusters plans — call
-    # release_transients() once the outputs are materialized, or they
-    # stay cached for the session's lifetime (CacheManager holds strong
-    # refs to cached SQL plans; ContextCleaner will NOT reclaim them)
-    transient_persists: list = field(default_factory=list)
 
     def release_transients(self) -> None:
-        for df in self.transient_persists:
-            df.unpersist()
-        self.transient_persists.clear()
+        """A no-op: a run caches nothing in the session, so there is
+        nothing to release. Kept because perfbench/workloads.py calls it
+        after every store-less pass."""
 
 
 def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> DataFrame:
@@ -240,9 +224,7 @@ def run_pipeline(
     )
     conv = staged("conversations", lambda: conv_plan, columns=conv_plan.columns)
 
-    # one corpus count, threaded through every operator that needs N
-    # (blocking DF caps, stopword cutoffs); also warms the
-    # conv persist so downstream branches read from cache
+    # one corpus count, threaded to the blocking DF caps
     n_docs = conv.count()
 
     blocks = staged(
@@ -294,63 +276,15 @@ def run_pipeline(
 
     scored = staged("scores", compute_scored, ["candidate_pairs", "conversations"])
 
-    # transient persists released once both edge outputs are committed
-    _edge_persists: list[DataFrame] = []
+    # the thresholded pairs and their geo flag, computed once: committed
+    # as one snapshot with a store, lazy without (an eager local
+    # checkpoint here cost more than recomputing inside clusters)
+    def compute_edges() -> DataFrame:
+        return flag_geo(scored, conv, cfg.keep_threshold)
 
-    def compute_edges() -> tuple[DataFrame, DataFrame]:
-        prune_sets = [geo_prune_pairs(scored, conv_countries(conv))]
-        if cfg.use_token_overlap_constraint:
-            sw = stopwords_by_df(conv, cfg.stopword_df_cutoff, n_docs=n_docs)
-            tl = conv.select(
-                F.col("conv_id").alias("id_left"),
-                F.col("token_set").alias("token_set_l"),
-            )
-            tr = conv.select(
-                F.col("conv_id").alias("id_right"),
-                F.col("token_set").alias("token_set_r"),
-            )
-            pairs_tokens = scored.join(tl, "id_left").join(tr, "id_right")
-            prune_sets.append(
-                token_overlap_prune_pairs(
-                    pairs_tokens, sw, min_jaccard=cfg.token_overlap_min_jaccard
-                )
-            )
-        return apply_constraints(
-            scored,
-            prune_sets,
-            min_prob=cfg.keep_threshold,
-            persisted_out=_edge_persists,
-        )
-
-    # compute (kept, dropped) ONCE and serve both stages from the single
-    # pair — the two outputs share the persisted prune set. The
-    # computation is LAZY behind the stage gate (ADVICE round 2): a warm
-    # resume that serves both edge stages from committed snapshots never
-    # plans the prune joins at all.
-    _edge_cache: dict[str, tuple[DataFrame, DataFrame]] = {}
-
-    def _edges_pair() -> tuple[DataFrame, DataFrame]:
-        if "kd" not in _edge_cache:
-            _edge_cache["kd"] = compute_edges()
-        return _edge_cache["kd"]
-
-    if store is not None:
-        kept = staged("edges", lambda: _edges_pair()[0], ["scores"])
-        dropped = staged("edges_dropped", lambda: _edges_pair()[1], ["scores"])
-        # both outputs are committed snapshots now — the transient
-        # prune cache has served its purpose
-        for df in _edge_persists:
-            df.unpersist()
-        _edge_persists = []
-    else:
-        # store-less mode returns LAZY kept/dropped: the prune cache must
-        # outlive this function (they feed both downstream branches).
-        # They are handed to the caller via ERResult.transient_persists
-        # — long-lived sessions running many store-less pipelines must
-        # release them after materializing, or they accumulate in
-        # executor storage memory (round-3 review: CacheManager holds
-        # strong refs, GC does not reclaim cached SQL plans)
-        kept, dropped = _edges_pair()
+    edges = compute_edges() if store is None else staged("edges", compute_edges, ["scores"])
+    kept = edges.filter(~F.col("geo_pruned")).drop("geo_pruned")
+    dropped = edges.filter(F.col("geo_pruned")).drop("geo_pruned")
 
     cluster_edges = kept.filter(
         F.col("prob_match") >= F.lit(cfg.cluster_threshold)
@@ -385,5 +319,4 @@ def run_pipeline(
         clusters=clusters,
         cc_iterations=cc_iter_store.get("iterations", 0),
         stage_wall=stage_wall,
-        transient_persists=list(_edge_persists),
     )

@@ -9,6 +9,10 @@ pairwise F1 ≥ 0.99 on labeled pairs sharing a blocking key
 (BASELINE.json.metric). Similarity kernels are shared with the engine
 (entity_resolution__spark.functions.strings) — cluster parity requires
 identical kernels on both sides.
+
+`edges_by_prune_set` is the one Spark form here: the engine's earlier
+constraint stage (a prune set, then anti- and semi-joins), kept as the
+reference its one-pass geo flag must agree with.
 """
 
 from __future__ import annotations
@@ -78,6 +82,33 @@ def countries_ref(text: str | None) -> list[str]:
     for pat, repl in _ACRONYM_RES:
         t = pat.sub(repl, t)
     return sorted({c for c, cre in _COUNTRY_RES if cre.search(t)})
+
+
+def edges_by_prune_set(scored, conv, min_prob: float = 0.45):
+    """(kept, dropped) in the prune-set form (apply_constraints.py:40-66):
+    threshold, then the distinct pairs whose two sides both name
+    countries and share none (inner joins on conv, so a side missing from
+    conv prunes nothing), anti-joined for kept and semi-joined for
+    dropped."""
+    from pyspark.sql import functions as F
+
+    thresholded = scored.filter(F.col("prob_match") >= F.lit(min_prob))
+    cl = conv.select(F.col("conv_id").alias("id_left"), F.col("countries").alias("c_l"))
+    cr = conv.select(F.col("conv_id").alias("id_right"), F.col("countries").alias("c_r"))
+    prune = (
+        thresholded.join(cl, "id_left")
+        .join(cr, "id_right")
+        .filter(
+            (F.size("c_l") > 0)
+            & (F.size("c_r") > 0)
+            & (F.size(F.array_intersect("c_l", "c_r")) == 0)
+        )
+        .select("id_left", "id_right")
+        .dropDuplicates()
+    )
+    kept = thresholded.join(prune, ["id_left", "id_right"], "left_anti")
+    dropped = thresholded.join(prune, ["id_left", "id_right"], "left_semi")
+    return kept, dropped
 
 
 def canonicalize_pd(transcripts: pd.DataFrame) -> pd.DataFrame:

@@ -1,5 +1,6 @@
 """Geo-constraint truth table (reference geo_constraints.py:143-147
-conservative semantics) + dotted-acronym handling + threshold/anti-join."""
+conservative semantics, with the keep threshold) + dotted-acronym
+handling."""
 
 from __future__ import annotations
 
@@ -9,9 +10,8 @@ from hypothesis import strategies as st
 
 from entity_resolution__spark.operators.constraints import (
     COUNTRY_WHITELIST,
-    apply_constraints,
     extract_countries,
-    geo_prune_pairs,
+    flag_geo,
 )
 
 
@@ -77,62 +77,41 @@ def test_extract_countries_reference_aliases():
 
 
 def test_geo_prune_truth_table(spark):
-    countries = spark.createDataFrame(
+    conv = spark.createDataFrame(
         [
             ("a", ["Japan"]),
             ("b", ["Canada"]),
             ("c", ["Japan", "Canada"]),
             ("d", []),
+            ("e", ["Canada"]),
+            ("f", ["France"]),
         ],
-        ["conv_id", "countries"],
+        "conv_id string, countries array<string>",
     )
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("c", "d")],
-        ["id_left", "id_right"],
-    )
-    pruned = {
-        (r["id_left"], r["id_right"])
-        for r in geo_prune_pairs(pairs, countries).collect()
+    # (id_left, id_right, prob_match) → geo_pruned, or None when the pair
+    # is under the 0.45 keep threshold and leaves both outputs
+    cases = {
+        ("a", "b", 0.9): True,    # disjoint evidence → prune
+        ("a", "c", 0.5): False,   # overlap → keep
+        ("a", "d", 0.8): False,   # empty country list → no evidence, keep
+        ("c", "d", 0.7): False,   # empty country list → keep
+        ("b", "c", 0.45): False,  # exactly at threshold, overlap → kept
+        ("c", "f", 0.45): True,   # exactly at threshold, disjoint → dropped
+        ("a", "e", 0.44): None,   # below threshold, though disjoint
+        ("a", "z", 0.9): False,   # id missing from conv → no evidence, keep
+        ("y", "z", 0.9): False,   # both ids missing → keep
     }
-    # disjoint evidence → prune; overlap or missing evidence → keep
-    assert pruned == {("a", "b")}
-
-
-def test_apply_constraints_threshold_and_antijoin(spark):
     scored = spark.createDataFrame(
-        [
-            ("a", "b", 0.9, 1),
-            ("a", "c", 0.5, 0),
-            ("a", "d", 0.44, 0),  # below 0.45 → dropped by threshold
-            ("b", "c", 0.45, 0),  # exactly at threshold → kept
-        ],
-        ["id_left", "id_right", "prob_match", "pred_match"],
+        [(l, r, p, int(p >= 0.6)) for l, r, p in cases],
+        "id_left string, id_right string, prob_match double, pred_match int",
     )
-    prune = spark.createDataFrame([("a", "b")], ["id_left", "id_right"])
-    kept, dropped = apply_constraints(scored, [prune], min_prob=0.45)
-    k = {(r["id_left"], r["id_right"]) for r in kept.collect()}
-    d = {(r["id_left"], r["id_right"]) for r in dropped.collect()}
-    assert k == {("a", "c"), ("b", "c")}
-    assert d == {("a", "b")}
-
-
-def test_stopwords_by_df(spark):
-    from entity_resolution__spark.operators.constraints import stopwords_by_df
-
-    conv = spark.createDataFrame(
-        [
-            ("a", ["the", "tokyo", "lab"]),
-            ("b", ["the", "osaka"]),
-            ("c", ["the", "kyoto", "lab"]),
-            ("d", ["nagoya"]),
-        ],
-        ["conv_id", "token_set"],
-    )
-    # 'the' df=3/4, 'lab' df=2/4 → cutoff 0.5 keeps both; 0.6 only 'the'
-    sw50 = {r["token"] for r in stopwords_by_df(conv, cutoff=0.5).collect()}
-    assert sw50 == {"the", "lab"}
-    sw60 = {r["token"] for r in stopwords_by_df(conv, cutoff=0.6, n_docs=4).collect()}
-    assert sw60 == {"the"}
+    flagged = flag_geo(scored, conv, min_prob=0.45)
+    assert flagged.columns == scored.columns + ["geo_pruned"]
+    got = {
+        (r["id_left"], r["id_right"], r["prob_match"]): r["geo_pruned"]
+        for r in flagged.collect()
+    }
+    assert got == {k: v for k, v in cases.items() if v is not None}
 
 
 def test_stopwords_by_idf(spark):
@@ -147,35 +126,6 @@ def test_stopwords_by_idf(spark):
     # exceeds the 20% df cut → stopwords; singletons (df=1 < 0.2·8) kept
     sw = {r["token"] for r in stopwords_by_idf(conv, idf_pct=0.20, df_cut=0.20).collect()}
     assert sw == {"the", "and"}
-
-
-def test_token_overlap_prune_skip_when_empty(spark):
-    """Reference C4 semantics (token_overlap_constraint.py:16-70): prune
-    when stopword-filtered jaccard < cut, but NEVER when either side is
-    empty after stopword removal."""
-    from entity_resolution__spark.operators.constraints import (
-        token_overlap_prune_pairs,
-    )
-
-    pairs = spark.createDataFrame(
-        [
-            # disjoint informative tokens → jaccard 0 → prune
-            ("a", "b", ["the", "tokyo", "lab"], ["the", "osaka", "inst"]),
-            # same informative tokens → jaccard 1 → keep
-            ("a", "c", ["the", "tokyo", "lab"], ["tokyo", "lab"]),
-            # left side all stopwords → empty after removal → SKIP (keep)
-            ("a", "d", ["the"], ["osaka", "inst"]),
-            # overlap 1/3 ≥ 0.2 → keep
-            ("b", "c", ["tokyo", "lab"], ["tokyo", "inst"]),
-        ],
-        ["id_left", "id_right", "token_set_l", "token_set_r"],
-    )
-    sw = spark.createDataFrame([("the",)], ["token"])
-    pruned = {
-        (r["id_left"], r["id_right"])
-        for r in token_overlap_prune_pairs(pairs, sw, min_jaccard=0.20).collect()
-    }
-    assert pruned == {("a", "b")}
 
 
 def test_extract_countries_spark(spark):

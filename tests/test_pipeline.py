@@ -13,7 +13,7 @@ from entity_resolution__spark.data.synth import make_labeled_pairs, make_transcr
 from entity_resolution__spark.plans.checkpoint import StageStore
 from entity_resolution__spark.plans.pipeline import ERConfig, run_pipeline
 from entity_resolution__spark.schema import TRANSCRIPTS
-from tests.oracle import pairwise_f1, reference_clusters
+from tests.oracle import edges_by_prune_set, pairwise_f1, reference_clusters
 
 
 @pytest.fixture(scope="module")
@@ -85,9 +85,9 @@ def test_resume_from_snapshot(spark, tiny_transcripts_sdf, tmp_path_factory):
 def test_warm_resume_skips_edge_recompute(
     spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch
 ):
-    """ADVICE round 2: a fully-warm resume must serve the edge stages
-    from committed snapshots WITHOUT re-running the country-extraction
-    pass (compute_edges used to execute eagerly before the stage gate)."""
+    """ADVICE round 2: a fully-warm resume must serve the edge stage
+    from its committed snapshot WITHOUT re-running the geo flag (the
+    edge computation used to execute eagerly before the stage gate)."""
     import entity_resolution__spark.plans.pipeline as plmod
 
     wh = str(tmp_path_factory.mktemp("warehouse_warm"))
@@ -96,16 +96,16 @@ def test_warm_resume_skips_edge_recompute(
     c1 = r1.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
 
     calls: list[int] = []
-    orig = plmod.conv_countries
+    orig = plmod.flag_geo
 
     def spy(*a, **k):
         calls.append(1)
         return orig(*a, **k)
 
-    monkeypatch.setattr(plmod, "conv_countries", spy)
+    monkeypatch.setattr(plmod, "flag_geo", spy)
     r2 = run_pipeline(spark, tiny_transcripts_sdf, cfg, store=StageStore(wh))
     c2 = r2.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
-    assert calls == [], "warm resume re-ran the country-extraction pass"
+    assert calls == [], "warm resume re-ran the geo flag"
     assert c1.equals(c2)
 
 
@@ -154,17 +154,62 @@ def test_stage_fingerprint_tracks_lineage(spark, tmp_path_factory):
 
 
 def test_release_transients_storeless(spark, tiny_transcripts_sdf):
-    """Store-less runs hand their persisted dimensions to the caller;
-    release_transients() unpersists them (round-3 review: CacheManager
-    holds strong refs — they never leave executor memory on their own)."""
+    """A store-less run caches nothing in the session, so there is nothing
+    for release_transients() to free: the stage boundaries are local
+    checkpoints and the edges a lazy projection. A long-lived session
+    (the oracle gate's entry never releases) accumulates nothing."""
+    spark.catalog.clearCache()
     res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(use_minhash=False))
     res.clusters.count()
-    assert res.transient_persists
-    assert all(df.is_cached for df in res.transient_persists)
-    kept = list(res.transient_persists)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
     res.release_transients()
-    assert res.transient_persists == []
-    assert all(not df.is_cached for df in kept)
+    assert cache.isEmpty()
+
+
+# Two conversations that differ only in the country they name: they score
+# far above the keep threshold and the geo flag must drop their pair.
+_GEO_CONFLICT = [
+    (f"geo_{country[:2].lower()}", i, role, text.format(country), None, None)
+    for country in ("Japan", "Canada")
+    for i, (role, text) in enumerate(
+        [
+            ("user", "Hi, I run the quantum photonics lab at the {} campus of Northwind Institute"),
+            ("user", "Please summarize the spectrometer calibration notes from Tuesday"),
+            ("assistant", "Done: calibration drift stayed under two nanometres"),
+        ]
+    )
+]
+
+
+@pytest.mark.parametrize("stored", [False, True], ids=["storeless", "stored"])
+def test_edges_match_prune_set_reference(
+    spark, tiny_transcripts_sdf, tmp_path_factory, stored
+):
+    """The one-pass geo flag splits the thresholded pairs exactly as the
+    prune-set / anti-join form in tests/oracle.py does, in both modes, on
+    the tiny fixture plus one geo-conflicting pair."""
+    sdf = tiny_transcripts_sdf.unionByName(
+        spark.createDataFrame(_GEO_CONFLICT, schema=TRANSCRIPTS)
+    )
+    cfg = ERConfig(use_minhash=False)
+    store = StageStore(str(tmp_path_factory.mktemp("warehouse_edges"))) if stored else None
+    res = run_pipeline(spark, sdf, cfg, store=store)
+    kept, dropped = edges_by_prune_set(
+        res.scored, res.conversations, min_prob=cfg.keep_threshold
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*res.scored.columns).collect())
+
+    assert res.edges.columns == res.scored.columns
+    assert rows(res.edges) == rows(kept)
+    assert rows(res.dropped) == rows(dropped)
+    assert rows(res.edges)
+    assert [r[:2] for r in rows(res.dropped)] == [("geo_ca", "geo_ja")]
+    if stored:  # one edges snapshot holds both sides of the flag
+        assert "geo_pruned" in store.read(spark, "edges").columns
+        assert store.manifest("edges_dropped") is None
 
 
 def test_new_input_invalidates_snapshots(spark, tmp_path_factory):
@@ -187,20 +232,6 @@ def test_new_input_invalidates_snapshots(spark, tmp_path_factory):
     assert store2.manifest("clusters")["snapshot_id"] != snap_clusters_a
     # output reflects input B, not a stale replay of A
     assert r_b.clusters.count() == b.select("conv_id").distinct().count()
-
-
-def test_token_overlap_constraint_wiring(spark, tiny_transcripts, tiny_transcripts_sdf):
-    """C4 standalone form wired behind ERConfig: stopword-aware prune
-    keeps the F1 gate green on the fixtures (true pairs share far more
-    than 20% of informative tokens)."""
-    res = run_pipeline(
-        spark, tiny_transcripts_sdf, ERConfig(use_token_overlap_constraint=True)
-    )
-    clusters = res.clusters.toPandas()
-    gold = reference_clusters(tiny_transcripts, threshold=0.60)
-    labeled = make_labeled_pairs(tiny_transcripts, seed=42)
-    f1 = pairwise_f1(labeled, clusters, gold)
-    assert f1 >= 0.99, f"pairwise F1 with token-overlap constraint {f1:.4f}"
 
 
 def test_single_conversation_gives_one_cluster(spark):

@@ -57,9 +57,11 @@ def test_one_python_crossing_per_conversation(spark):
     """canonicalize ships the text to Python once (one ArrowEvalPython
     node); blocking and the geo constraint read its columns and add no
     Python node of their own."""
+    from pyspark.sql import functions as F
+
     from entity_resolution__spark.data.synth import make_transcripts
     from entity_resolution__spark.operators.canonicalize import canonicalize
-    from entity_resolution__spark.operators.constraints import conv_countries
+    from entity_resolution__spark.operators.constraints import flag_geo
     from entity_resolution__spark.plans.pipeline import ERConfig, build_blocks
     from entity_resolution__spark.schema import TRANSCRIPTS
 
@@ -71,6 +73,11 @@ def test_one_python_crossing_per_conversation(spark):
     conv = canonicalize(transcripts)
     assert _plan_of(conv).count("ArrowEvalPython") == 1, _plan_of(conv)
     conv = conv.localCheckpoint(eager=True)
-    for df in (build_blocks(conv, ERConfig(), n_docs=conv.count()), conv_countries(conv)):
+    scored = conv.select(
+        F.col("conv_id").alias("id_left"),
+        F.col("conv_id").alias("id_right"),
+        F.lit(1.0).alias("prob_match"),
+    )
+    for df in (build_blocks(conv, ERConfig(), n_docs=conv.count()), flag_geo(scored, conv)):
         plan = _plan_of(df)
         assert "ArrowEvalPython" not in plan, plan

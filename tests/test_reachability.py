@@ -1,16 +1,19 @@
-"""Every package function and class is reached from a root, or kept on purpose.
+"""Every package function, class, method and constant is reached from a
+root, or kept on purpose.
 
 The roots are what runs the engine: `__spark_entry__.py` (the oracle
 gate's entry and queries), `main.py`, `bench.py`, `perfbench/*.py` and
 `tools/*.py`. Tests are not roots: code that only a test calls is dead.
 
 The closure is over names, from the AST (comments and docstrings never
-count): a top-level def or class of a package module is reached when its
-name is referenced from a root or from the body of a reached def. A
-module's own top-level statements (constants, decorators, defaults) run on
-import, so they count as reached once any reached code names the module.
-Names are matched without their module, so two defs that share a name keep
-each other alive; the check can only err toward keeping code.
+count): a top-level def, class or module-level constant of a package
+module is reached when its name is referenced from a root or from the
+body of reached code. A method is reached when its class is and its name
+is referenced (dunders need only the class: Python calls them). A
+module's other top-level statements (imports, calls, guarded blocks) run
+on import, so they count as reached once any reached code names the
+module. Names are matched without their module, so two defs that share
+a name keep each other alive; the check can only err toward keeping code.
 
 Stdlib only, no Spark.
 """
@@ -18,6 +21,7 @@ Stdlib only, no Spark.
 from __future__ import annotations
 
 import ast
+import copy
 import glob
 import os
 
@@ -80,49 +84,87 @@ def _parse(rel: str) -> ast.Module:
         return ast.parse(fh.read(), filename=rel)
 
 
-def package_units():
-    """({unit: referenced names}, {module name: module-body unit})."""
-    units, modules = {}, {}
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
+def _assigned(node) -> list[str]:
+    """Names a module-level assignment binds (dunders excluded: they
+    belong to the module, like `__all__`)."""
+    targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+    return [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not _is_dunder(n.id)
+    ]
+
+
+def package_units() -> dict[str, tuple[str, str | None, set[str]]]:
+    """{unit: (name that reaches it, owning class unit or None, names it
+    references)} over every package module.
+
+    Units are top-level defs and classes, the methods of those classes,
+    module-level constants, and each module's remaining top-level
+    statements (`<module>`, reached by the module's name)."""
+    units = {}
     for path in sorted(glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)):
         rel = os.path.relpath(path, os.path.join(REPO, PKG)).replace(os.sep, "/")
         tree = _parse(os.path.join(PKG, rel))
         body = []
         for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                units[f"{rel}:{node.name}"] = _names(node)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                units[f"{rel}:{node.name}"] = (node.name, None, _names(node))
+            elif isinstance(node, ast.ClassDef):
+                cls = f"{rel}:{node.name}"
+                rest = []
+                for item in node.body:
+                    if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        units[f"{cls}.{item.name}"] = (item.name, cls, _names(item))
+                    else:
+                        rest.append(item)
+                shell = copy.copy(node)  # bases, decorators, class attributes
+                shell.body = rest
+                units[cls] = (node.name, None, _names(shell))
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)) and _assigned(node):
+                for name in _assigned(node):
+                    units[f"{rel}:{name}"] = (name, None, _names(node))
             else:
                 body.append(node)
         stem = os.path.splitext(os.path.basename(rel))[0]
         mod = os.path.basename(os.path.dirname(rel)) if stem == "__init__" else stem
-        units[f"{rel}:<module>"] = _names(ast.Module(body=body, type_ignores=[]))
-        modules.setdefault(mod or PKG, []).append(f"{rel}:<module>")
-    return units, modules
+        units[f"{rel}:<module>"] = (
+            mod or PKG, None, _names(ast.Module(body=body, type_ignores=[]))
+        )
+    return units
 
 
 def unreached() -> set[str]:
-    units, modules = package_units()
-    by_name = {}
-    for unit in units:
-        name = unit.split(":", 1)[1]
-        if name != "<module>":
-            by_name.setdefault(name, []).append(unit)
-    for mod, mod_units in modules.items():
-        by_name.setdefault(mod, []).extend(mod_units)
-
-    reached, frontier = set(), set()
+    """Units no root reaches. A method is reached when its class is and
+    its name is referenced (a dunder needs only its class); the methods
+    of an unreached class are not listed apart from it."""
+    units = package_units()
+    seen = set()
     for rel in ROOTS:
-        frontier |= _names(_parse(rel))
-    seen_names = set()
-    while frontier:
-        name = frontier.pop()
-        if name in seen_names:
-            continue
-        seen_names.add(name)
-        for unit in by_name.get(name, ()):
-            if unit not in reached:
+        seen |= _names(_parse(rel))
+    reached = set()
+    grew = True
+    while grew:
+        grew = False
+        for unit, (name, owner, refs) in units.items():
+            if unit in reached or (owner is not None and owner not in reached):
+                continue
+            if name in seen or (owner is not None and _is_dunder(name)):
                 reached.add(unit)
-                frontier |= units[unit] - seen_names
-    return {u for u in units if u not in reached and not u.endswith(":<module>")}
+                seen |= refs
+                grew = True
+    return {
+        unit
+        for unit, (_, owner, _) in units.items()
+        if unit not in reached
+        and not unit.endswith(":<module>")
+        and (owner is None or owner in reached)
+    }
 
 
 def test_every_unreached_def_is_kept_on_purpose():
