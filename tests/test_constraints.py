@@ -114,6 +114,34 @@ def test_geo_prune_truth_table(spark):
     assert got == {k: v for k, v in cases.items() if v is not None}
 
 
+def test_apply_constraints_threshold_and_antijoin(spark):
+    from pyspark.sql import functions as F
+
+    scored = spark.createDataFrame(
+        [
+            ("a", "b", 0.9, 1),
+            ("a", "c", 0.5, 0),
+            ("a", "d", 0.44, 0),  # below 0.45 → dropped by threshold
+            ("b", "c", 0.45, 0),  # exactly at threshold → kept
+        ],
+        ["id_left", "id_right", "prob_match", "pred_match"],
+    )
+    # only (a, b) has disjoint country evidence → the one pruned pair
+    conv = spark.createDataFrame(
+        [("a", ["Japan"]), ("b", ["Canada"]), ("c", []), ("d", ["Canada"])],
+        "conv_id string, countries array<string>",
+    )
+    edges = flag_geo(scored, conv, min_prob=0.45)
+    # the split the pipeline makes of the one flagged frame
+    kept = edges.filter(~F.col("geo_pruned")).drop("geo_pruned")
+    dropped = edges.filter(F.col("geo_pruned")).drop("geo_pruned")
+    assert kept.columns == dropped.columns == scored.columns
+    k = {(r["id_left"], r["id_right"]) for r in kept.collect()}
+    d = {(r["id_left"], r["id_right"]) for r in dropped.collect()}
+    assert k == {("a", "c"), ("b", "c")}
+    assert d == {("a", "b")}
+
+
 def test_stopwords_by_idf(spark):
     from entity_resolution__spark.operators.blocking import stopwords_by_idf
 
