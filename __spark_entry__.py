@@ -58,7 +58,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     pdf = make_transcripts(seed=42, n_entities=30)
     sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
-    res = run_pipeline(spark, sdf, ERConfig(use_minhash=True))
+    res = run_pipeline(spark, sdf, ERConfig())
     return res.clusters
 
 

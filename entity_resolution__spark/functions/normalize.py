@@ -15,8 +15,6 @@ import unicodedata
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 _TOKEN_RE = r"[a-z0-9]+"
 
@@ -49,11 +47,6 @@ def normalize_series(s: pd.Series) -> pd.Series:
 def tokenize_series(s: pd.Series) -> pd.Series:
     """Token lists exactly as the reference's tokenize()."""
     return normalize_series(s).str.findall(_TOKEN_RE)
-
-
-@pandas_udf(T.ArrayType(T.StringType()))
-def tokenize(s: pd.Series) -> pd.Series:
-    return tokenize_series(s)
 
 
 def token_set(col: Column) -> Column:

@@ -360,18 +360,7 @@ def pair_series(fn, a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 def edit_ratio_series(a: pd.Series, b: pd.Series) -> pd.Series:
-    if _CK is not None and len(a):
-        av = a.fillna("").astype(str).to_numpy()
-        bv = b.fillna("").astype(str).to_numpy()
-        n = len(av)
-        lcs = _CK.lcs_batch(av, bv).astype(np.float64)
-        la = np.fromiter((len(x) for x in av), dtype=np.int64, count=n)
-        lb = np.fromiter((len(x) for x in bv), dtype=np.int64, count=n)
-        tot = la + lb
-        return pd.Series(
-            np.where(tot == 0, 1.0, 2.0 * lcs / np.maximum(tot, 1))
-        )
-    return pair_series(edit_ratio, a, b)
+    return indel_and_lcs_series(a, b)[0]
 
 
 def indel_and_lcs_series(

@@ -70,84 +70,14 @@ def rare_token_keys(
 
 
 def token_doc_freq(conv: DataFrame) -> DataFrame:
-    """(token, df) over the corpus — the one DF-count subplan shared by
-    rare_token_keys / stopwords_by_idf (one place for its semantics).
-    Map-side combined; shuffle carries one row per distinct (token,
-    partial count)."""
+    """(token, df) over the corpus: the document frequency that
+    rare_token_keys caps and ranks by. Map-side combined; shuffle
+    carries one row per distinct (token, partial count)."""
     return (
         conv.select(F.explode("token_set").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-
-
-def stopwords_by_idf(
-    conv: DataFrame,
-    idf_pct: float = 0.20,
-    df_cut: float = 0.20,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """TF-IDF-based auto-stopwords (reference B8,
-    visualize_k_value_for_blocking.py:61-75): tokens whose idf is in the
-    lowest `idf_pct` quantile OR whose document frequency STRICTLY
-    exceeds `df_cut` of docs (strict >, matching the reference's
-    df_frac > HIGH_DF_PERCENT — round-3 review caught a >= here).
-    Distributed: ONE DF aggregate (persisted across the quantile action
-    and the filter; round 3 — it used to run twice) + approxQuantile.
-    Empty corpus → empty stopword set."""
-    if n_docs is None:
-        n_docs = conv.count()
-    dfreq = token_doc_freq(conv).withColumn(
-        "idf", F.log((F.lit(1.0 + n_docs)) / (F.col("df") + 1.0)) + 1.0
-    ).persist()
-    try:
-        q = dfreq.approxQuantile("idf", [idf_pct], 0.001)
-        if not q:
-            return dfreq.sparkSession.createDataFrame([], "token string")
-        out = dfreq.filter(
-            (F.col("idf") <= q[0]) | (F.col("df") > df_cut * n_docs)
-        ).select("token")
-        # materialize before unpersisting: the result is small (stopword
-        # dimension) and callers broadcast it anyway
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        dfreq.unpersist()
-
-
-def blocking_quality(
-    blocks: DataFrame,
-    labeled_pairs: DataFrame,
-    n_entities: int,
-    pairs: DataFrame | None = None,
-    **candidate_kwargs,
-) -> dict:
-    """Blocking diagnostics (reference B7 k-sweep analog,
-    visualize_k_value_for_blocking.py:109-173): pair completeness
-    (recall of true pairs through the blocks) and reduction ratio
-    1 - |candidate pairs| / C(N,2). All aggregates, collected as scalars.
-
-    Pass the PIPELINE's pair table via `pairs`, or its candidate_pairs
-    knobs via **candidate_kwargs (max_block/salt_threshold/n_salts) —
-    round-3 review: evaluating hardcoded defaults here could green-light
-    a config whose real candidate generator drops different blocks.
-    """
-    from entity_resolution__spark.operators.pairs import candidate_pairs
-
-    if pairs is None:
-        pairs = candidate_pairs(blocks, **candidate_kwargs)
-    n_pairs = pairs.count()
-    pos = labeled_pairs.filter(F.col("label") == 1).select(
-        F.col("conv_id_a").alias("id_left"), F.col("conv_id_b").alias("id_right")
-    )
-    n_pos = pos.count()
-    hit = pos.join(pairs, ["id_left", "id_right"], "left_semi").count()
-    total_possible = n_entities * (n_entities - 1) / 2
-    return {
-        "candidate_pairs": n_pairs,
-        "pair_completeness": hit / n_pos if n_pos else 1.0,
-        "reduction_ratio": 1.0 - n_pairs / total_possible if total_possible else 0.0,
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -41,33 +41,37 @@ from entity_resolution__spark.operators.blocking import minhash_sig_series
 from entity_resolution__spark.operators.constraints import countries_series
 
 
-def _conversation_text_udf(num_perm: int | None):
-    """Arrow UDF full_text → struct(norm_text, tokens[, sig], countries).
+def _conversation_text_udf(num_perm: int):
+    """Arrow UDF full_text → struct(norm_text, tokens, sig, countries).
 
-    `sig` is the num_perm-row MinHash signature of full_text (omitted
-    when num_perm is None); norm_text is NFKD-folded once and tokens are
-    its token runs."""
-    fields = [
-        T.StructField("norm_text", T.StringType()),
-        T.StructField("tokens", T.ArrayType(T.StringType())),
-    ]
-    if num_perm is not None:
-        fields.append(T.StructField("sig", T.ArrayType(T.LongType())))
-    fields.append(T.StructField("countries", T.ArrayType(T.StringType())))
+    `sig` is the num_perm-row MinHash signature of full_text; norm_text
+    is NFKD-folded once and tokens are its token runs."""
 
-    @pandas_udf(T.StructType(fields))
+    @pandas_udf(
+        T.StructType(
+            [
+                T.StructField("norm_text", T.StringType()),
+                T.StructField("tokens", T.ArrayType(T.StringType())),
+                T.StructField("sig", T.ArrayType(T.LongType())),
+                T.StructField("countries", T.ArrayType(T.StringType())),
+            ]
+        )
+    )
     def conversation_text(full_text: pd.Series) -> pd.DataFrame:
         norm = normalize_series(full_text)
-        out = {"norm_text": norm, "tokens": norm.str.findall(_TOKEN_RE)}
-        if num_perm is not None:
-            out["sig"] = minhash_sig_series(full_text, num_perm)
-        out["countries"] = countries_series(full_text)
-        return pd.DataFrame(out)
+        return pd.DataFrame(
+            {
+                "norm_text": norm,
+                "tokens": norm.str.findall(_TOKEN_RE),
+                "sig": minhash_sig_series(full_text, num_perm),
+                "countries": countries_series(full_text),
+            }
+        )
 
     return conversation_text
 
 
-def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame:
+def canonicalize(transcripts: DataFrame, num_perm: int = 32) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → one row per
     conversation: (conv_id, n_turns, turn_texts, roles, tools, full_text,
     norm_text, tokens, token_set, sig, countries).
@@ -75,7 +79,7 @@ def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame
     sort_array on struct(turn_idx, ...) sorts lexicographically by the
     first field — turn_idx — giving the stable turn ordering; ties cannot
     occur (turn_idx unique per conv_id). `num_perm` sizes the MinHash
-    signature; None (blocking without MinHash) emits no `sig` column.
+    signature.
     """
     turns = F.array_sort(
         F.collect_list(
@@ -109,7 +113,6 @@ def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame
             F.array_join(F.col("turns.text"), " ").alias("full_text"),
         )
     )
-    sig = [F.col("_ct.sig").alias("sig")] if num_perm is not None else []
     return conv.withColumn(
         "_ct", _conversation_text_udf(num_perm)(F.col("full_text"))
     ).select(
@@ -117,6 +120,6 @@ def canonicalize(transcripts: DataFrame, num_perm: int | None = 32) -> DataFrame
         F.col("_ct.norm_text").alias("norm_text"),
         F.col("_ct.tokens").alias("tokens"),
         token_set(F.col("_ct.tokens")).alias("token_set"),
-        *sig,
+        F.col("_ct.sig").alias("sig"),
         F.col("_ct.countries").alias("countries"),
     )

@@ -423,32 +423,6 @@ def cohort_transitive_clusters(seed: DataFrame, max_iter: int = 50) -> DataFrame
     )
 
 
-def cluster_edges(clusters: DataFrame, mode: str = "star") -> DataFrame:
-    """Re-wire each cluster as a chain (sorted members consecutive) or a
-    star (min member = hub), weight 1.0 — reference G5
-    (/root/reference/src/graph/build_graph_after_transitivity.py:5-41).
-    Chain: lag window within cluster. Star: min-over-cluster window.
-    """
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster_id").orderBy("conv_id")
-    if mode == "chain":
-        out = clusters.select(
-            "cluster_id",
-            F.lag("conv_id").over(w).alias("src"),
-            F.col("conv_id").alias("dst"),
-        ).filter(F.col("src").isNotNull())
-    elif mode == "star":
-        out = clusters.select(
-            "cluster_id",
-            F.min("conv_id").over(Window.partitionBy("cluster_id")).alias("src"),
-            F.col("conv_id").alias("dst"),
-        ).filter(F.col("src") != F.col("dst"))
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    return out.select("src", "dst", F.lit(1.0).alias("weight"))
-
-
 def assign_clusters(cc: DataFrame, all_nodes: DataFrame) -> DataFrame:
     """(node, root) + all_nodes(node) → (conv_id, cluster_id,
     cluster_size) with dense ids.
@@ -480,42 +454,3 @@ def assign_clusters(cc: DataFrame, all_nodes: DataFrame) -> DataFrame:
     )
     return out
 
-
-def incremental_clusters(
-    prior: DataFrame, new_edges: DataFrame, max_iter: int = 50
-) -> DataFrame:
-    """Incremental re-clustering: fold a NEW batch of match edges into
-    an existing (conv_id, cluster_id, cluster_size) assignment without
-    touching the original pair corpus (the nightly-delta form of the
-    north rule's resumability — yesterday's 10^9-row assignment +
-    today's 10^6 new edges must not re-run blocking/scoring over the
-    whole corpus).
-
-
-    The prior assignment is re-expressed as its star edges (hub = min
-    member — exactly the canonical form the CC loop converges to, so
-    this adds one edge per non-hub node, not one per original pair),
-    unioned with the new edges, and one CC pass + the fused dense
-    renumber produces the updated assignment. Semantics: clusters can
-    only MERGE (via new edges bridging them) or grow with unseen nodes;
-    node ids appearing only in `prior` are preserved as their own
-    (possibly singleton) clusters. Equivalent to full recluster over
-    (all prior intra-cluster pairs ∪ new edges) — star form is the
-    transitive reduction, so the CC result is identical.
-
-
-    prior: (conv_id, cluster_id, cluster_size).
-    new_edges: (src, dst).
-    Output: (conv_id, cluster_id, cluster_size) with dense ids in
-    sorted-min-member order.
-    """
-    star = cluster_edges(prior, mode="star").select("src", "dst")
-    edges = star.unionByName(new_edges.select("src", "dst"))
-    nodes = (
-        prior.select(F.col("conv_id").alias("node"))
-        .unionByName(new_edges.select(F.col("src").alias("node")))
-        .unionByName(new_edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    cc = connected_components(edges, max_iter=max_iter)
-    return assign_clusters(cc.assignments, nodes)

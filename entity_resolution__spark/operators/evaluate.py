@@ -19,7 +19,6 @@ only driver data is the final scalar row.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -93,64 +92,3 @@ def pairwise_cluster_metrics(
         F.round(f1, 6).alias("f16"),
     )
 
-
-def roc_auc(y: np.ndarray, s: np.ndarray) -> float:
-    """Rank-based AUC (Mann-Whitney), ties averaged — numpy only."""
-    order = np.argsort(s, kind="mergesort")
-    ranks = np.empty(len(s), dtype=np.float64)
-    ranks[order] = np.arange(1, len(s) + 1)
-    # average ranks for ties
-    sorted_s = s[order]
-    i = 0
-    while i < len(s):
-        j = i
-        while j + 1 < len(s) and sorted_s[j + 1] == sorted_s[i]:
-            j += 1
-        if j > i:
-            ranks[order[i : j + 1]] = (i + 1 + j + 1) / 2.0
-        i = j + 1
-    n_pos = int(y.sum())
-    n_neg = len(y) - n_pos
-    if n_pos == 0 or n_neg == 0:
-        return 0.5
-    return (ranks[y == 1].sum() - n_pos * (n_pos + 1) / 2) / (n_pos * n_neg)
-
-
-def pr_auc(y: np.ndarray, s: np.ndarray) -> float:
-    """Average precision (the reference's average_precision_score,
-    models/pairwise_classifier.py:328,342): AP = Σ (R_i − R_{i−1})·P_i
-    over the descending-score sweep, ties handled by grouping equal
-    scores — numpy only."""
-    n_pos = int(y.sum())
-    if n_pos == 0:
-        return 0.0
-    order = np.argsort(-s, kind="mergesort")
-    ys = y[order]
-    ss = s[order]
-    tp = np.cumsum(ys)
-    fp = np.cumsum(1 - ys)
-    # evaluate only at the last index of each tied-score group
-    last = np.r_[ss[1:] != ss[:-1], True]
-    tp, fp = tp[last], fp[last]
-    precision = tp / np.maximum(tp + fp, 1)
-    recall = tp / n_pos
-    prev_r = np.r_[0.0, recall[:-1]]
-    return float(((recall - prev_r) * precision).sum())
-
-
-def f1_optimal_threshold(y: np.ndarray, s: np.ndarray) -> tuple[float, float]:
-    """Sweep unique scores, return (threshold, best F1)
-    (reference M2, pairwise_classifier.py:239-256)."""
-    best_t, best_f1 = 0.5, -1.0
-    for t in np.unique(np.round(s, 6)):
-        pred = s >= t
-        tp = int((pred & (y == 1)).sum())
-        fp = int((pred & (y == 0)).sum())
-        fn = int(((~pred) & (y == 1)).sum())
-        if tp == 0:
-            continue
-        p, r = tp / (tp + fp), tp / (tp + fn)
-        f1 = 2 * p * r / (p + r)
-        if f1 > best_f1:
-            best_t, best_f1 = float(t), float(f1)
-    return best_t, best_f1

@@ -59,27 +59,6 @@ def candidate_pairs(
     )
 
 
-def collapse_undirected_max(
-    scored: DataFrame,
-    left: str = "id_left",
-    right: str = "id_right",
-    value: str = "prob_match",
-) -> DataFrame:
-    """Undirected max-collapse: (a,b)/(b,a) duplicates keep the max value
-    (reference scripts/run_blocking.py:59-67 sort+group-first idiom →
-    one groupBy(max), no sort)."""
-    other = [c for c in scored.columns if c not in (left, right)]
-    return (
-        scored.select(
-            F.least(left, right).alias(left),
-            F.greatest(left, right).alias(right),
-            *other,
-        )
-        .groupBy(left, right)
-        .agg(F.max(value).alias(value))
-    )
-
-
 def attach_pair_payload(
     pairs: DataFrame, conv: DataFrame, cols: list[str], broadcast_dim: bool = False
 ) -> DataFrame:

@@ -47,16 +47,14 @@ from entity_resolution__spark.plans.checkpoint import StageStore
 @dataclass
 class ERConfig:
     # blocking
-    use_minhash: bool = True
     minhash_perm: int = 32
     minhash_bands: int = 4  # 8 rows/band: strict S-curve — rare-token
     # keys carry family recall (pair completeness ≥0.99 on fixtures);
     # LSH is the near-dup backup, so a steep curve keeps pair volume low
     rare_token_max_df: int = 200
     rare_tokens_per_conv: int = 4
-    max_block: int = 2000
-    salt_threshold: int = 200
-    n_salts: int = 8
+    max_block: int = 2000  # blocks under it that are hot are salted by
+    # candidate_pairs' own defaults: salting changes the plan, not pairs
     # scoring / constraints (reference thresholds: 0.45 keep, 0.60 seed,
     # C4 token-overlap prune 0.20 → our pre-filter 0.15 is conservative)
     min_token_jaccard: float = 0.15
@@ -96,19 +94,14 @@ class ERResult:
 
 
 def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> DataFrame:
-    keys = rare_token_keys(
+    return rare_token_keys(
         conv,
         max_df=cfg.rare_token_max_df,
         per_conv=cfg.rare_tokens_per_conv,
         n_docs=n_docs,
+    ).unionByName(
+        minhash_band_keys(conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands)
     )
-    if cfg.use_minhash:
-        keys = keys.unionByName(
-            minhash_band_keys(
-                conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands
-            )
-        )
-    return keys
 
 
 def cohort_seed_edges(
@@ -198,18 +191,15 @@ def run_pipeline(
             # it did not even warm every column of the cache (guide §1.4).
             out = compute().localCheckpoint(eager=True)
         else:
-            # fingerprint chains over the input identity and the lineage
-            # stages' committed snapshot ids: an upstream recompute (new
-            # snapshot id) invalidates everything downstream
+            # fingerprint chains over the input identity; store.stage()
+            # folds in the lineage stages' committed snapshot ids, so an
+            # upstream recompute (new snapshot id) invalidates everything
+            # downstream
             params = {
                 **p,
                 **({"columns": columns} if columns is not None else {}),
                 "stage": name,
                 "input": input_fp,
-                "lineage_snapshots": {
-                    dep: (store.manifest(dep) or {}).get("snapshot_id")
-                    for dep in (lineage or [])
-                },
             }
             out = store.stage(spark, name, params, compute, lineage)
         stage_wall[name] = round(time.monotonic() - t0, 3)
@@ -219,9 +209,7 @@ def run_pipeline(
     # fused Arrow UDF. Its column list is part of the stage fingerprint:
     # the params alone do not change when the snapshot gains columns, and
     # a warehouse written before `sig`/`countries` existed must recompute.
-    conv_plan = canonicalize(
-        transcripts, num_perm=cfg.minhash_perm if cfg.use_minhash else None
-    )
+    conv_plan = canonicalize(transcripts, num_perm=cfg.minhash_perm)
     conv = staged("conversations", lambda: conv_plan, columns=conv_plan.columns)
 
     # one corpus count, threaded to the blocking DF caps
@@ -233,12 +221,7 @@ def run_pipeline(
 
     pairs = staged(
         "candidate_pairs",
-        lambda: candidate_pairs(
-            blocks,
-            max_block=cfg.max_block,
-            salt_threshold=cfg.salt_threshold,
-            n_salts=cfg.n_salts,
-        ),
+        lambda: candidate_pairs(blocks, max_block=cfg.max_block),
         ["blocks"],
     )
 

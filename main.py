@@ -31,7 +31,6 @@ def parse_args(argv=None):
     p.add_argument("--master", default=None)
     p.add_argument("--keep-threshold", type=float, default=0.45)
     p.add_argument("--cluster-threshold", type=float, default=0.60)
-    p.add_argument("--no-minhash", action="store_true")
     p.add_argument("--output", help="optional parquet path for final clusters")
     return p.parse_args(argv)
 
@@ -63,7 +62,6 @@ def main(argv=None) -> int:
     cfg = ERConfig(
         keep_threshold=args.keep_threshold,
         cluster_threshold=args.cluster_threshold,
-        use_minhash=not args.no_minhash,
     )
     store = StageStore(args.warehouse)
     t0 = time.monotonic()

@@ -261,52 +261,6 @@ def test_distributed_cc_at_size(spark):
     assert dsu.count() == got.count()
 
 
-def test_incremental_clusters_merge_and_new_nodes(spark):
-    """Delta re-clustering: a new edge bridging two prior clusters
-    merges them; brand-new nodes form their own cluster; untouched
-    singletons survive; result equals a full recluster over the union
-    of all prior intra-cluster pairs and the new edges."""
-    from entity_resolution__spark.operators.cluster import (
-        assign_clusters,
-        connected_components,
-        incremental_clusters,
-    )
-
-    prior = spark.createDataFrame(
-        [("a", 0, 2), ("b", 0, 2), ("c", 1, 2), ("d", 1, 2), ("e", 2, 1)],
-        "conv_id string, cluster_id long, cluster_size int",
-    )
-    new_edges = spark.createDataFrame(
-        [("b", "c"), ("f", "g")], "src string, dst string"
-    )
-    out = {
-        r["conv_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in incremental_clusters(prior, new_edges).collect()
-    }
-    assert len({out[n][0] for n in "abcd"}) == 1  # merged across the bridge
-    assert out["a"][1] == 4
-    assert out["f"][0] == out["g"][0] and out["f"][1] == 2
-    assert out["e"][1] == 1
-    assert {out["e"][0], out["f"][0]} != {out["a"][0]}
-    # dense ids, sorted-min-member order: min members a < e < f
-    assert (out["a"][0], out["e"][0], out["f"][0]) == (0, 1, 2)
-
-    # equivalence with a FULL recluster over prior pairs + new edges
-    full_edges = spark.createDataFrame(
-        [("a", "b"), ("c", "d"), ("b", "c"), ("f", "g")],
-        "src string, dst string",
-    )
-    nodes = spark.createDataFrame(
-        [(n,) for n in "abcdefg"], "node string"
-    )
-    cc = connected_components(full_edges)
-    want = {
-        r["conv_id"]: (r["cluster_id"], r["cluster_size"])
-        for r in assign_clusters(cc.assignments, nodes).collect()
-    }
-    assert out == want
-
-
 def test_two_level_forest_prepass_equivalence(spark):
     """Round-7 two-level CC: the partition-local spanning-star pre-pass
     (_local_forest_edges) that every call runs must leave the star
@@ -351,7 +305,7 @@ def test_two_level_forest_prepass_equivalence(spark):
 
 def test_extra_edge_columns_same_on_both_finishes(spark):
     """An edge frame that carries more than (src, dst) — here a weight,
-    as cluster_edges emits — clusters identically on the driver finish
+    as a weighted graph export carries — clusters identically on the driver finish
     and on the star loop: the pre-pass must declare only the columns it
     yields, or the star loop raises RESULT_COLUMN_NAMES_MISMATCH."""
     rng = random.Random(5)

@@ -1,5 +1,5 @@
-"""Graph sampling and communities (reference G6/G7 data side): BFS, LPA,
-modularity, Louvain."""
+"""Graph communities (reference G7 data side): LPA, modularity,
+Louvain."""
 
 from __future__ import annotations
 
@@ -14,22 +14,6 @@ def _edges(spark):
         ("x", "y"),
     ]
     return spark.createDataFrame(rows, ["src", "dst"])
-
-
-def test_bfs_subgraph_depth_limits(spark):
-    from entity_resolution__spark.operators.graph_export import bfs_subgraph
-
-    nodes1, edges1 = bfs_subgraph(_edges(spark), ["a"], depth=1)
-    got1 = {r["node"] for r in nodes1.collect()}
-    assert got1 == {"a", "b", "c"}
-    e1 = {(r["src"], r["dst"]) for r in edges1.collect()}
-    assert e1 == {("a", "b"), ("b", "c"), ("a", "c")}
-
-    nodes2, _ = bfs_subgraph(_edges(spark), ["a"], depth=2)
-    assert {r["node"] for r in nodes2.collect()} == {"a", "b", "c", "d"}
-    # x/y unreachable at any depth
-    nodes4, _ = bfs_subgraph(_edges(spark), ["a"], depth=4)
-    assert "x" not in {r["node"] for r in nodes4.collect()}
 
 
 def test_label_propagation_components(spark):

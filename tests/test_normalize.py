@@ -38,13 +38,3 @@ def test_tokenize_golden():
         ["nandu", "uber", "cool"],
     ]
 
-
-def test_tokenize_spark_matches_pandas(spark):
-    from pyspark.sql import functions as F
-
-    from entity_resolution__spark.functions.normalize import tokenize
-
-    texts = ["Café RÉSUMÉ 42", "hello world", "", "Ñandú"]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    got = [r["toks"] for r in df.select(tokenize(F.col("text")).alias("toks")).collect()]
-    assert got == list(tokenize_series(pd.Series(texts)))

@@ -64,7 +64,7 @@ def test_resume_from_snapshot(spark, tiny_transcripts_sdf, tmp_path_factory):
     """Kill-and-rerun: second run reuses committed snapshots (same
     snapshot ids for early stages) and yields identical clusters."""
     wh = str(tmp_path_factory.mktemp("warehouse"))
-    cfg = ERConfig(use_minhash=False)  # smaller/faster stage set
+    cfg = ERConfig()
     store = StageStore(wh)
     r1 = run_pipeline(spark, tiny_transcripts_sdf, cfg, store=store)
     c1 = r1.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
@@ -91,7 +91,7 @@ def test_warm_resume_skips_edge_recompute(
     import entity_resolution__spark.plans.pipeline as plmod
 
     wh = str(tmp_path_factory.mktemp("warehouse_warm"))
-    cfg = ERConfig(use_minhash=False)
+    cfg = ERConfig()
     r1 = run_pipeline(spark, tiny_transcripts_sdf, cfg, store=StageStore(wh))
     c1 = r1.clusters.toPandas().sort_values("conv_id").reset_index(drop=True)
 
@@ -159,7 +159,7 @@ def test_release_transients_storeless(spark, tiny_transcripts_sdf):
     checkpoints and the edges a lazy projection. A long-lived session
     (the oracle gate's entry never releases) accumulates nothing."""
     spark.catalog.clearCache()
-    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(use_minhash=False))
+    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig())
     res.clusters.count()
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty()
@@ -192,7 +192,7 @@ def test_edges_match_prune_set_reference(
     sdf = tiny_transcripts_sdf.unionByName(
         spark.createDataFrame(_GEO_CONFLICT, schema=TRANSCRIPTS)
     )
-    cfg = ERConfig(use_minhash=False)
+    cfg = ERConfig()
     store = StageStore(str(tmp_path_factory.mktemp("warehouse_edges"))) if stored else None
     res = run_pipeline(spark, sdf, cfg, store=store)
     kept, dropped = edges_by_prune_set(
@@ -217,7 +217,7 @@ def test_new_input_invalidates_snapshots(spark, tmp_path_factory):
     NOT resume from the previous input's snapshots (fingerprints carry
     input identity + lineage snapshot ids)."""
     wh = str(tmp_path_factory.mktemp("warehouse_inputs"))
-    cfg = ERConfig(use_minhash=False)
+    cfg = ERConfig()
     a = spark.createDataFrame(make_transcripts(seed=1, n_entities=12), schema=TRANSCRIPTS)
     b = spark.createDataFrame(make_transcripts(seed=2, n_entities=15), schema=TRANSCRIPTS)
 

@@ -12,8 +12,11 @@ body of reached code. A method is reached when its class is and its name
 is referenced (dunders need only the class: Python calls them). A
 module's other top-level statements (imports, calls, guarded blocks) run
 on import, so they count as reached once any reached code names the
-module. Names are matched without their module, so two defs that share
-a name keep each other alive; the check can only err toward keeping code.
+module. A name bound as a local of the function that uses it (an
+argument, or an assignment, `for`, `with` or `except` target), or of an
+enclosing function, is not a reference. Other names are matched without
+their module, so two defs that share a name keep each other alive; the
+check can only err toward keeping code.
 
 Stdlib only, no Spark.
 """
@@ -42,33 +45,63 @@ KEEP = {
     "data/synth.py:make_labeled_pairs": "the labeled-pairs fixture of the pairwise F1 gate",
     "functions/strings.py:lcs_len_dp": "the textbook DP reference the LCS kernels are tested against",
     "functions/strings.py:lcs_ratio": "the scalar LCS-ratio reference the LCS kernels are tested against",
+    "functions/strings.py:edit_ratio": "the scalar indel-ratio reference the LCS kernels are tested against",
     "plans/pipeline.py:cohort_seed_edges": "the reference pipeline's E3 cohort-seed edges (paper semantics)",
     "plans/pipeline.py:run_cohort_transitivity": "the reference pipeline's E3 cohort-transitivity output (paper semantics)",
-    # Small tested helpers of the reference's analysis side, kept so this
-    # diet stays within a bounded number of removed tests; next to go
-    # unless a root starts to use them (ROADMAP direction 6).
-    "functions/normalize.py:tokenize": "the Spark-column form of tokenize_series, pinned equal to it",
-    "operators/blocking.py:blocking_quality": "reference B7 pair completeness and reduction ratio of a blocking",
-    "operators/blocking.py:stopwords_by_idf": "reference B8 TF-IDF auto-stopwords",
-    "operators/cluster.py:incremental_clusters": "folds a new edge batch into a prior CLUSTERS assignment without re-blocking",
-    "operators/evaluate.py:f1_optimal_threshold": "reference M2 F1-optimal threshold sweep over scores",
-    "operators/evaluate.py:pr_auc": "reference M4 average precision of scores",
-    "operators/evaluate.py:roc_auc": "reference M4 rank AUC of scores",
-    "operators/graph_export.py:_sym": "the symmetric edge list bfs_subgraph expands over",
-    "operators/graph_export.py:bfs_subgraph": "reference G6 k-hop sampled subgraph",
-    "operators/pairs.py:collapse_undirected_max": "reference B4 undirected max-collapse of scored pairs",
-    "operators/saltjoin.py:dropped_hot_buckets": "audit of the buckets capped_salted_self_join drops",
-    "operators/similarity.py:lsh_bucket_candidates": "random-hyperplane LSH near-neighbor candidates for embeddings",
-    "operators/similarity.py:make_hyperplane_udf": "the hyperplane bucket UDF lsh_bucket_candidates keys on",
 }
 
 
-def _names(node) -> set[str]:
-    """Every identifier a subtree references: names, attributes, import paths."""
-    out = set()
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _bound(fn) -> tuple[set[str], set[str]]:
+    """(locals, globals) of a function. Locals are its arguments and its
+    own assignment, `for`, `with` and `except` targets (nested functions
+    and classes have their own scopes), less the names it declares
+    `global` or `nonlocal`; globals are the names it declares `global`.
+    An `import` inside the function does not bind here: the imported
+    name stays a reference."""
+    a = fn.args
+    out = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+    out |= {x.arg for x in (a.vararg, a.kwarg) if x is not None}
+    declared, globs = set(), set()
+    stack = [fn.body] if isinstance(fn, ast.Lambda) else list(fn.body)
+    while stack:
+        n = stack.pop()
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
             out.add(n.id)
+        elif isinstance(n, ast.ExceptHandler) and n.name:
+            out.add(n.name)
+        elif isinstance(n, (ast.Global, ast.Nonlocal)):
+            declared.update(n.names)
+            if isinstance(n, ast.Global):
+                globs.update(n.names)
+        if not isinstance(n, _SCOPES + (ast.ClassDef,)):
+            stack.extend(ast.iter_child_nodes(n))
+    return out - declared, globs
+
+
+def _names(node) -> set[str]:
+    """Every identifier a subtree references: names, attributes, import
+    paths. A name bound as a local of the function it appears in, or of
+    an enclosing function, is that local, not a reference."""
+    out = set()
+    stack = [(node, frozenset())]
+    while stack:
+        n, local = stack.pop()
+        if isinstance(n, _SCOPES):
+            # the body sees the function's locals; decorators, defaults
+            # and annotations are evaluated in the enclosing scope
+            bound, globs = _bound(n)
+            inner = (local - globs) | bound
+            body = {id(c) for c in ([n.body] if isinstance(n, ast.Lambda) else n.body)}
+            stack.extend(
+                (c, inner if id(c) in body else local) for c in ast.iter_child_nodes(n)
+            )
+            continue
+        if isinstance(n, ast.Name):
+            if n.id not in local:
+                out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, (ast.Import, ast.ImportFrom)):
@@ -76,6 +109,7 @@ def _names(node) -> set[str]:
                 out.update(n.module.split("."))
             for a in n.names:
                 out.update(a.name.split("."))
+        stack.extend((c, local) for c in ast.iter_child_nodes(n))
     return out
 
 
@@ -178,3 +212,30 @@ def test_every_unreached_def_is_kept_on_purpose():
         + ", ".join(sorted(set(KEEP) - dead))
     )
     assert all(reason.strip() for reason in KEEP.values())
+
+
+def test_locals_of_the_function_or_an_enclosing_one_are_not_references():
+    src = """
+def outer(arg, *rest, **kw):
+    shadow = glob = 1
+    for idx in range(3):
+        pass
+    with open(arg) as fh:
+        pass
+    try:
+        pass
+    except ValueError as err:
+        pass
+    def inner():
+        global glob
+        nonlocal shadow
+        shadow = 2
+        from pkg import imported
+        return shadow, idx, fh, err, rest, kw, glob, imported, free
+    return inner
+"""
+    got = _names(ast.parse(src))
+    assert {"glob", "imported", "free", "range", "open", "ValueError"} <= got
+    # a default is evaluated where the function is defined
+    assert "deco" in _names(ast.parse("def f(deco=deco):\n    return deco"))
+    assert not {"arg", "rest", "kw", "shadow", "idx", "fh", "err"} & got

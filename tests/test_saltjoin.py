@@ -6,8 +6,7 @@ the naive pair set, (b) per-salt-task pair volume is bounded by
 the test doesn't depend on AQE partition coalescing, (c) a ≥10k-member
 adversarial hot bucket (every doc sharing a shingle) is DROPPED by the
 cap on both the ngram and embedding paths instead of emitting ~5·10⁷
-pairs through one task, and (d) the drop is auditable via
-dropped_hot_buckets (no silent caps).
+pairs through one task.
 """
 
 from __future__ import annotations
@@ -18,10 +17,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from entity_resolution__spark.operators.saltjoin import (
-    capped_salted_self_join,
-    dropped_hot_buckets,
-)
+from entity_resolution__spark.operators.saltjoin import capped_salted_self_join
 
 
 def test_salted_pair_set_matches_naive(spark):
@@ -133,13 +129,6 @@ def test_adversarial_degenerate_embedding_bucket_dropped(spark):
         hot.unionByName(cold), n_dims=8, threshold=0.25, max_bucket=256
     ).collect()
     assert {(r["id_left"], r["id_right"]) for r in out} == {(20001, 20002)}
-
-
-def test_dropped_hot_buckets_audit(spark):
-    rows = [(f"d{i}", "hot") for i in range(50)] + [("x", "ok"), ("y", "ok")]
-    df = spark.createDataFrame(rows, ["id", "bk"])
-    dropped = dropped_hot_buckets(df, ["bk"], max_bucket=10).collect()
-    assert [(r["bk"], r["bucket_size"]) for r in dropped] == [("hot", 50)]
 
 
 @settings(max_examples=8, deadline=None)
