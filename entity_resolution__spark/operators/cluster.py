@@ -6,8 +6,8 @@ Replaces the reference's single-process union-find
 one min-root union-find (`_union_find`) per partition, turning each
 partition's edges into a spanning forest (`_local_forest_edges`). A
 small forest is finished by the same union-find on the driver
-(`_local_dsu_components`); a large one, or any run that snapshots its
-iterations, by the alternating-star algorithm of Kiveris et al.,
+(`_local_dsu_components`); a large one by the alternating-star
+algorithm of Kiveris et al.,
 "Connected Components in MapReduce and Beyond" (SoCC'14): O(log^2 n)
 rounds worst case, ~log n in practice, each round a pair of shuffles
 keyed on node id. Both give root = min member. Node ids are any
@@ -19,16 +19,17 @@ Star-loop scale notes:
   key; AQE handles stragglers, and the star-contraction itself removes
   high-degree hubs after round 1 (a hub's neighbors all rewire to the
   component min), so degree skew self-heals.
-- Lineage is cut every iteration via localCheckpoint() (on a cluster:
-  per-iteration Iceberg snapshot through plans.checkpoint.StageStore),
-  otherwise the plan tree grows exponentially.
+- Lineage is cut every iteration via localCheckpoint(), otherwise the
+  plan tree grows exponentially. A stored pipeline run also commits each
+  round's edge set to the one `cluster_iter` stage of its StageStore
+  (plans/pipeline.py); a rerun resumes the loop from it.
 - Convergence is detected by an edge-set fingerprint (count + xor/sum of
   per-edge hashes) — one tiny aggregate per round, no collect of edges.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from itertools import chain
 
 from pyspark.sql import DataFrame
@@ -109,7 +110,6 @@ def _fingerprint(e: DataFrame) -> tuple[int, int]:
 class CCResult:
     assignments: DataFrame  # (node, root)
     iterations: int
-    fingerprints: list[tuple[int, int]] = field(default_factory=list)
 
 
 def _union_find(pairs) -> tuple[list, list]:
@@ -260,15 +260,16 @@ def connected_components(
 
     Nodes appearing only as isolated (no edges) are the caller's concern —
     union them in afterwards (see `assign_clusters`). ``on_iteration`` is
-    an optional callback (it, edges_df, fingerprint) used by the
-    checkpointing layer to commit per-iteration snapshots (north_rule:
-    cluster-iteration resumability). Columns other than src and dst are
-    ignored.
+    an optional callback (it, edges_df, fingerprint) that the star loop
+    fires after each round; the pipeline commits the round's edge set
+    there so a killed run can resume the loop. It never picks the
+    finish. Columns other than src and dst are ignored.
 
     One shape for every call: the partition-local forest pre-pass
-    (`_local_forest_edges`) always runs first, then one of two finishes.
+    (`_local_forest_edges`) always runs first, then one of two finishes,
+    chosen by size alone.
 
-    - Driver finish: when ``on_iteration`` is unset and the forest has
+    - Driver finish: when the forest has
       at most ``local_threshold`` edges, it is collected and solved by
       the driver union-find (one pass, one job) instead of paying
       2 + 2·rounds job barriers of the star loop — at 20k edges the
@@ -283,10 +284,10 @@ def connected_components(
       for string node ids — the same adaptive-threshold idiom as
       Spark's autoBroadcastJoinThreshold (ADVICE round 2 flagged 2M ×
       cohort-qualified composite keys as multi-GB; those callers pass a
-      lower threshold or dense int keys).
+      lower threshold or dense int keys). No rounds, so
+      ``on_iteration`` never fires.
     - Star loop: the distributed large-star/small-star rounds over the
-      forest, the 100 TB scale path. Forced whenever per-iteration
-      snapshots are requested (``on_iteration`` set) or
+      forest, the 100 TB scale path: a larger forest, or
       ``local_threshold=0``.
 
     Both finishes produce identical (node, root) assignments; tests
@@ -302,14 +303,14 @@ def connected_components(
     forest = _local_forest_edges(
         edges.filter(F.col("src") != F.col("dst"))
     ).localCheckpoint(eager=True)
-    if on_iteration is None and local_threshold > 0:
+    if local_threshold > 0:
         # the size probe IS the fetch: one bounded Arrow transfer
         # (limit caps driver bytes exactly like a count probe would cap
         # the decision) instead of a count job + a full toPandas
         probe_pdf = forest.limit(local_threshold + 1).toPandas()
         if len(probe_pdf) <= local_threshold:
             assign = _local_dsu_components(forest, _edges_pdf=probe_pdf)
-            return CCResult(assignments=assign, iterations=0, fingerprints=[])
+            return CCResult(assignments=assign, iterations=0)
     e = (
         _symmetric(forest)
         .filter(F.col("u") > F.col("v"))  # canonical directed form
@@ -318,12 +319,10 @@ def connected_components(
     # prev_fp starts unknown (saves one aggregate job): the loop always
     # runs ≥1 iteration and compares consecutive iteration fingerprints.
     prev_fp: tuple[int, int] | None = None
-    fps: list[tuple[int, int]] = []
     it = 0
     for it in range(1, max_iter + 1):
         e = _small_star(_large_star(_resym(e))).localCheckpoint(eager=True)
         fp = _fingerprint(e)
-        fps.append(fp)
         if on_iteration is not None:
             on_iteration(it, e, fp)
         if fp == prev_fp:
@@ -337,7 +336,7 @@ def connected_components(
     assign = assign.unionByName(
         centers.join(assign, "node", "left_anti").withColumn("root", F.col("node"))
     )
-    return CCResult(assignments=assign, iterations=it, fingerprints=fps)
+    return CCResult(assignments=assign, iterations=it)
 
 
 def _dense_ids(

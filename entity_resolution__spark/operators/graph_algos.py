@@ -24,12 +24,11 @@ pure DataFrame compositions — no UDFs, no driver adjacency:
                   power-law graph.
 
 At 100 TB: pagerank's edge table is partitioned by src once and reused
-every iteration (only the rank vector re-shuffles); lineage is cut per
-iteration (localCheckpoint locally, StageStore parquet on a cluster) so
-plan depth stays O(1). triangle_count's two joins key on the oriented
-source; the orientation bounds every join group, which is why no
-salting tier is needed here (contrast saltjoin.py where key groups are
-unbounded).
+every iteration (only the rank vector re-shuffles); lineage is cut with
+localCheckpoint so plan depth stays bounded. triangle_count's two joins
+key on the oriented source; the orientation bounds every join group,
+which is why no salting tier is needed here (contrast saltjoin.py where
+key groups are unbounded).
 """
 
 from __future__ import annotations
@@ -65,8 +64,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 10,
     weighted: bool = True,
-    start_ranks: DataFrame | None = None,
-    on_iteration=None,
 ) -> DataFrame:
     """Directed (src, dst[, weight]) → (node, rank) after a FIXED
     number of power iterations from the uniform vector — fixed (not
@@ -83,18 +80,9 @@ def pagerank(
     Scale shape: the normalized edge table (src, dst, share) is built
     ONCE, partitioned by src, and materialized; each iteration is one
     hash join on src (ranks shuffle, edges don't) + one groupBy dst
-    with map-side partial sums. Ranks are localCheckpoint'ed per
-    iteration to keep the plan O(1) deep — on a cluster this boundary
-    is a StageStore parquet commit (plans/checkpoint.py), same idiom
-    as the CC loop's per-iteration snapshots.
-
-    Resumability (north_rule): ``on_iteration(i, ranks_df)`` fires
-    after every iteration (the checkpointing layer commits the rank
-    snapshot there, exactly like the CC loop's callback), and
-    ``start_ranks`` — a committed (node, rank) snapshot — replaces the
-    uniform init so a killed run continues from its last committed
-    iteration: pagerank(e, iterations=K−j, start_ranks=snapshot_j) ==
-    iterations j..K of the original run (pinned by pytest).
+    with map-side partial sums. Ranks are localCheckpoint'ed every 8
+    iterations (every iteration when there are dangling nodes) to keep
+    the plan bounded in depth.
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
@@ -136,10 +124,7 @@ def pagerank(
             outw.select(F.col("src").alias("node")), "node", "left_anti"
         ).localCheckpoint(eager=True)
 
-    if start_ranks is not None:
-        ranks = start_ranks.select("node", "rank")
-    else:
-        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
     for _it in range(1, iterations + 1):
         d_mass = 0.0
@@ -168,17 +153,14 @@ def pagerank(
             ).alias("rank"),
         )
         # Materialize the iteration boundary only when something actually
-        # needs it NOW: the snapshot callback, or next iteration's
-        # dangling-mass collect (which would otherwise recompute the
-        # whole chain), or lineage bounding every 8 rounds. Without
-        # those, the full power loop stays ONE lazy plan — a single job
-        # with 2 exchanges per iteration instead of an eager
-        # job+checkpoint barrier per round (round-6 VERDICT #3: the 5
-        # barriers, not the exchanges, dominated the sf0.1 wall).
-        if on_iteration is not None or has_dangling or _it % 8 == 0:
+        # needs it NOW: next iteration's dangling-mass collect (which
+        # would otherwise recompute the whole chain), or lineage bounding
+        # every 8 rounds. Without those, the full power loop stays ONE
+        # lazy plan — a single job with 2 exchanges per iteration instead
+        # of an eager job+checkpoint barrier per round (round-6 VERDICT
+        # #3: the 5 barriers, not the exchanges, dominated the sf0.1 wall).
+        if has_dangling or _it % 8 == 0:
             ranks = ranks.localCheckpoint(eager=True)
-        if on_iteration is not None:
-            on_iteration(_it, ranks)
     return ranks
 
 
@@ -273,8 +255,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     max_iter: int = 100,
-    start_edges: DataFrame | None = None,
-    on_iteration=None,
 ) -> DataFrame:
     """Nodes of the k-core: the (unique) maximal subgraph where every
     node has degree ≥ k — the standard graph-density screen ("is this
@@ -291,33 +271,21 @@ def k_core(
     on endpoint — all hash exchanges on node ids; peeling depth is the
     degeneracy ordering's layer count (small for power-law graphs, cf.
     Batagelj-Zaversnik; each round strictly shrinks the edge set).
-    Lineage cut per round (localCheckpoint locally; a StageStore
-    parquet commit on a cluster — same idiom as the CC loop).
-
-    Resumability (north_rule): ``on_iteration(i, edges_df)`` fires
-    after each peel round with the surviving canonical edge set (the
-    checkpointing layer commits it there); ``start_edges`` — such a
-    committed (u, v) snapshot — skips canonicalization and continues
-    the peel from it. Because peeling is idempotent and
-    order-independent, resume-from-round-j equals the uninterrupted
-    run exactly (pinned by pytest).
+    Lineage cut per round with localCheckpoint.
 
     Returns (node, degree) of the surviving core (empty if none).
     """
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    if start_edges is not None:
-        cur = start_edges.select("u", "v").localCheckpoint(eager=True)
-    else:
-        cur = (
-            edges.select(
-                F.least("src", "dst").alias("u"),
-                F.greatest("src", "dst").alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+    cur = (
+        edges.select(
+            F.least("src", "dst").alias("u"),
+            F.greatest("src", "dst").alias("v"),
         )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     bcast_ok: bool | None = None
     for _it in range(1, max_iter + 1):
         deg = (
@@ -348,8 +316,6 @@ def k_core(
             .join(kv, "v", "left_semi")
             .localCheckpoint(eager=True)
         )
-        if on_iteration is not None:
-            on_iteration(_it, cur)
         if cur.isEmpty():
             return deg.filter(F.lit(False))
     raise RuntimeError(f"k_core: no fixpoint within {max_iter} rounds")

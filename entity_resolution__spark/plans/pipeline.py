@@ -9,12 +9,15 @@ Stage DAG (each optionally checkpointed via StageStore, north_rule):
   pairs + conversations ─ featurize ─ score ─ scored
   scored ─ threshold + geo_pruned flag (countries column) ─ edges;
            kept and dropped are the two sides of the flag
-  edges ─ large-star/small-star CC ─ clusters (dense ids + sizes)
+  edges ─ CC (partition forest, then driver union-find or star loop)
+        ─ clusters (dense ids + sizes)
 
 Conversation text crosses into Python once per pass, in canonicalize;
 blocking and the geo constraint read the columns it emitted. With a
 store, the edges (flag included) are one committed snapshot; without
-one they stay lazy and run inside the clusters stage.
+one they stay lazy and run inside the clusters stage. CC picks its
+finish by size on both paths; with a store, star-loop rounds (if any)
+commit to one `cluster_iter` stage that a rerun resumes from.
 
 Mirrors the reference entry points E1–E3 (SURVEY.md §3) as one lazy
 Spark DAG with explicit stage boundaries.
@@ -276,16 +279,26 @@ def run_pipeline(
     cc_iter_store = {}
 
     def compute_clusters() -> DataFrame:
-        on_iter = None
+        src, on_iter = cluster_edges, None
         if store is not None:
-            def on_iter(it, e, fp):  # per-iteration snapshot (north_rule)
-                store.commit(
-                    e, f"cluster_iter_{it:03d}", f"{fp[0]}:{fp[1]}", ["edges"]
+            # Star rounds commit to ONE stage keyed on the edges snapshot.
+            # A round keeps every non-isolated node and the components of
+            # its input, so CC of the last committed round equals CC of
+            # the edges: a killed run resumes the loop from it. The
+            # forest pre-pass's eager checkpoint materializes the resumed
+            # frame before the next round's commit lets GC drop its files.
+            edges_snap = store.manifest("edges")["snapshot_id"]
+            if store.is_current("cluster_iter", edges_snap):
+                src = store.read(spark, "cluster_iter").select(
+                    F.col("u").alias("src"), F.col("v").alias("dst")
                 )
 
-        cc = connected_components(
-            cluster_edges, max_iter=cfg.cc_max_iter, on_iteration=on_iter
-        )
+            def on_iter(it, e, fp):
+                store.commit(
+                    e, "cluster_iter", edges_snap, ["edges"], {"round": it}
+                )
+
+        cc = connected_components(src, max_iter=cfg.cc_max_iter, on_iteration=on_iter)
         cc_iter_store["iterations"] = cc.iterations
         all_nodes = conv.select(F.col("conv_id").alias("node"))
         return assign_clusters(cc.assignments, all_nodes)

@@ -153,51 +153,3 @@ def test_triangles_duplicate_and_reversed_edges_collapse(spark):
 
 def test_triangles_empty(spark):
     assert triangle_count(_edges_df(spark, [])).count() == 0
-
-
-def test_pagerank_resume_from_snapshot(spark):
-    """north_rule resumability on the iterative operator: running K
-    iterations straight == running j, committing the rank snapshot via
-    on_iteration, and resuming K-j more from it (bit-exact, since the
-    resumed run replays the identical joins from the identical
-    doubles)."""
-    from entity_resolution__spark.operators.graph_algos import (
-        pagerank,
-        symmetrize,
-    )
-
-    edges = symmetrize(
-        spark.createDataFrame(
-            [(1, 2, 0.5), (2, 3, 1.0), (3, 4, 0.25), (4, 1, 1.0), (1, 3, 0.75)],
-            "src long, dst long, weight double",
-        )
-    )
-    full = {r["node"]: r["rank"] for r in pagerank(edges, iterations=5).collect()}
-    snaps = {}
-    pagerank(edges, iterations=2, on_iteration=lambda i, df: snaps.update({i: df}))
-    resumed = {
-        r["node"]: r["rank"]
-        for r in pagerank(edges, iterations=3, start_ranks=snaps[2]).collect()
-    }
-    assert resumed == full  # bit-exact, not approx
-
-
-def test_k_core_resume_from_snapshot(spark):
-    from entity_resolution__spark.operators.graph_algos import k_core
-
-    # K5 clique (3-core) + a pendant chain off node 1: the chain peels
-    # one node per round, guaranteeing a MULTI-round peel to resume into
-    clique = [(a, b) for a in range(1, 6) for b in range(a + 1, 6)]
-    chain = [(1, 100), (100, 101), (101, 102)]
-    df = spark.createDataFrame(clique + chain, "src long, dst long")
-    full = {(r["node"], r["degree"]) for r in k_core(df, 3).collect()}
-    assert {n for n, _ in full} == {1, 2, 3, 4, 5}
-    snaps = {}
-    # capture the first peel round's surviving edges, resume from them
-    k_core(df, 3, on_iteration=lambda i, e: snaps.setdefault(1, e))
-    assert 1 in snaps, "fixture no longer peels; rebuild it"
-    resumed = {
-        (r["node"], r["degree"])
-        for r in k_core(df, 3, start_edges=snaps[1]).collect()
-    }
-    assert resumed == full

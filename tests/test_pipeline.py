@@ -82,6 +82,142 @@ def test_resume_from_snapshot(spark, tiny_transcripts_sdf, tmp_path_factory):
     assert c1.equals(c2)
 
 
+_STAGES = ["conversations", "blocks", "candidate_pairs", "scores", "edges", "clusters"]
+
+
+class _Killed(Exception):
+    """Stands in for a killed run."""
+
+
+def _sorted(clusters):
+    return clusters.sort_values("conv_id").reset_index(drop=True)
+
+
+def _force_star_loop(mp):
+    import functools
+
+    import entity_resolution__spark.plans.pipeline as plmod
+
+    mp.setattr(
+        plmod,
+        "connected_components",
+        functools.partial(plmod.connected_components, local_threshold=0),
+    )
+
+
+def _spy_stages(mp, method: str) -> list[str]:
+    """Record the stage name of every StageStore.read / .commit call
+    (the stage is the second positional argument of both)."""
+    seen: list[str] = []
+    orig = getattr(StageStore, method)
+
+    def spy(self, *a, **k):
+        seen.append(a[1])
+        return orig(self, *a, **k)
+
+    mp.setattr(StageStore, method, spy)
+    return seen
+
+
+def test_stored_run_takes_the_size_rule(
+    spark, tiny_transcripts_sdf, tmp_path_factory, pipeline_run
+):
+    """A stored run picks its CC finish by size, as a store-less run does:
+    the tiny fixture takes the driver finish, commits no star round, and
+    its warehouse holds exactly the six stages."""
+    wh = str(tmp_path_factory.mktemp("warehouse_size_rule"))
+    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=StageStore(wh))
+    assert sorted(os.listdir(wh)) == sorted(_STAGES)
+    assert res.cc_iterations == 0
+    assert _sorted(res.clusters.toPandas()).equals(_sorted(pipeline_run[1]))
+
+
+@pytest.fixture(scope="module")
+def star_loop_run(spark, tiny_transcripts_sdf, tmp_path_factory, pipeline_run):
+    """An uninterrupted stored run with the star loop forced: its round
+    count and clusters (which equal the store-less clusters)."""
+    wh = str(tmp_path_factory.mktemp("warehouse_star"))
+    with pytest.MonkeyPatch.context() as mp:
+        _force_star_loop(mp)
+        res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=StageStore(wh))
+        clusters = _sorted(res.clusters.toPandas())
+    assert clusters.equals(_sorted(pipeline_run[1]))
+    rounds = res.cc_iterations
+    assert rounds >= 2  # converged = two equal fingerprints in a row
+    # every round overwrote the one cluster_iter stage; GC keeps two
+    assert StageStore(wh).manifest("cluster_iter")["metrics"]["round"] == rounds
+    snaps = [d for d in os.listdir(os.path.join(wh, "cluster_iter")) if d.startswith("snap-")]
+    assert len(snaps) == 2
+    return rounds, clusters
+
+
+@pytest.mark.parametrize("kill_at", ["first", "last"])
+def test_killed_star_loop_resumes_from_cluster_iter(
+    spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch, star_loop_run, kill_at
+):
+    """Kill a stored run right after star round k commits (the first
+    round, and the last); the rerun must resume the loop from the
+    committed `cluster_iter` frame and give the uninterrupted clusters."""
+    rounds, want = star_loop_run
+    k = 1 if kill_at == "first" else rounds
+    _force_star_loop(monkeypatch)
+
+    class KilledAfterRound(StageStore):
+        def commit(self, df, stage, fp, lineage=None, extra_metrics=None):
+            out = super().commit(df, stage, fp, lineage, extra_metrics)
+            if stage == "cluster_iter" and extra_metrics["round"] == k:
+                raise _Killed(stage)
+            return out
+
+    wh = str(tmp_path_factory.mktemp(f"warehouse_kill_{kill_at}"))
+    with pytest.raises(_Killed):
+        run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=KilledAfterRound(wh))
+    store = StageStore(wh)
+    assert store.manifest("clusters") is None
+    assert store.manifest("cluster_iter")["metrics"]["round"] == k
+    resumed_from = store.manifest("cluster_iter")["snapshot_id"]
+
+    reads = _spy_stages(monkeypatch, "read")
+    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=store)
+    assert "cluster_iter" in reads
+    assert _sorted(res.clusters.toPandas()).equals(want)
+    if kill_at == "last":
+        # the rerun committed >= 2 rounds, so GC deleted the snapshot it
+        # resumed from: the forest pre-pass had already materialized it
+        assert res.cc_iterations >= 2
+        assert resumed_from not in os.listdir(os.path.join(wh, "cluster_iter"))
+
+
+@pytest.mark.parametrize("fault", _STAGES)
+def test_fault_in_a_stage_resumes_the_committed_ones(
+    spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch, pipeline_run, fault
+):
+    """Raise from one stage's compute, then rerun: the stages committed
+    before the fault are read, not recomputed, the rest are computed and
+    committed, and the clusters equal an uninterrupted run's."""
+
+    class FaultyStore(StageStore):
+        def stage(self, spark, name, params, compute, lineage=None):
+            if name == fault:
+                def compute():
+                    raise _Killed(name)
+            return super().stage(spark, name, params, compute, lineage)
+
+    wh = str(tmp_path_factory.mktemp(f"warehouse_fault_{fault}"))
+    with pytest.raises(_Killed):
+        run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=FaultyStore(wh))
+    done = _STAGES[: _STAGES.index(fault)]
+    assert sorted(os.listdir(wh)) == sorted(done)
+
+    reads = _spy_stages(monkeypatch, "read")
+    commits = _spy_stages(monkeypatch, "commit")
+    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=StageStore(wh))
+    clusters = _sorted(res.clusters.toPandas())
+    assert reads == done
+    assert commits == _STAGES[len(done):]
+    assert clusters.equals(_sorted(pipeline_run[1]))
+
+
 def test_warm_resume_skips_edge_recompute(
     spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch
 ):
