@@ -30,28 +30,30 @@ from pyspark.sql.functions import pandas_udf
 # ---------------------------------------------------------------------------
 
 
+# share of the corpus above which a token is a stopword, not a block key
+MAX_DF_FRAC = 0.005
+
+
 def rare_token_keys(
     conv: DataFrame,
     max_df: int = 200,
     per_conv: int = 4,
-    max_df_frac: float | None = 0.005,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Keys = up to `per_conv` rarest tokens of each conversation.
 
     Document frequency is a groupBy aggregate (map-side combined); tokens
     with DF > the cap are dropped (stopword-like, would create hot
-    blocks). The cap is min(max_df, max_df_frac·N): an absolute cap alone
+    blocks). The cap is min(max_df, MAX_DF_FRAC·N): an absolute cap alone
     is wrong under corpus growth — a token in 0.5% of 10¹⁰ conversations
     is a stopword, not a key. Rarest-token blocking is the scalable
     analog of the reference's TF-IDF weighting: rare tokens carry the
     discriminative signal.
     """
-    if max_df_frac is not None:
-        # n_docs threads one corpus count through every operator that
-        # needs it (round-1 flag: 3 redundant count jobs per pipeline run)
-        n = n_docs if n_docs is not None else conv.count()
-        max_df = max(10, min(max_df, int(max_df_frac * n)))
+    # n_docs threads one corpus count through every operator that needs
+    # it (round-1 flag: 3 redundant count jobs per pipeline run)
+    n = n_docs if n_docs is not None else conv.count()
+    max_df = max(10, min(max_df, int(MAX_DF_FRAC * n)))
     tok = conv.select("conv_id", F.explode("token_set").alias("token"))
     df_counts = token_doc_freq(conv)
     ranked = (

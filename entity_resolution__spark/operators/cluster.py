@@ -5,8 +5,9 @@ Replaces the reference's single-process union-find
 (scripts/apply_transitivity.py:21-45). Every call runs
 one min-root union-find (`_union_find`) per partition, turning each
 partition's edges into a spanning forest (`_local_forest_edges`). A
-small forest is finished by the same union-find on the driver
-(`_local_dsu_components`); a large one by the alternating-star
+forest that fits the driver budget (`session.driver_rows`) is finished
+by the same union-find on the driver (`_local_dsu_components`); a
+larger one by the alternating-star
 algorithm of Kiveris et al.,
 "Connected Components in MapReduce and Beyond" (SoCC'14): O(log^2 n)
 rounds worst case, ~log n in practice, each round a pair of shuffles
@@ -34,6 +35,8 @@ from itertools import chain
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from entity_resolution__spark.session import driver_rows
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -150,9 +153,10 @@ def _union_find(pairs) -> tuple[list, list]:
 
 
 def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
-    """Driver-side finish for SMALL edge sets: `_union_find` over the
-    collected edges, same output contract as the distributed loop
-    (root = min member).
+    """Driver-side finish for edge sets within the driver budget:
+    `_union_find` over the collected edges, same output contract as the
+    distributed loop (root = min member), handed back as a checkpointed
+    frame.
 
     `_edges_pdf`: the caller may pass the already-fetched pandas edge
     frame (connected_components' size probe IS the fetch) so the
@@ -194,20 +198,12 @@ def _local_dsu_components(edges: DataFrame, _edges_pdf=None) -> DataFrame:
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("root", node_type)]
     )
-    if out.empty:
-        return spark.createDataFrame([], schema)
-    res = spark.createDataFrame(out, schema)
-    if len(out) > 200_000:
-        # a LocalRelation this size is re-serialized from the driver on
-        # EVERY downstream job — assign_clusters alone runs 3+ jobs over
-        # it (size agg, dense-id collect, stage materialization), ~4.4 s
-        # per rescan at 1M string rows. Distribute once into executor
-        # blocks and cut the lineage; below the gate the relation is
-        # cheap enough that the extra shuffle would be pure overhead.
-        res = res.repartition(
-            spark.sparkContext.defaultParallelism
-        ).localCheckpoint(eager=True)
-    return res
+    # Checkpointed into executor blocks once: a LocalRelation is otherwise
+    # re-serialized from the driver on EVERY downstream job, and
+    # assign_clusters alone runs 3+ jobs over it (~4.4 s per rescan at
+    # 1M string rows). The Arrow frame already has defaultParallelism
+    # partitions, which the checkpoint keeps.
+    return spark.createDataFrame(out, schema).localCheckpoint(eager=True)
 
 
 def _local_forest_edges(edges: DataFrame) -> DataFrame:
@@ -254,7 +250,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     on_iteration=None,
-    local_threshold: int = 2_000_000,
+    local_threshold: int | None = None,
 ) -> CCResult:
     """edges(src, dst) → (node, root) where root = min member of component.
 
@@ -269,23 +265,18 @@ def connected_components(
     (`_local_forest_edges`) always runs first, then one of two finishes,
     chosen by size alone.
 
-    - Driver finish: when the forest has
-      at most ``local_threshold`` edges, it is collected and solved by
-      the driver union-find (one pass, one job) instead of paying
-      2 + 2·rounds job barriers of the star loop — at 20k edges the
-      loop is pure fixed overhead (~10 s of scheduling for <1 s of
-      compute), and at 1.05M edges the DSU still wins 4-13× (3.4-10.7 s
-      vs 41.6 s: the star loop's per-iteration barriers don't shrink
-      with edge count, which is also why the clusters stage scaled at
-      0.27 in the round-6 4.3M-turn pair). Same spirit as Spark
-      choosing broadcast over sort-merge. The forest holds at most one
-      edge per node per partition, so the collect scales with the node
-      count, not the edge count. The 2M default bounds it at ~200 MB
-      for string node ids — the same adaptive-threshold idiom as
-      Spark's autoBroadcastJoinThreshold (ADVICE round 2 flagged 2M ×
-      cohort-qualified composite keys as multi-GB; those callers pass a
-      lower threshold or dense int keys). No rounds, so
-      ``on_iteration`` never fires.
+    - Driver finish: when the forest has at most ``local_threshold``
+      edges — by default `driver_rows(forest)`, a 1/100 share of the
+      driver heap over Spark's per-row estimate (~2.1M string edges at
+      an 8 GB heap) — it is collected and solved by the driver
+      union-find (one pass, one job) instead of paying 2 + 2·rounds job
+      barriers of the star loop. At 20k edges the loop is pure fixed
+      overhead (~10 s of scheduling for <1 s of compute), and at 1.05M
+      edges the DSU still wins 4-13× (3.4-10.7 s vs 41.6 s: the star
+      loop's per-iteration barriers don't shrink with edge count). The
+      forest holds at most one edge per node per partition, so the
+      collect scales with the node count, not the edge count. No
+      rounds, so ``on_iteration`` never fires.
     - Star loop: the distributed large-star/small-star rounds over the
       forest, the 100 TB scale path: a larger forest, or
       ``local_threshold=0``.
@@ -303,6 +294,8 @@ def connected_components(
     forest = _local_forest_edges(
         edges.filter(F.col("src") != F.col("dst"))
     ).localCheckpoint(eager=True)
+    if local_threshold is None:
+        local_threshold = driver_rows(forest)
     if local_threshold > 0:
         # the size probe IS the fetch: one bounded Arrow transfer
         # (limit caps driver bytes exactly like a count probe would cap
@@ -339,27 +332,23 @@ def connected_components(
     return CCResult(assignments=assign, iterations=it)
 
 
-def _dense_ids(
-    distinct_keys: DataFrame,
-    key_cols: list[str],
-    id_col: str,
-    local_threshold: int = 1_000_000,
-) -> DataFrame:
+def _dense_ids(distinct_keys: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """distinct key rows → + dense 0..K-1 id in sorted-key order.
 
-    Size-adaptive: K under the threshold is numbered driver-side (one
-    collect, one createDataFrame) — the distributed sort+zipWithIndex
-    path costs 2 extra jobs plus a Python-RDD round trip, pure overhead
-    for dimension-sized K. Above the threshold: distributed sort +
-    zipWithIndex over the K rows only (never a global window — a
-    `row_number() over ()` would serialize on one task)."""
+    Size-adaptive: K within `driver_rows(distinct_keys)` is numbered
+    driver-side (one collect, one createDataFrame) — the distributed
+    sort+zipWithIndex path costs 2 extra jobs plus a Python-RDD round
+    trip, pure overhead for dimension-sized K. Above the budget:
+    distributed sort + zipWithIndex over the K rows only (never a global
+    window — a `row_number() over ()` would serialize on one task)."""
     spark = distinct_keys.sparkSession
     keys = distinct_keys.orderBy(*key_cols)
     schema_str = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in distinct_keys.schema.fields
     )
-    probe = keys.limit(local_threshold + 1).collect()
-    if len(probe) <= local_threshold:
+    budget = driver_rows(distinct_keys)
+    probe = keys.limit(budget + 1).collect()
+    if len(probe) <= budget:
         rows = [tuple(r) + (i,) for i, r in enumerate(probe)]
         return spark.createDataFrame(rows, f"{schema_str}, {id_col} long")
     indexed = keys.rdd.map(tuple).zipWithIndex().map(lambda t: t[0] + (t[1],))
@@ -399,10 +388,7 @@ def cohort_transitive_clusters(seed: DataFrame, max_iter: int = 50) -> DataFrame
         F.concat_ws(_COHORT_SEP, "cohort", "u").alias("src"),
         F.concat_ws(_COHORT_SEP, "cohort", "v").alias("dst"),
     )
-    # composite "cohort|node" string keys are several× wider than the
-    # ER pipeline's conv_ids — keep this caller at the old 500k collect
-    # bound rather than the raised 2M default (ADVICE round 2)
-    cc = connected_components(q, max_iter=max_iter, local_threshold=500_000)
+    cc = connected_components(q, max_iter=max_iter)
     asn = cc.assignments.select(
         F.split_part(F.col("node"), F.lit(_COHORT_SEP), F.lit(1)).alias("cohort"),
         F.split_part(F.col("node"), F.lit(_COHORT_SEP), F.lit(2)).alias("node_id"),
@@ -432,8 +418,8 @@ def assign_clusters(cc: DataFrame, all_nodes: DataFrame) -> DataFrame:
     no edges) become their own clusters.
 
     Dense renumbering runs over the DISTINCT roots only (K rows, not N)
-    via _dense_ids: driver-side for dimension-sized K, distributed
-    sort + zipWithIndex above the threshold — never a single-partition
+    via _dense_ids: driver-side for K within the driver budget,
+    distributed sort + zipWithIndex above it — never a single-partition
     window.
     """
     full = all_nodes.select("node").join(cc, "node", "left").withColumn(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from entity_resolution__spark.session import driver_rows
+
 
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected (src, dst[, weight]) → both directed orientations,
@@ -223,11 +225,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
     closing = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     # size-adaptive closing join (the broadcast-threshold idiom): the
-    # edge set is materialized, so its row count is one cheap job; a
-    # dimension-sized edge list broadcasts and the wedge table — the
-    # |E|·avg-outdeg heavy side — is never shuffled at all. Above the
-    # threshold the semi-join stays a shuffle join (AQE-splittable).
-    if oriented.count() <= 5_000_000:
+    # edge set is materialized, so its row count is one cheap job; an
+    # edge list within the driver budget (`driver_rows`) broadcasts and
+    # the wedge table — the |E|·avg-outdeg heavy side — is never
+    # shuffled at all. Above it the semi-join stays a shuffle join
+    # (AQE-splittable).
+    if oriented.count() <= driver_rows(closing):
         closing = F.broadcast(closing)
     tris = wedges.join(closing, ["x", "y"], "left_semi")
 
@@ -295,18 +298,18 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("degree"))
             .localCheckpoint(eager=True)
         )
-        if bcast_ok is None:
-            # size-adaptive survivor joins (same idiom as the triangle
-            # closing join): a dimension-sized node set broadcasts into
-            # both semi-joins so the EDGE table never shuffles during
-            # the peel; decided once on the first round's node count
-            # (the graph only shrinks). Above the threshold the joins
-            # stay shuffle joins.
-            bcast_ok = deg.count() <= 5_000_000
         bad = deg.filter(F.col("degree") < k)
         if bad.isEmpty():
             return deg
         keep = deg.filter(F.col("degree") >= k).select("node")
+        if bcast_ok is None:
+            # size-adaptive survivor joins (same idiom as the triangle
+            # closing join): a node set within the driver budget
+            # broadcasts into both semi-joins so the EDGE table never
+            # shuffles during the peel; decided once on the first
+            # round's node count (the graph only shrinks). Above the
+            # budget the joins stay shuffle joins.
+            bcast_ok = deg.count() <= driver_rows(keep)
         ku = keep.withColumnRenamed("node", "u")
         kv = keep.withColumnRenamed("node", "v")
         if bcast_ok:

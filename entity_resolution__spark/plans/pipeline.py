@@ -38,7 +38,6 @@ from entity_resolution__spark.operators.blocking import (
 from entity_resolution__spark.operators.canonicalize import canonicalize
 from entity_resolution__spark.operators.cluster import (
     assign_clusters,
-    cohort_transitive_clusters,
     connected_components,
 )
 from entity_resolution__spark.operators.constraints import flag_geo
@@ -130,20 +129,6 @@ def cohort_seed_edges(
             F.explode(F.array_intersect("c_l", "c_r")).alias("cohort"),
         )
         .withColumn("cohort", F.lower("cohort"))
-    )
-
-
-def run_cohort_transitivity(
-    scored: DataFrame,
-    countries: DataFrame,
-    min_prob: float = 0.60,
-    max_iter: int = 50,
-) -> DataFrame:
-    """Reference E3 canonical output (er_clusters_transitive.csv analog):
-    cohort-seeded transitive clusters over scored pairs. Returns
-    (cohort, node_id, cluster_id, cluster_size)."""
-    return cohort_transitive_clusters(
-        cohort_seed_edges(scored, countries, min_prob), max_iter=max_iter
     )
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cpus() -> int:
@@ -20,6 +20,51 @@ def default_cpus() -> int:
     cpuset or ``taskset`` narrows below ``os.cpu_count()``)."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEM`` if set, else half of
+    physical memory in MB. In local mode it is also the executor heap."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
+
+
+# Share of the live driver heap one size-adaptive fetch or broadcast may
+# take. At an 8 GB heap this admits ~2.1M (string, string) rows.
+DRIVER_HEAP_FRACTION = 1 / 100
+
+
+def driver_rows(df: DataFrame) -> int:
+    """Rows of `df` the driver may hold, the one rule behind every driver
+    fetch vs distributed path and broadcast vs shuffle join switch:
+    `DRIVER_HEAP_FRACTION` of the JVM max heap over Spark's per-row size
+    estimate for the schema (20 B a string, 8 a long). Callers take the
+    driver side iff their row count is ``<=`` this."""
+    heap = df.sparkSession._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    return int(DRIVER_HEAP_FRACTION * heap) // df._jdf.schema().defaultSize()
+
+
+def _gc_opts(master: str) -> str:
+    """Pin GC worker threads to the N of ``local[N]`` or
+    ``local[N,maxFailures]``. JVM ergonomics size G1's pools from the HOST
+    core count (~23 parallel GC workers on a 32-core box) however few task
+    threads run: at the 4.3M-turn input, local[8], pinning took wall 588 s
+    → 328 s. Executor JVMs of any other master size GC from their own
+    cgroup quota, so they get no options."""
+    if master == "local":
+        n_threads = 1
+    elif master.startswith("local["):
+        inner = master[len("local[") : -1].split(",")[0]
+        n_threads = (os.cpu_count() or 32) if inner == "*" else int(inner)
+    else:
+        return ""
+    return (
+        f"-XX:ParallelGCThreads={max(2, n_threads)}"
+        f" -XX:ConcGCThreads={max(1, n_threads // 4)}"
+    )
 
 
 def get_spark(
@@ -34,26 +79,6 @@ def get_spark(
         # local[N] → N; keeps shuffles 1 task/core, AQE coalesces further.
         shuffle_partitions = cpus if "local" in master else 2 * cpus
 
-    # Pin GC worker threads to the task parallelism. JVM ergonomics size
-    # G1's thread pools from the HOST core count (~5/8×32 ≈ 23 parallel
-    # GC workers on this box) no matter how few task threads local[N]
-    # runs — so under allocation pressure every GC cycle burns ~23
-    # threads of cpu against an N-thread workload. Measured at the
-    # 4.3M-turn input, local[8]: wall 588 s → 328 s, engine cpu 3,939 →
-    # 2,495 cpu-s, scores-stage cpu back to parity with the local[2]
-    # leg (1,249 vs 1,176 cpu-s) — the un-pinned runs' cpu inflation
-    # that looked like co-tenant dilution was GC ergonomics. On a real
-    # cluster each executor JVM sees its cgroup quota and sizes GC
-    # accordingly; local[N] on a big box must do it explicitly.
-    gc_opts = ""
-    if master.startswith("local"):
-        inner = master[master.index("[") + 1 : -1] if "[" in master else "1"
-        n_threads = (os.cpu_count() or 32) if inner == "*" else int(inner)
-        gc_opts = (
-            f"-XX:ParallelGCThreads={max(2, n_threads)}"
-            f" -XX:ConcGCThreads={max(1, n_threads // 4)}"
-        )
-
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -64,11 +89,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: the driver heap IS the executor heap; 32 concurrent
-        # tasks over array-heavy payloads GC-thrash a 24g heap (measured:
-        # blocks/pairs stages 5-10x slower at local[32] on 2M-turn input)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "56g"))
-        .config("spark.driver.extraJavaOptions", gc_opts)
+        .config("spark.driver.memory", default_driver_memory())
+        .config("spark.driver.extraJavaOptions", _gc_opts(master))
         .config("spark.ui.enabled", "false")
         # console progress bar pushes large \r-frames through stderr every
         # 200ms — megabytes per run through a piped/captured stderr, and a

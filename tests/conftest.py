@@ -28,3 +28,14 @@ def tiny_transcripts_sdf(spark, tiny_transcripts):
     from entity_resolution__spark.schema import TRANSCRIPTS
 
     return spark.createDataFrame(tiny_transcripts, schema=TRANSCRIPTS)
+
+
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Turn Spark's own size-based broadcast off for one test, so a
+    BroadcastHashJoin in a plan can only come from an operator's hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)

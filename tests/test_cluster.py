@@ -355,3 +355,96 @@ def test_driver_finish_fetches_at_most_node_count(spark, monkeypatch):
     assert {(r["node"], r["root"]) for r in res.assignments.collect()} == {
         (i, 0) for i in range(n)
     }
+
+
+def _node_roots(df):
+    return {(r["node"], r["root"]) for r in df.collect()}
+
+
+def test_cc_finish_on_both_sides_of_driver_budget(spark, monkeypatch):
+    """The driver finish runs iff the forest has at most `driver_rows`
+    edges; one edge over the budget takes the star loop, with the same
+    assignments."""
+    from entity_resolution__spark.operators import cluster
+
+    rng = random.Random(11)
+    nodes = [f"b{i:03d}" for i in range(100)]
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(120)]
+    e = spark.createDataFrame(edges, ["src", "dst"]).coalesce(1)
+    n_forest = cluster._local_forest_edges(e.filter("src != dst")).count()
+    got = {}
+    for budget in (n_forest, n_forest - 1):
+        monkeypatch.setattr(cluster, "driver_rows", lambda df, b=budget: b)
+        res = cluster.connected_components(e)
+        got[budget] = (res.iterations, _node_roots(res.assignments))
+    assert got[n_forest][0] == 0
+    assert got[n_forest - 1][0] > 0
+    assert got[n_forest][1] == got[n_forest - 1][1]
+
+
+def test_dense_ids_on_both_sides_of_driver_budget(spark, monkeypatch):
+    """K keys within `driver_rows` are numbered on the driver; one key
+    over it takes the distributed sort + zipWithIndex, with the same
+    dense sorted-key ids."""
+    from pyspark import RDD
+
+    from entity_resolution__spark.operators import cluster
+
+    rng = random.Random(3)
+    roots = [f"r{i:02d}" for i in range(30)]
+    rng.shuffle(roots)
+    keys = spark.createDataFrame(
+        [(r, len(r)) for r in roots], "root string, cluster_size int"
+    ).repartition(3)
+    zipped = []
+    real_zip = RDD.zipWithIndex
+
+    def spy(self):
+        zipped.append(1)
+        return real_zip(self)
+
+    monkeypatch.setattr(RDD, "zipWithIndex", spy)
+    got, n_zipped = {}, {}
+    for budget in (30, 29):
+        monkeypatch.setattr(cluster, "driver_rows", lambda df, b=budget: b)
+        got[budget] = sorted(
+            tuple(r) for r in cluster._dense_ids(keys, ["root"], "cluster_id").collect()
+        )
+        n_zipped[budget] = len(zipped)
+    want = [(r, 3, i) for i, r in enumerate(sorted(roots))]
+    assert got[30] == got[29] == want
+    assert n_zipped == {30: 0, 29: 1}
+
+
+def test_cohort_clusters_same_on_both_cc_finishes(spark, monkeypatch):
+    """cohort_transitive_clusters sizes its CC by the session rule: the
+    default budget takes the driver finish, a zero heap share the star
+    loop (and the distributed dense ids); the output is the same."""
+    from entity_resolution__spark import session
+    from entity_resolution__spark.operators import cluster
+
+    seed = spark.createDataFrame(
+        [
+            ("a", "b", "japan"),
+            ("b", "c", "japan"),
+            ("x", "y", "japan"),
+            ("a", "d", "canada"),
+            ("d", "e", "canada"),
+        ],
+        ["u", "v", "cohort"],
+    )
+    iters = []
+    real_cc = cluster.connected_components
+
+    def spy(*a, **k):
+        res = real_cc(*a, **k)
+        iters.append(res.iterations)
+        return res
+
+    monkeypatch.setattr(cluster, "connected_components", spy)
+    driver = sorted(tuple(r) for r in cluster.cohort_transitive_clusters(seed).collect())
+    monkeypatch.setattr(session, "DRIVER_HEAP_FRACTION", 0.0)
+    star = sorted(tuple(r) for r in cluster.cohort_transitive_clusters(seed).collect())
+    assert iters[0] == 0 and iters[1] > 0
+    assert driver == star
+    assert len(driver) == 8

@@ -153,3 +153,27 @@ def test_triangles_duplicate_and_reversed_edges_collapse(spark):
 
 def test_triangles_empty(spark):
     assert triangle_count(_edges_df(spark, [])).count() == 0
+
+
+def test_triangles_on_both_sides_of_driver_budget(spark, monkeypatch, no_auto_broadcast):
+    """The closing edge list broadcasts iff the oriented edge count is
+    within `driver_rows`; one edge over it keeps a shuffle join, with
+    the same counts."""
+    from entity_resolution__spark.operators import graph_algos
+
+    nodes = [f"n{i:02d}" for i in range(18)]
+    rows = [
+        (nodes[i], nodes[j])
+        for i in range(18)
+        for j in range(i + 1, 18)
+        if (i * 31 + j * 17) % 5 < 2
+    ]
+    got, plans = {}, {}
+    for budget in (len(rows), len(rows) - 1):
+        monkeypatch.setattr(graph_algos, "driver_rows", lambda df, b=budget: b)
+        out = triangle_count(_edges_df(spark, rows))
+        got[budget] = {r["node"]: r["triangles"] for r in out.collect()}
+        plans[budget] = out._jdf.queryExecution().executedPlan().toString()
+    assert got[len(rows)] == got[len(rows) - 1] == _tri_ref(rows)
+    assert "BroadcastHashJoin" in plans[len(rows)]
+    assert "BroadcastHashJoin" not in plans[len(rows) - 1]

@@ -61,3 +61,30 @@ def test_k_core_matches_replica_random(spark):
 def test_k_core_bad_k(spark):
     with pytest.raises(ValueError):
         k_core(_df(spark, [(1, 2)]), 0)
+
+
+def test_k_core_on_both_sides_of_driver_budget(spark, monkeypatch, no_auto_broadcast):
+    """The survivor set broadcasts into the peel's semi-joins iff the
+    first round's node count is within `driver_rows`; one node over it
+    keeps shuffle joins, with the same core."""
+    from entity_resolution__spark.operators import graph_algos
+
+    frame = type(spark.range(1))  # the classic DataFrame that defines it
+    plans = []
+    real_ckpt = frame.localCheckpoint
+
+    def spy(self, *a, **k):
+        out = real_ckpt(self, *a, **k)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)]
+    got, bcast = {}, {}
+    for budget in (6, 5):  # 6 nodes in the first round
+        monkeypatch.setattr(graph_algos, "driver_rows", lambda df, b=budget: b)
+        plans.clear()
+        got[budget] = {r["node"]: r["degree"] for r in graph_algos.k_core(_df(spark, edges), 3).collect()}
+        bcast[budget] = any("BroadcastHashJoin" in p for p in plans)
+    assert got[6] == got[5] == {1: 3, 2: 3, 3: 3, 4: 3}
+    assert bcast == {6: True, 5: False}

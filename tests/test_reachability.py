@@ -47,7 +47,6 @@ KEEP = {
     "functions/strings.py:lcs_ratio": "the scalar LCS-ratio reference the LCS kernels are tested against",
     "functions/strings.py:edit_ratio": "the scalar indel-ratio reference the LCS kernels are tested against",
     "plans/pipeline.py:cohort_seed_edges": "the reference pipeline's E3 cohort-seed edges (paper semantics)",
-    "plans/pipeline.py:run_cohort_transitivity": "the reference pipeline's E3 cohort-transitivity output (paper semantics)",
 }
 
 
