@@ -226,10 +226,9 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     closing = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     # size-adaptive closing join (the broadcast-threshold idiom): the
     # edge set is materialized, so its row count is one cheap job; an
-    # edge list within the driver budget (`driver_rows`) broadcasts and
-    # the wedge table — the |E|·avg-outdeg heavy side — is never
-    # shuffled at all. Above it the semi-join stays a shuffle join
-    # (AQE-splittable).
+    # edge list within `driver_rows` broadcasts and the wedge table — the
+    # |E|·avg-outdeg heavy side — is never shuffled at all. Above it the
+    # semi-join stays a shuffle join (AQE-splittable).
     if oriented.count() <= driver_rows(closing):
         closing = F.broadcast(closing)
     tris = wedges.join(closing, ["x", "y"], "left_semi")

@@ -49,11 +49,13 @@ def driver_rows(df: DataFrame) -> int:
 
 def _gc_opts(master: str) -> str:
     """Pin GC worker threads to the N of ``local[N]`` or
-    ``local[N,maxFailures]``. JVM ergonomics size G1's pools from the HOST
-    core count (~23 parallel GC workers on a 32-core box) however few task
-    threads run: at the 4.3M-turn input, local[8], pinning took wall 588 s
-    → 328 s. Executor JVMs of any other master size GC from their own
-    cgroup quota, so they get no options."""
+    ``local[N,maxFailures]``: G1 sizes its pools from the HOST core count
+    however few task threads run (local[8] on a 32-core box: wall 588 s →
+    328 s at the 4.3M-turn input). Regions stay at the 16 MB G1 picks for
+    a 56 GB heap: at 8 GB it picks 4 MB, so 2-8 MB buffers become
+    humongous and double the concurrent mark cycles (~4 JVM cpu-s per
+    steady bench-fixture pass). Other masters' executors size GC from
+    their own cgroup quota, so they get no options."""
     if master == "local":
         n_threads = 1
     elif master.startswith("local["):
@@ -63,7 +65,7 @@ def _gc_opts(master: str) -> str:
         return ""
     return (
         f"-XX:ParallelGCThreads={max(2, n_threads)}"
-        f" -XX:ConcGCThreads={max(1, n_threads // 4)}"
+        f" -XX:ConcGCThreads={max(1, n_threads // 4)} -XX:G1HeapRegionSize=16m"
     )
 
 

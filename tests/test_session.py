@@ -27,9 +27,10 @@ def test_gc_opts_read_only_the_thread_field_of_local():
     and cluster masters get no options (their executors are other JVMs)."""
     from entity_resolution__spark.session import _gc_opts
 
-    assert _gc_opts("local[4,2]") == "-XX:ParallelGCThreads=4 -XX:ConcGCThreads=1"
-    assert _gc_opts("local[8]") == "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2"
-    assert _gc_opts("local") == "-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1"
+    region = " -XX:G1HeapRegionSize=16m"
+    assert _gc_opts("local[4,2]") == "-XX:ParallelGCThreads=4 -XX:ConcGCThreads=1" + region
+    assert _gc_opts("local[8]") == "-XX:ParallelGCThreads=8 -XX:ConcGCThreads=2" + region
+    assert _gc_opts("local") == "-XX:ParallelGCThreads=2 -XX:ConcGCThreads=1" + region
     assert _gc_opts("local[*]").startswith("-XX:ParallelGCThreads=")
     assert _gc_opts("local-cluster[2,1,1024]") == ""
     assert _gc_opts("spark://host:7077") == ""
