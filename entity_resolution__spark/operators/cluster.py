@@ -7,8 +7,7 @@ one min-root union-find (`_union_find`) per partition, turning each
 partition's edges into a spanning forest (`_local_forest_edges`). A
 forest that fits the driver budget (`session.driver_rows`) is finished
 by the same union-find on the driver (`_local_dsu_components`); a
-larger one by the alternating-star
-algorithm of Kiveris et al.,
+larger one by the alternating-star algorithm of Kiveris et al.,
 "Connected Components in MapReduce and Beyond" (SoCC'14): O(log^2 n)
 rounds worst case, ~log n in practice, each round a pair of shuffles
 keyed on node id. Both give root = min member. Node ids are any

@@ -357,10 +357,6 @@ def test_driver_finish_fetches_at_most_node_count(spark, monkeypatch):
     }
 
 
-def _node_roots(df):
-    return {(r["node"], r["root"]) for r in df.collect()}
-
-
 def test_cc_finish_on_both_sides_of_driver_budget(spark, monkeypatch):
     """The driver finish runs iff the forest has at most `driver_rows`
     edges; one edge over the budget takes the star loop, with the same
@@ -376,7 +372,8 @@ def test_cc_finish_on_both_sides_of_driver_budget(spark, monkeypatch):
     for budget in (n_forest, n_forest - 1):
         monkeypatch.setattr(cluster, "driver_rows", lambda df, b=budget: b)
         res = cluster.connected_components(e)
-        got[budget] = (res.iterations, _node_roots(res.assignments))
+        roots = {(r["node"], r["root"]) for r in res.assignments.collect()}
+        got[budget] = (res.iterations, roots)
     assert got[n_forest][0] == 0
     assert got[n_forest - 1][0] > 0
     assert got[n_forest][1] == got[n_forest - 1][1]
@@ -407,9 +404,8 @@ def test_dense_ids_on_both_sides_of_driver_budget(spark, monkeypatch):
     got, n_zipped = {}, {}
     for budget in (30, 29):
         monkeypatch.setattr(cluster, "driver_rows", lambda df, b=budget: b)
-        got[budget] = sorted(
-            tuple(r) for r in cluster._dense_ids(keys, ["root"], "cluster_id").collect()
-        )
+        ids = cluster._dense_ids(keys, ["root"], "cluster_id")
+        got[budget] = sorted(tuple(r) for r in ids.collect())
         n_zipped[budget] = len(zipped)
     want = [(r, 3, i) for i, r in enumerate(sorted(roots))]
     assert got[30] == got[29] == want
@@ -442,9 +438,12 @@ def test_cohort_clusters_same_on_both_cc_finishes(spark, monkeypatch):
         return res
 
     monkeypatch.setattr(cluster, "connected_components", spy)
-    driver = sorted(tuple(r) for r in cluster.cohort_transitive_clusters(seed).collect())
+    def run():
+        return sorted(tuple(r) for r in cluster.cohort_transitive_clusters(seed).collect())
+
+    driver = run()
     monkeypatch.setattr(session, "DRIVER_HEAP_FRACTION", 0.0)
-    star = sorted(tuple(r) for r in cluster.cohort_transitive_clusters(seed).collect())
+    star = run()
     assert iters[0] == 0 and iters[1] > 0
     assert driver == star
     assert len(driver) == 8

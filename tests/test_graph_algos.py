@@ -155,7 +155,9 @@ def test_triangles_empty(spark):
     assert triangle_count(_edges_df(spark, [])).count() == 0
 
 
-def test_triangles_on_both_sides_of_driver_budget(spark, monkeypatch, no_auto_broadcast):
+def test_triangles_on_both_sides_of_driver_budget(
+    spark, monkeypatch, no_auto_broadcast
+):
     """The closing edge list broadcasts iff the oriented edge count is
     within `driver_rows`; one edge over it keeps a shuffle join, with
     the same counts."""

@@ -63,7 +63,9 @@ def test_k_core_bad_k(spark):
         k_core(_df(spark, [(1, 2)]), 0)
 
 
-def test_k_core_on_both_sides_of_driver_budget(spark, monkeypatch, no_auto_broadcast):
+def test_k_core_on_both_sides_of_driver_budget(
+    spark, monkeypatch, no_auto_broadcast
+):
     """The survivor set broadcasts into the peel's semi-joins iff the
     first round's node count is within `driver_rows`; one node over it
     keeps shuffle joins, with the same core."""
@@ -84,7 +86,8 @@ def test_k_core_on_both_sides_of_driver_budget(spark, monkeypatch, no_auto_broad
     for budget in (6, 5):  # 6 nodes in the first round
         monkeypatch.setattr(graph_algos, "driver_rows", lambda df, b=budget: b)
         plans.clear()
-        got[budget] = {r["node"]: r["degree"] for r in graph_algos.k_core(_df(spark, edges), 3).collect()}
+        core = graph_algos.k_core(_df(spark, edges), 3)
+        got[budget] = {r["node"]: r["degree"] for r in core.collect()}
         bcast[budget] = any("BroadcastHashJoin" in p for p in plans)
     assert got[6] == got[5] == {1: 3, 2: 3, 3: 3, 4: 3}
     assert bcast == {6: True, 5: False}

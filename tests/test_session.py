@@ -58,7 +58,9 @@ def test_driver_rows_is_a_heap_share_over_row_width(spark, monkeypatch):
     heap = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
     pairs = spark.createDataFrame([("a", "b")], "src string, dst string")
     ids = spark.createDataFrame([(1,)], "node long")
-    assert driver_rows(pairs) == int(heap / 100) // 40
-    assert driver_rows(ids) == int(heap / 100) // 8
+    budget = int(session.DRIVER_HEAP_FRACTION * heap)
+    assert session.DRIVER_HEAP_FRACTION == 1 / 100
+    assert driver_rows(pairs) == budget // 40
+    assert driver_rows(ids) == budget // 8
     monkeypatch.setattr(session, "DRIVER_HEAP_FRACTION", 0.0)
     assert driver_rows(pairs) == 0
