@@ -518,10 +518,9 @@ def q_cohort_clusters(spark, sf):
     """G2 cohort-seeded transitivity over testdata: strong edges = near-dup
     pairs (shingle jaccard ≥ 0.2) that SHARE the doc `lang` attribute (the
     cohort analog of the reference's shared extracted country — testdata
-    text has no country mentions, so the attribute column stands in; the
-    country-cohort seed selection is pipeline.cohort_seed_edges, and both
-    forms are exercised in tests/test_cluster.py). Per-cohort union-find,
-    then one global dense renumber over sorted (cohort, min member)."""
+    text has no country mentions, so the attribute column stands in).
+    Per-cohort union-find, then one global dense renumber over sorted
+    (cohort, min member)."""
     from entity_resolution__spark.operators.cluster import cohort_transitive_clusters
 
     d = _t(spark, sf, "documents")

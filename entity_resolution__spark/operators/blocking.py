@@ -10,11 +10,14 @@ The reference blocks by brute-force TF-IDF cosine kNN over all N entities
 
 Two conversations become a candidate pair iff they share ≥1 key. Hot
 keys (skew) are handled by `saltjoin.capped_salted_self_join`, which
-`pairs.candidate_pairs` calls: a block larger than `max_block` is
-dropped, and a block larger than `salt_threshold` is split into S salted
-sub-blocks whose pairs are generated per sub-block PAIR (triangle
+`pairs.candidate_pairs` calls: a block larger than `pairs.MAX_BLOCK` is
+dropped, and a block larger than `pairs.SALT_THRESHOLD` is split into S
+salted sub-blocks whose pairs are generated per sub-block PAIR (triangle
 enumeration), so every pair is still emitted exactly once but no single
 task holds the whole hot block.
+
+The blocking parameters are the module constants below; the pipeline
+folds them into its stage fingerprints (`ERConfig.params`).
 """
 
 from __future__ import annotations
@@ -32,28 +35,27 @@ from pyspark.sql.functions import pandas_udf
 
 # share of the corpus above which a token is a stopword, not a block key
 MAX_DF_FRAC = 0.005
+# absolute document-frequency cap on a token key
+RARE_TOKEN_MAX_DF = 200
+# token keys per conversation, rarest first
+RARE_TOKENS_PER_CONV = 4
 
 
-def rare_token_keys(
-    conv: DataFrame,
-    max_df: int = 200,
-    per_conv: int = 4,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Keys = up to `per_conv` rarest tokens of each conversation.
+def rare_token_keys(conv: DataFrame, n_docs: int | None = None) -> DataFrame:
+    """Keys = up to RARE_TOKENS_PER_CONV rarest tokens of each conversation.
 
     Document frequency is a groupBy aggregate (map-side combined); tokens
     with DF > the cap are dropped (stopword-like, would create hot
-    blocks). The cap is min(max_df, MAX_DF_FRAC·N): an absolute cap alone
-    is wrong under corpus growth — a token in 0.5% of 10¹⁰ conversations
-    is a stopword, not a key. Rarest-token blocking is the scalable
-    analog of the reference's TF-IDF weighting: rare tokens carry the
-    discriminative signal.
+    blocks). The cap is min(RARE_TOKEN_MAX_DF, MAX_DF_FRAC·N): an
+    absolute cap alone is wrong under corpus growth — a token in 0.5% of
+    10¹⁰ conversations is a stopword, not a key. Rarest-token blocking is
+    the scalable analog of the reference's TF-IDF weighting: rare tokens
+    carry the discriminative signal.
     """
     # n_docs threads one corpus count through every operator that needs
     # it (round-1 flag: 3 redundant count jobs per pipeline run)
     n = n_docs if n_docs is not None else conv.count()
-    max_df = max(10, min(max_df, int(MAX_DF_FRAC * n)))
+    max_df = max(10, min(RARE_TOKEN_MAX_DF, int(MAX_DF_FRAC * n)))
     tok = conv.select("conv_id", F.explode("token_set").alias("token"))
     df_counts = token_doc_freq(conv)
     ranked = (
@@ -66,7 +68,7 @@ def rare_token_keys(
                 )
             ),
         )
-        .filter(F.col("rn") <= per_conv)
+        .filter(F.col("rn") <= RARE_TOKENS_PER_CONV)
     )
     return ranked.select("conv_id", F.col("token").alias("block_key"))
 
@@ -88,21 +90,29 @@ def token_doc_freq(conv: DataFrame) -> DataFrame:
 
 _MERSENNE = (1 << 61) - 1
 
+# signature length (permutations) and LSH bands: 8 rows/band is a strict
+# S-curve. Rare-token keys carry family recall (pair completeness ≥0.99
+# on the fixtures); LSH is the near-dup backup, so a steep curve keeps
+# pair volume low.
+MINHASH_PERM = 32
+MINHASH_BANDS = 4
+# shingle width (characters) and the seed of the permutation family
+QGRAM = 4
+MINHASH_SEED = 7
 
-def _minhash_params(num_perm: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.default_rng(seed)
+
+def _minhash_params(num_perm: int) -> tuple[np.ndarray, np.ndarray]:
+    rng = np.random.default_rng(MINHASH_SEED)
     a = rng.integers(1, _MERSENNE, size=num_perm, dtype=np.uint64)
     b = rng.integers(0, _MERSENNE, size=num_perm, dtype=np.uint64)
     return a, b
 
 
-def minhash_sig_series(
-    texts: pd.Series, num_perm: int = 32, qgram: int = 4, seed: int = 7
-) -> pd.Series:
+def minhash_sig_series(texts: pd.Series, num_perm: int = MINHASH_PERM) -> pd.Series:
     """text → int64[num_perm] MinHash signature, one array per row.
 
-    Shingles are character q-grams of the text; the whole batch stays in
-    numpy, no per-row Python in the hot loop beyond the shingle split.
+    Shingles are the text's character QGRAM-grams; the whole batch stays
+    in numpy, no per-row Python in the hot loop beyond the shingle split.
     Hash family: (a·h + b mod 2⁶⁴) mod p per permutation — numpy uint64
     arithmetic WRAPS the product before the Mersenne reduction, so this
     is a deterministic mixing family, NOT a textbook Carter-Wegman
@@ -113,7 +123,8 @@ def minhash_sig_series(
     tests) is what actually pins behavior. The signatures are block
     keys, so shingling, hashing and parameters must not change.
     """
-    a, b = _minhash_params(num_perm, seed)
+    a, b = _minhash_params(num_perm)
+    qgram = QGRAM  # a local: the shingle loop reads it per character
     # pd.util.hash_array: deterministic 64-bit hashing (fixed-key
     # siphash), vectorized — immune to PYTHONHASHSEED randomization.
     # Hashing is BATCHED across rows (one call per ~200k shingles): the
@@ -163,29 +174,25 @@ def minhash_sig_series(
     return pd.Series(out, index=texts.index, dtype=object)
 
 
-def make_minhash_udf(num_perm: int = 32, qgram: int = 4, seed: int = 7):
+def make_minhash_udf(num_perm: int = MINHASH_PERM):
     """minhash_sig_series as a standalone Arrow UDF: text → array<long>."""
     from pyspark.sql import types as T
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def minhash_sig(texts: pd.Series) -> pd.Series:
-        return minhash_sig_series(texts, num_perm, qgram, seed)
+        return minhash_sig_series(texts, num_perm)
 
     return minhash_sig
 
 
-def minhash_band_keys(
-    conv: DataFrame,
-    num_perm: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """LSH banding of the `sig` column canonicalize emits: the signature
-    split into `bands` rows-per-band groups; block_key = band index +
-    hash of the band slice. Pairs agreeing on any band become candidates
-    (classic MinHash-LSH S-curve).
+def minhash_band_keys(conv: DataFrame) -> DataFrame:
+    """LSH banding of the MINHASH_PERM-long `sig` column canonicalize
+    emits: the signature split into MINHASH_BANDS groups of rows;
+    block_key = band index + hash of the band slice. Pairs agreeing on
+    any band become candidates (classic MinHash-LSH S-curve).
     """
-    assert num_perm % bands == 0
-    rows_per_band = num_perm // bands
+    assert MINHASH_PERM % MINHASH_BANDS == 0
+    rows_per_band = MINHASH_PERM // MINHASH_BANDS
     keys = conv.select(
         "conv_id",
         F.explode(
@@ -198,7 +205,7 @@ def minhash_band_keys(
                             F.slice("sig", i * rows_per_band + 1, rows_per_band)
                         ).cast("string"),
                     )
-                    for i in range(bands)
+                    for i in range(MINHASH_BANDS)
                 ]
             )
         ).alias("block_key"),

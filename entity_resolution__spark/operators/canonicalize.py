@@ -37,15 +37,17 @@ from entity_resolution__spark.functions.normalize import (
     normalize_series,
     token_set,
 )
-from entity_resolution__spark.operators.blocking import minhash_sig_series
+from entity_resolution__spark.operators import blocking
 from entity_resolution__spark.operators.constraints import countries_series
 
 
-def _conversation_text_udf(num_perm: int):
+def _conversation_text_udf():
     """Arrow UDF full_text → struct(norm_text, tokens, sig, countries).
 
-    `sig` is the num_perm-row MinHash signature of full_text; norm_text
-    is NFKD-folded once and tokens are its token runs."""
+    `sig` is the blocking.MINHASH_PERM-row MinHash signature of
+    full_text; norm_text is NFKD-folded once and tokens are its token
+    runs."""
+    num_perm = blocking.MINHASH_PERM  # read here, on the driver
 
     @pandas_udf(
         T.StructType(
@@ -63,7 +65,7 @@ def _conversation_text_udf(num_perm: int):
             {
                 "norm_text": norm,
                 "tokens": norm.str.findall(_TOKEN_RE),
-                "sig": minhash_sig_series(full_text, num_perm),
+                "sig": blocking.minhash_sig_series(full_text, num_perm),
                 "countries": countries_series(full_text),
             }
         )
@@ -71,15 +73,14 @@ def _conversation_text_udf(num_perm: int):
     return conversation_text
 
 
-def canonicalize(transcripts: DataFrame, num_perm: int = 32) -> DataFrame:
+def canonicalize(transcripts: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → one row per
     conversation: (conv_id, n_turns, turn_texts, roles, tools, full_text,
     norm_text, tokens, token_set, sig, countries).
 
     sort_array on struct(turn_idx, ...) sorts lexicographically by the
     first field — turn_idx — giving the stable turn ordering; ties cannot
-    occur (turn_idx unique per conv_id). `num_perm` sizes the MinHash
-    signature.
+    occur (turn_idx unique per conv_id).
     """
     turns = F.array_sort(
         F.collect_list(
@@ -114,7 +115,7 @@ def canonicalize(transcripts: DataFrame, num_perm: int = 32) -> DataFrame:
         )
     )
     return conv.withColumn(
-        "_ct", _conversation_text_udf(num_perm)(F.col("full_text"))
+        "_ct", _conversation_text_udf()(F.col("full_text"))
     ).select(
         *conv.columns,
         F.col("_ct.norm_text").alias("norm_text"),

@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 
 from entity_resolution__spark.session import driver_rows
 
+# star-loop round cap; the loop stops earlier at its fixpoint
+CC_MAX_ITER = 50
+
 
 def _symmetric(edges: DataFrame) -> DataFrame:
     """(src,dst) undirected edge list → both-direction (u,v), no self-loops."""
@@ -247,7 +250,6 @@ def _local_forest_edges(edges: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 50,
     on_iteration=None,
     local_threshold: int | None = None,
 ) -> CCResult:
@@ -312,7 +314,7 @@ def connected_components(
     # runs ≥1 iteration and compares consecutive iteration fingerprints.
     prev_fp: tuple[int, int] | None = None
     it = 0
-    for it in range(1, max_iter + 1):
+    for it in range(1, CC_MAX_ITER + 1):
         e = _small_star(_large_star(_resym(e))).localCheckpoint(eager=True)
         fp = _fingerprint(e)
         if on_iteration is not None:
@@ -360,7 +362,7 @@ def _dense_ids(distinct_keys: DataFrame, key_cols: list[str], id_col: str) -> Da
 _COHORT_SEP = "\x1f"
 
 
-def cohort_transitive_clusters(seed: DataFrame, max_iter: int = 50) -> DataFrame:
+def cohort_transitive_clusters(seed: DataFrame) -> DataFrame:
     """G2 cohort-seeded transitivity (reference
     /root/reference/scripts/apply_transitivity.py:107-168): union-find
     run SEPARATELY per cohort over seed edges (u, v, cohort), then one
@@ -387,7 +389,7 @@ def cohort_transitive_clusters(seed: DataFrame, max_iter: int = 50) -> DataFrame
         F.concat_ws(_COHORT_SEP, "cohort", "u").alias("src"),
         F.concat_ws(_COHORT_SEP, "cohort", "v").alias("dst"),
     )
-    cc = connected_components(q, max_iter=max_iter)
+    cc = connected_components(q)
     asn = cc.assignments.select(
         F.split_part(F.col("node"), F.lit(_COHORT_SEP), F.lit(1)).alias("cohort"),
         F.split_part(F.col("node"), F.lit(_COHORT_SEP), F.lit(2)).alias("node_id"),

@@ -123,7 +123,7 @@ def extract_countries(texts: pd.Series) -> pd.Series:
     return countries_series(texts)
 
 
-def flag_geo(scored: DataFrame, conv: DataFrame, min_prob: float = 0.45) -> DataFrame:
+def flag_geo(scored: DataFrame, conv: DataFrame, min_prob: float) -> DataFrame:
     """Pairs with prob_match ≥ min_prob, plus `geo_pruned`: both sides
     have country evidence AND the sets are disjoint
     (geo_constraints.py:112-152, apply_constraints.py:40-66). A side

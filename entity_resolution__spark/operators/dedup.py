@@ -24,16 +24,15 @@ from pyspark.sql.functions import pandas_udf
 from entity_resolution__spark.operators.saltjoin import capped_salted_self_join
 from entity_resolution__spark.operators.textstats import tokens_col
 
-# Per-(band, bucket) size cap + salting thresholds for the LSH candidate
-# join (round-4: round-3 VERDICT's last quadratic-blowup path — a
-# Zipf-head shingle whose md5 is the band minimum for millions of docs
-# put n² pairs through one task). Shared with the DuckDB oracle so the
-# drop is part of the operator's SEMANTICS, not a plan detail. At the
-# cap, one bucket contributes ≤ max² /2 ≈ 8.4M rerank pairs split over
-# S(S+1)/2 salt tasks of (max/S)² ≈ 262k pairs each.
+# Per-(band, bucket) size cap for the LSH candidate join (round-4:
+# round-3 VERDICT's last quadratic-blowup path — a Zipf-head shingle
+# whose md5 is the band minimum for millions of docs put n² pairs
+# through one task). Shared with the DuckDB oracle so the drop is part
+# of the operator's SEMANTICS, not a plan detail. At the cap, one bucket
+# contributes ≤ max² /2 ≈ 8.4M rerank pairs, which
+# capped_salted_self_join's default salting (above 512 members, 8
+# salts) splits over S(S+1)/2 salt tasks of (max/S)² ≈ 262k pairs each.
 NGRAM_MAX_BUCKET = 4096
-NGRAM_SALT_THRESHOLD = 512
-NGRAM_N_SALTS = 8
 
 
 def lsh_scheme(
@@ -249,11 +248,7 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_hashes: int | None = None,
-    band_size: int | None = None,
     max_bucket: int = NGRAM_MAX_BUCKET,
-    salt_threshold: int = NGRAM_SALT_THRESHOLD,
-    n_salts: int = NGRAM_N_SALTS,
 ) -> DataFrame:
     """Near-dup pairs by word-n-gram Jaccard ≥ threshold.
 
@@ -262,45 +257,24 @@ def ngram_jaccard_pairs(
     DERIVED FROM THE THRESHOLD via lsh_scheme (≥95% recall at J =
     threshold): t=0.8 → 5 bands of 3, t=0.2 → 14 bands of 1. Round 2's
     fixed 4×2 scheme gave ~15% recall to t=0.2 callers (ADVICE round 2).
-    Explicit n_hashes/band_size still override for callers that pin a
-    scheme (pinning only one of them recomputes the band count for the
-    pinned row size — ADVICE round 3: mixing the caller's band_size with
-    a band count tuned for a different row size silently missed the
-    recall target). Deterministic (md5), so the DuckDB oracle reproduces
-    the exact candidate set; random pairs (J≈0.003 on shingles) collide
-    with ~b·t_shingle^r probability, so candidate volume stays ~linear
-    in the true near-dup count instead of the hot-block quadratic blowup
-    of first-token blocking (round-1 flag).
+    Deterministic (md5), so the DuckDB oracle reproduces the exact
+    candidate set; random pairs (J≈0.003 on shingles) collide with
+    ~b·t_shingle^r probability, so candidate volume stays ~linear in the
+    true near-dup count instead of the hot-block quadratic blowup of
+    first-token blocking (round-1 flag).
 
     Hot buckets (round 4): the band self-join goes through
     saltjoin.capped_salted_self_join — buckets over `max_bucket` are
     dropped (stopword-grade band keys; same cap in the DuckDB oracle),
-    buckets over `salt_threshold` are triangle-salted so one degenerate
-    band bucket can never put n² pairs through a single task.
+    and the engine triangle-salts hot buckets below the cap so one
+    degenerate band bucket can never put n² pairs through a single task.
 
     `block` overrides with key-equality blocking (exact recall within a
     key; used by tests that assert low-J pairs deterministically); it
     runs through the same capped/salted join.
     """
-    if band_size is None or n_hashes is None:
-        bands_n, rows_n = lsh_scheme(threshold)
-        if band_size is None and n_hashes is None:
-            band_size, n_hashes = rows_n, bands_n * rows_n
-        elif band_size is None:
-            # n_hashes pinned: keep the scheme's row count if it fits,
-            # else whole-signature bands (never index past n_hashes)
-            band_size = rows_n if rows_n <= n_hashes else n_hashes
-        else:
-            # band_size pinned: recompute the band count FOR THAT row
-            # size (b = ceil(ln(1-recall)/ln(1-t^r))) instead of reusing
-            # the scheme's count computed for a different r
-            t = min(max(threshold, 0.01), 0.99)
-            b = math.ceil(math.log(1.0 - 0.95) / math.log(1.0 - t**band_size))
-            n_hashes = min(b, 32) * band_size
-    band_size = min(band_size, n_hashes)
-    # only FULL bands: a trailing partial band would reference minhash
-    # columns that don't exist (round-3 review) and skew the S-curve
-    n_full = (n_hashes // band_size) * band_size
+    n_bands, band_size = lsh_scheme(threshold)
+    n_full = n_bands * band_size
     # shingles are carried as 12-hex-char md5 prefixes, not text: the
     # rerank join ships every candidate pair's two shingle sets, and
     # compact fixed-width keys cut those shuffle bytes ~3× while
@@ -350,8 +324,6 @@ def ngram_jaccard_pairs(
             ["bk"],
             id_col="id",
             max_bucket=max_bucket,
-            salt_threshold=salt_threshold,
-            n_salts=n_salts,
         ).select("id_left", "id_right")
     else:
         mh = [
@@ -376,8 +348,6 @@ def ngram_jaccard_pairs(
             ["band", "bucket"],
             id_col="id",
             max_bucket=max_bucket,
-            salt_threshold=salt_threshold,
-            n_salts=n_salts,
         ).select("id_left", "id_right")
     cand = cand.dropDuplicates(["id_left", "id_right"])
     # rerank: |A∪B| is NOT materialized — shingle sets are distinct, so
@@ -425,8 +395,6 @@ def simhash_neardup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = NGRAM_MAX_BUCKET,
-    salt_threshold: int = NGRAM_SALT_THRESHOLD,
-    n_salts: int = NGRAM_N_SALTS,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
@@ -485,8 +453,6 @@ def simhash_neardup_pairs(
             ["band", "bv"],
             id_col="id",
             max_bucket=max_bucket,
-            salt_threshold=salt_threshold,
-            n_salts=n_salts,
         )
         .select("id_left", "id_right")
         .dropDuplicates(["id_left", "id_right"])
@@ -511,8 +477,6 @@ def shared_window_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = NGRAM_MAX_BUCKET,
-    salt_threshold: int = NGRAM_SALT_THRESHOLD,
-    n_salts: int = NGRAM_N_SALTS,
 ) -> DataFrame:
     """EXACT substring-duplication pairs: (id_left, id_right,
     n_shared_windows) for every document pair sharing ≥1 length-
@@ -564,8 +528,6 @@ def shared_window_pairs(
         key_cols=["win"],
         id_col="id",
         max_bucket=max_bucket,
-        salt_threshold=salt_threshold,
-        n_salts=n_salts,
     )
     return (
         pairs.groupBy("id_left", "id_right")
@@ -579,8 +541,6 @@ def exact_jaccard_join(
     threshold: float = 0.2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    salt_threshold: int = NGRAM_SALT_THRESHOLD,
-    n_salts: int = NGRAM_N_SALTS,
 ) -> DataFrame:
     """EXACT shingle-Jaccard self-join: every pair with
     J(shingles_a, shingles_b) ≥ threshold, 100% recall — the
@@ -600,9 +560,9 @@ def exact_jaccard_join(
     Scale shape: the prefix join keys on the RAREST shingles of each
     doc — exactly the keys with the smallest buckets (the head of the
     Zipf curve never enters a prefix unless a doc has nothing rarer).
-    The self-join is triangle-salted above salt_threshold but NOT
-    capped (uncapped max_bucket): dropping hot buckets would break the
-    exactness contract — skew is handled, recall is not traded.
+    The self-join is triangle-salted (the engine's default threshold)
+    but NOT capped (uncapped max_bucket): dropping hot buckets would
+    break the exactness contract — skew is handled, recall is not traded.
     Verification is one pair-keyed join of the (already materialized)
     sorted shingle arrays; jaccard = inter/(|a|+|b|−inter) is one
     exact integer-derived division, identical on any engine."""
@@ -653,8 +613,6 @@ def exact_jaccard_join(
             key_cols=["g"],
             id_col="id",
             max_bucket=2**31 - 1,  # EXACT: never drop, only salt
-            salt_threshold=salt_threshold,
-            n_salts=n_salts,
         )
         .select("id_left", "id_right")
         .distinct()

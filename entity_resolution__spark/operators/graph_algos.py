@@ -65,7 +65,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 10,
-    weighted: bool = True,
 ) -> DataFrame:
     """Directed (src, dst[, weight]) → (node, rank) after a FIXED
     number of power iterations from the uniform vector — fixed (not
@@ -76,6 +75,7 @@ def pagerank(
                                    + dangling_i/n)
     where dangling_i = Σ rank_i over nodes with no out-edges (their
     mass redistributes uniformly — the standard teleport treatment).
+    w(u→v) is the `weight` column when the edges carry one, else 1.
     Undirected callers pass `symmetrize(edges)`, which also guarantees
     no dangling nodes.
 
@@ -88,11 +88,7 @@ def pagerank(
     """
     if iterations < 0:
         raise ValueError(f"iterations must be >= 0, got {iterations}")
-    w_col = (
-        F.col("weight").cast("double")
-        if weighted and "weight" in edges.columns
-        else F.lit(1.0)
-    )
+    w_col = F.col("weight").cast("double") if "weight" in edges.columns else F.lit(1.0)
     e = (
         edges.select("src", "dst", w_col.alias("w"))
         .filter(F.col("src") != F.col("dst"))

@@ -17,7 +17,8 @@ blocks (reference analog: the max_df=0.9 stopword-key cutoff at
      of a stopword block), and downstream rerank cost n²/2 per bucket
      would dominate the job. The cap is mirrored in the DuckDB oracles
      so the semantics, not just the plan, are pinned.
-  2. buckets over `salt_threshold` are TRIANGLE-SALTED: members get
+  2. buckets over `salt_threshold` (default 512; ER blocks pass
+     `pairs.SALT_THRESHOLD`, 200) are TRIANGLE-SALTED: members get
      salt = pmod(xxhash64(id), S), BOTH join sides are expanded against
      the (si ≤ sj) salt-pair table, and the join keys on
      (bucket, si, sj) — so every unordered pair lands in exactly one of

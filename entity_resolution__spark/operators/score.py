@@ -39,13 +39,13 @@ SCORE_WEIGHTS: dict[str, float] = {
     "tool_seq_sim": 0.05,
 }
 
-DEFAULT_THRESHOLD = 0.60  # pred_match cut; mirrors transitivity seed 0.60
+# The pre-gate below the reference's C4 token-overlap prune of 0.20
+# (token_overlap_constraint.py:26): conservative, never prunes a pair
+# the reference keeps.
+MIN_TOKEN_JACCARD = 0.15
 
 
-def featurize_pairs(
-    pairs_with_payload: DataFrame,
-    min_token_jaccard: float = 0.15,
-) -> DataFrame:
+def featurize_pairs(pairs_with_payload: DataFrame) -> DataFrame:
     """Pairs joined with payload cols (norm_text/token_set/roles_seq/
     tools_seq ×_l/_r) → + the 10 feature columns. token_jaccard stays in
     Catalyst; the rest is one Arrow-batched struct UDF call (one Python
@@ -53,7 +53,7 @@ def featurize_pairs(
     norm_text inside the kernel, so the payload ships no `tokens` column
     (shuffle bytes were the 8→32 scaling limiter at 537k turns).
 
-    min_token_jaccard is the C4 token-overlap prune of the reference
+    MIN_TOKEN_JACCARD is the C4 token-overlap prune of the reference
     (token_overlap_constraint.py:26 prunes < 0.20) applied BEFORE the
     expensive kernels: the cheap codegen'd jaccard gates the Python UDF,
     so blocking false-positives never pay the string-kernel cost. The
@@ -63,16 +63,15 @@ def featurize_pairs(
     df = pairs_with_payload.withColumn(
         "token_jaccard", jaccard(F.col("token_set_l"), F.col("token_set_r"))
     )
-    if min_token_jaccard > 0:
-        # reference skip semantics (token_overlap_constraint.py:16-70):
-        # NEVER prune when either side has no tokens — no evidence is not
-        # negative evidence. The empty-side jaccard convention is 0.0, so
-        # without the exemption such pairs would be silently dropped.
-        df = df.filter(
-            (F.col("token_jaccard") >= F.lit(min_token_jaccard))
-            | (F.size("token_set_l") == 0)
-            | (F.size("token_set_r") == 0)
-        )
+    # reference skip semantics (token_overlap_constraint.py:16-70):
+    # NEVER prune when either side has no tokens — no evidence is not
+    # negative evidence. The empty-side jaccard convention is 0.0, so
+    # without the exemption such pairs would be silently dropped.
+    df = df.filter(
+        (F.col("token_jaccard") >= F.lit(MIN_TOKEN_JACCARD))
+        | (F.size("token_set_l") == 0)
+        | (F.size("token_set_r") == 0)
+    )
     df = df.withColumn(
         "_f",
         feat(
@@ -90,9 +89,10 @@ def featurize_pairs(
     return df.drop("_f")
 
 
-def score_pairs(features_df: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
+def score_pairs(features_df: DataFrame, threshold: float) -> DataFrame:
     """Weighted deterministic score → (id_left, id_right, prob_match,
-    pred_match) + passthrough of feature columns."""
+    pred_match ≡ prob_match ≥ threshold) + passthrough of feature
+    columns."""
     expr = None
     for c, w in SCORE_WEIGHTS.items():
         term = F.col(c) * F.lit(w)

@@ -198,8 +198,6 @@ def sign_bucket_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int = 4096,
-    salt_threshold: int = 512,
-    n_salts: int = 8,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via AXIS-ALIGNED sign-bucket LSH:
     bucket = sign pattern of the first n_dims coordinates; candidates =
@@ -228,8 +226,6 @@ def sign_bucket_neardup_pairs(
         ["bucket"],
         id_col=id_col,
         max_bucket=max_bucket,
-        salt_threshold=salt_threshold,
-        n_salts=n_salts,
     ).select("id_left", "id_right")
     return _rerank_bucket_pairs(emb, cand, id_col, vec_col).filter(
         F.col("cos_sim") >= threshold

@@ -19,6 +19,14 @@ one they stay lazy and run inside the clusters stage. CC picks its
 finish by size on both paths; with a store, star-loop rounds (if any)
 commit to one `cluster_iter` stage that a rerun resumes from.
 
+Parameters have one home each. `ERConfig` holds what a run chooses: the
+keep and cluster thresholds (and `stage_timing`, which nothing reads).
+The rest are constants of the operators that read them:
+`blocking.MINHASH_PERM`, `MINHASH_BANDS`, `RARE_TOKEN_MAX_DF`,
+`RARE_TOKENS_PER_CONV`; `pairs.MAX_BLOCK`; `score.MIN_TOKEN_JACCARD`;
+`cluster.CC_MAX_ITER`. `ERConfig.params()` reads all of them into every
+stage fingerprint, so editing a constant recomputes a stored run.
+
 Mirrors the reference entry points E1–E3 (SURVEY.md §3) as one lazy
 Spark DAG with explicit stage boundaries.
 """
@@ -31,10 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entity_resolution__spark.operators.blocking import (
-    minhash_band_keys,
-    rare_token_keys,
-)
+from entity_resolution__spark.operators import blocking, cluster, score
+from entity_resolution__spark.operators import pairs as pair_ops
 from entity_resolution__spark.operators.canonicalize import canonicalize
 from entity_resolution__spark.operators.cluster import (
     assign_clusters,
@@ -48,32 +54,32 @@ from entity_resolution__spark.plans.checkpoint import StageStore
 
 @dataclass
 class ERConfig:
-    # blocking
-    minhash_perm: int = 32
-    minhash_bands: int = 4  # 8 rows/band: strict S-curve — rare-token
-    # keys carry family recall (pair completeness ≥0.99 on fixtures);
-    # LSH is the near-dup backup, so a steep curve keeps pair volume low
-    rare_token_max_df: int = 200
-    rare_tokens_per_conv: int = 4
-    max_block: int = 2000  # blocks under it that are hot are salted by
-    # candidate_pairs' own defaults: salting changes the plan, not pairs
-    # scoring / constraints (reference thresholds: 0.45 keep, 0.60 seed,
-    # C4 token-overlap prune 0.20 → our pre-filter 0.15 is conservative)
-    min_token_jaccard: float = 0.15
+    """The thresholds a run chooses (the reference's 0.45 keep and 0.60
+    seed); main.py sets both. Every other ER parameter is a constant of
+    the operator that reads it."""
+
     keep_threshold: float = 0.45
     cluster_threshold: float = 0.60
-    # clustering
-    cc_max_iter: int = 50
     # Not semantic and no longer read: every stage boundary is timed
     # into ERResult.stage_wall. Kept only because perfbench/workloads.py
     # still constructs ERConfig(stage_timing=...).
     stage_timing: bool = False
 
-    _NON_SEMANTIC = ("stage_timing",)
-
     def params(self) -> dict:
+        """What every stage fingerprint folds in: both thresholds and the
+        operator constants, read at call time, so a changed constant
+        invalidates a stored run. Renaming a key, or changing a value's
+        type, invalidates every committed warehouse too."""
         return {
-            k: v for k, v in self.__dict__.items() if k not in self._NON_SEMANTIC
+            "minhash_perm": blocking.MINHASH_PERM,
+            "minhash_bands": blocking.MINHASH_BANDS,
+            "rare_token_max_df": blocking.RARE_TOKEN_MAX_DF,
+            "rare_tokens_per_conv": blocking.RARE_TOKENS_PER_CONV,
+            "max_block": pair_ops.MAX_BLOCK,
+            "min_token_jaccard": score.MIN_TOKEN_JACCARD,
+            "keep_threshold": self.keep_threshold,
+            "cluster_threshold": self.cluster_threshold,
+            "cc_max_iter": cluster.CC_MAX_ITER,
         }
 
 
@@ -95,40 +101,9 @@ class ERResult:
         after every store-less pass."""
 
 
-def build_blocks(conv: DataFrame, cfg: ERConfig, n_docs: int | None = None) -> DataFrame:
-    return rare_token_keys(
-        conv,
-        max_df=cfg.rare_token_max_df,
-        per_conv=cfg.rare_tokens_per_conv,
-        n_docs=n_docs,
-    ).unionByName(
-        minhash_band_keys(conv, num_perm=cfg.minhash_perm, bands=cfg.minhash_bands)
-    )
-
-
-def cohort_seed_edges(
-    scored: DataFrame, countries: DataFrame, min_prob: float = 0.60
-) -> DataFrame:
-    """G2 seed selection (reference apply_transitivity.py:107-119): keep
-    edges with prob ≥ min_prob AND ≥1 shared extracted country, exploded
-    one row per shared country (the cohort). Cohorts are lowercased
-    canonical names, as in the reference."""
-    cl = countries.select(
-        F.col("conv_id").alias("id_left"), F.col("countries").alias("c_l")
-    )
-    cr = countries.select(
-        F.col("conv_id").alias("id_right"), F.col("countries").alias("c_r")
-    )
-    strong = scored.filter(F.col("prob_match") >= F.lit(min_prob))
-    return (
-        strong.join(cl, "id_left")
-        .join(cr, "id_right")
-        .select(
-            F.col("id_left").cast("string").alias("u"),
-            F.col("id_right").cast("string").alias("v"),
-            F.explode(F.array_intersect("c_l", "c_r")).alias("cohort"),
-        )
-        .withColumn("cohort", F.lower("cohort"))
+def build_blocks(conv: DataFrame, n_docs: int | None = None) -> DataFrame:
+    return blocking.rare_token_keys(conv, n_docs=n_docs).unionByName(
+        blocking.minhash_band_keys(conv)
     )
 
 
@@ -197,21 +172,17 @@ def run_pipeline(
     # fused Arrow UDF. Its column list is part of the stage fingerprint:
     # the params alone do not change when the snapshot gains columns, and
     # a warehouse written before `sig`/`countries` existed must recompute.
-    conv_plan = canonicalize(transcripts, num_perm=cfg.minhash_perm)
+    conv_plan = canonicalize(transcripts)
     conv = staged("conversations", lambda: conv_plan, columns=conv_plan.columns)
 
     # one corpus count, threaded to the blocking DF caps
     n_docs = conv.count()
 
     blocks = staged(
-        "blocks", lambda: build_blocks(conv, cfg, n_docs=n_docs), ["conversations"]
+        "blocks", lambda: build_blocks(conv, n_docs=n_docs), ["conversations"]
     )
 
-    pairs = staged(
-        "candidate_pairs",
-        lambda: candidate_pairs(blocks, max_block=cfg.max_block),
-        ["blocks"],
-    )
+    pairs = staged("candidate_pairs", lambda: candidate_pairs(blocks), ["blocks"])
 
     def compute_scored() -> DataFrame:
         # slim payload: the feature kernel derives token vectors from
@@ -236,7 +207,7 @@ def run_pipeline(
         # size-based coalescing would shrink this stage to a handful of
         # tasks — pin it to the core count so kernels use every core
         payload = payload.repartition(spark.sparkContext.defaultParallelism)
-        feats = featurize_pairs(payload, min_token_jaccard=cfg.min_token_jaccard)
+        feats = featurize_pairs(payload)
         return score_pairs(feats, threshold=cfg.cluster_threshold).select(
             "id_left",
             "id_right",
@@ -283,7 +254,7 @@ def run_pipeline(
                     e, "cluster_iter", edges_snap, ["edges"], {"round": it}
                 )
 
-        cc = connected_components(src, max_iter=cfg.cc_max_iter, on_iteration=on_iter)
+        cc = connected_components(src, on_iteration=on_iter)
         cc_iter_store["iterations"] = cc.iterations
         all_nodes = conv.select(F.col("conv_id").alias("node"))
         return assign_clusters(cc.assignments, all_nodes)

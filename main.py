@@ -24,13 +24,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def parse_args(argv=None):
+    from entity_resolution__spark.plans.pipeline import ERConfig
+
     p = argparse.ArgumentParser()
     p.add_argument("--input", help="transcripts table/path (parquet dir or table)")
     p.add_argument("--synthetic", type=int, default=0, help="generate N synthetic entities instead of --input")
     p.add_argument("--warehouse", default=".data/warehouse")
     p.add_argument("--master", default=None)
-    p.add_argument("--keep-threshold", type=float, default=0.45)
-    p.add_argument("--cluster-threshold", type=float, default=0.60)
+    p.add_argument("--keep-threshold", type=float, default=ERConfig.keep_threshold)
+    p.add_argument("--cluster-threshold", type=float, default=ERConfig.cluster_threshold)
     p.add_argument("--output", help="optional parquet path for final clusters")
     return p.parse_args(argv)
 

@@ -64,8 +64,8 @@ def test_band_keys_over_fused_sig_equal_standalone_udf(spark, tiny_transcripts_s
     standalone = conv.drop("sig").withColumn(
         "sig", make_minhash_udf(num_perm=32)(F.col("full_text"))
     )
-    fused_keys = minhash_band_keys(conv, num_perm=32, bands=4)
-    udf_keys = minhash_band_keys(standalone, num_perm=32, bands=4)
+    fused_keys = minhash_band_keys(conv)
+    udf_keys = minhash_band_keys(standalone)
     assert fused_keys.count() == 4 * conv.count()
     assert fused_keys.exceptAll(udf_keys).count() == 0
     assert udf_keys.exceptAll(fused_keys).count() == 0

@@ -143,38 +143,6 @@ def test_cohort_transitive_clusters_vs_dsu(spark):
     assert ("japan", "a") in got and ("canada", "a") in got
 
 
-def test_cohort_seed_edges_selection(spark):
-    """Seed selection: prob ≥ 0.60 AND ≥1 shared country, exploded per
-    shared country (reference apply_transitivity.py:107-119)."""
-    from entity_resolution__spark.plans.pipeline import cohort_seed_edges
-
-    scored = spark.createDataFrame(
-        [
-            ("a", "b", 0.9),   # share japan → seed
-            ("a", "c", 0.9),   # disjoint countries → no seed
-            ("b", "c", 0.59),  # below threshold → no seed
-            ("a", "d", 0.7),   # share japan AND canada → 2 seed rows
-            ("b", "e", 0.8),   # e has no countries → no seed
-        ],
-        ["id_left", "id_right", "prob_match"],
-    )
-    countries = spark.createDataFrame(
-        [
-            ("a", ["Canada", "Japan"]),
-            ("b", ["Japan"]),
-            ("c", ["France"]),
-            ("d", ["Canada", "Japan"]),
-            ("e", []),
-        ],
-        ["conv_id", "countries"],
-    )
-    got = {
-        (r["u"], r["v"], r["cohort"])
-        for r in cohort_seed_edges(scored, countries, min_prob=0.60).collect()
-    }
-    assert got == {("a", "b", "japan"), ("a", "d", "canada"), ("a", "d", "japan")}
-
-
 def test_local_dsu_path_matches_star_loop(spark):
     """The size-adaptive driver-side DSU path must produce EXACTLY the
     same (node, root=min member) assignments as the distributed

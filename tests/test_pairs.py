@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from itertools import combinations
 
+from entity_resolution__spark.operators import pairs as pairs_mod
 from entity_resolution__spark.operators.pairs import candidate_pairs
 
 
@@ -23,7 +24,7 @@ def _expected(blocks: list[tuple[str, str]], max_block: int) -> set[tuple[str, s
 
 def test_salted_pairs_match_naive(spark):
     blocks = []
-    # hot block: 300 members (> salt_threshold=200 → triangle path)
+    # hot block: 300 members (> SALT_THRESHOLD=200 → triangle path)
     blocks += [(f"h{i:04d}", "hot") for i in range(300)]
     # normal blocks
     blocks += [(f"a{i}", "k1") for i in range(5)]
@@ -34,18 +35,15 @@ def test_salted_pairs_match_naive(spark):
     blocks += [("a0", "k3"), ("a1", "k3")]
 
     df = spark.createDataFrame(blocks, ["conv_id", "block_key"])
-    got = {
-        (r["id_left"], r["id_right"])
-        for r in candidate_pairs(
-            df, max_block=2000, salt_threshold=200, n_salts=4
-        ).collect()
-    }
-    assert got == _expected(blocks, max_block=2000)
+    assert pairs_mod.SALT_THRESHOLD < 300 <= pairs_mod.MAX_BLOCK < 2100
+    got = {(r["id_left"], r["id_right"]) for r in candidate_pairs(df).collect()}
+    assert got == _expected(blocks, max_block=pairs_mod.MAX_BLOCK)
 
 
-def test_no_self_or_reversed_pairs(spark):
+def test_no_self_or_reversed_pairs(spark, monkeypatch):
+    monkeypatch.setattr(pairs_mod, "SALT_THRESHOLD", 4)  # the 10-block is salted
     blocks = [(f"n{i}", "k") for i in range(10)]
     df = spark.createDataFrame(blocks, ["conv_id", "block_key"])
-    rows = candidate_pairs(df, salt_threshold=4, n_salts=3).collect()
+    rows = candidate_pairs(df).collect()
     assert all(r["id_left"] < r["id_right"] for r in rows)
     assert len(rows) == 45  # C(10,2)

@@ -132,6 +132,52 @@ def test_stored_run_takes_the_size_rule(
     assert _sorted(res.clusters.toPandas()).equals(_sorted(pipeline_run[1]))
 
 
+def test_params_keep_the_stored_fingerprints():
+    """ERConfig.params() reads the operator constants into the same nine
+    keys and values, types included, that every committed warehouse's
+    stage fingerprints were made from, so those warehouses resume."""
+    import json
+
+    want = {
+        "minhash_perm": 32,
+        "minhash_bands": 4,
+        "rare_token_max_df": 200,
+        "rare_tokens_per_conv": 4,
+        "max_block": 2000,
+        "min_token_jaccard": 0.15,
+        "keep_threshold": 0.45,
+        "cluster_threshold": 0.60,
+        "cc_max_iter": 50,
+    }
+    for cfg in (ERConfig(), ERConfig(stage_timing=True)):
+        assert json.dumps(cfg.params(), sort_keys=True) == json.dumps(want, sort_keys=True)
+
+
+def test_changed_operator_constant_recomputes_the_stages(
+    spark, tiny_transcripts_sdf, tmp_path_factory, monkeypatch
+):
+    """An operator constant enters the stage fingerprints: with
+    blocking.MINHASH_BANDS changed, a stored rerun resumes nothing. Blocks and every stage after it recompute; so do the
+    conversations, whose fingerprint folds in every parameter too."""
+    from entity_resolution__spark.operators import blocking
+
+    wh = str(tmp_path_factory.mktemp("warehouse_constant"))
+    run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=StageStore(wh))
+    before = {s: StageStore(wh).manifest(s)["fingerprint"] for s in _STAGES}
+
+    monkeypatch.setattr(blocking, "MINHASH_BANDS", 8)
+    reads = _spy_stages(monkeypatch, "read")
+    commits = _spy_stages(monkeypatch, "commit")
+    res = run_pipeline(spark, tiny_transcripts_sdf, ERConfig(), store=StageStore(wh))
+    after = {s: StageStore(wh).manifest(s)["fingerprint"] for s in _STAGES}
+    assert reads == []
+    assert commits == _STAGES
+    assert all(after[s] != before[s] for s in _STAGES)
+    # the new constant reached the operator: 8 band keys per conversation
+    n_conv = res.conversations.count()
+    assert blocking.minhash_band_keys(res.conversations).count() == 8 * n_conv
+
+
 @pytest.fixture(scope="module")
 def star_loop_run(spark, tiny_transcripts_sdf, tmp_path_factory, pipeline_run):
     """An uninterrupted stored run with the star loop forced: its round

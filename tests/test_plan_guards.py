@@ -78,6 +78,7 @@ def test_one_python_crossing_per_conversation(spark):
         F.col("conv_id").alias("id_right"),
         F.lit(1.0).alias("prob_match"),
     )
-    for df in (build_blocks(conv, ERConfig(), n_docs=conv.count()), flag_geo(scored, conv)):
+    keep = ERConfig().keep_threshold
+    for df in (build_blocks(conv, n_docs=conv.count()), flag_geo(scored, conv, keep)):
         plan = _plan_of(df)
         assert "ArrowEvalPython" not in plan, plan

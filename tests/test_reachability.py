@@ -1,5 +1,6 @@
 """Every package function, class, method and constant is reached from a
-root, or kept on purpose.
+root, or kept on purpose; every defaulted parameter on the ER path is
+set by some caller, or kept on purpose.
 
 The roots are what runs the engine: `__spark_entry__.py` (the oracle
 gate's entry and queries), `main.py`, `bench.py`, `perfbench/*.py` and
@@ -17,6 +18,13 @@ argument, or an assignment, `for`, `with` or `except` target), or of an
 enclosing function, is not a reference. Other names are matched without
 their module, so two defs that share a name keep each other alive; the
 check can only err toward keeping code.
+
+The parameter rule covers the modules the ER pipeline runs through
+(`ER_PATH`). A parameter with a default there (a dataclass field with a
+default counts) must be passed by some call outside `tests/`, by keyword
+or by position; a call is matched by its callee's name alone, so this
+check too can only err toward keeping. A value no caller sets is a
+constant of the module that reads it, not a knob.
 
 Stdlib only, no Spark.
 """
@@ -46,7 +54,6 @@ KEEP = {
     "functions/strings.py:lcs_len_dp": "the textbook DP reference the LCS kernels are tested against",
     "functions/strings.py:lcs_ratio": "the scalar LCS-ratio reference the LCS kernels are tested against",
     "functions/strings.py:edit_ratio": "the scalar indel-ratio reference the LCS kernels are tested against",
-    "plans/pipeline.py:cohort_seed_edges": "the reference pipeline's E3 cohort-seed edges (paper semantics)",
 }
 
 
@@ -238,3 +245,133 @@ def outer(arg, *rest, **kw):
     # a default is evaluated where the function is defined
     assert "deco" in _names(ast.parse("def f(deco=deco):\n    return deco"))
     assert not {"arg", "rest", "kw", "shadow", "idx", "fh", "err"} & got
+
+
+# The ER pipeline's modules: their defaulted parameters must each be set
+# by a caller outside tests/, or sit on KEEP_PARAMS.
+ER_PATH = (
+    "plans/pipeline.py",
+    "operators/canonicalize.py",
+    "operators/blocking.py",
+    "operators/pairs.py",
+    "operators/saltjoin.py",
+    "operators/score.py",
+    "operators/constraints.py",
+    "operators/cluster.py",
+    "functions/features.py",
+)
+
+# Defaulted parameters no caller outside tests/ sets, kept on purpose, one
+# reason each. The set of unset parameters must equal these keys.
+KEEP_PARAMS = {
+    "operators/saltjoin.py:capped_salted_self_join(n_salts)": "test_saltjoin's property test varies the salt count (2-4) to check the triangle join's pair set for any S; every production caller uses the default 8",
+}
+
+
+def _is_dataclass(node: ast.ClassDef) -> bool:
+    for d in node.decorator_list:
+        f = d.func if isinstance(d, ast.Call) else d
+        if (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == "dataclass":
+            return True
+    return False
+
+
+def _signatures(tree: ast.Module):
+    """(callee name, positional parameter names, defaulted parameter
+    names) for every def in a module, nested ones included (a leading
+    self/cls is not positional at a call), and for every dataclass,
+    whose fields are its constructor's parameters."""
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            pos = [x.arg for x in a.posonlyargs + a.args]
+            if pos[:1] in (["self"], ["cls"]):
+                pos = pos[1:]
+            defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+            defaulted += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            yield node.name, pos, defaulted
+        elif isinstance(node, ast.ClassDef) and _is_dataclass(node):
+            fields = [
+                (s.target.id, s.value is not None)
+                for s in node.body
+                if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+            ]
+            yield node.name, [f for f, _ in fields], [f for f, d in fields if d]
+
+
+def _passes(call: ast.Call, pos: list[str], param: str) -> bool:
+    """Whether a call sets `param`: by keyword, by a `**` splat, by
+    position, or by a `*` splat that can reach its position."""
+    if any(k.arg in (param, None) for k in call.keywords):  # None: **kwargs
+        return True
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return param in pos
+    return param in pos[: len(call.args)]
+
+
+def unset_params() -> set[str]:
+    """`module:callee(param)` for every defaulted parameter on the ER path
+    that no call in the package or a root passes."""
+    callers = ROOTS + [
+        os.path.relpath(p, REPO)
+        for p in sorted(glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True))
+    ]
+    calls: dict[str, list[ast.Call]] = {}
+    for rel in callers:
+        for n in ast.walk(_parse(rel)):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+
+    out = set()
+    for rel in ER_PATH:
+        for name, pos, defaulted in _signatures(_parse(os.path.join(PKG, rel))):
+            for param in defaulted:
+                if not any(_passes(c, pos, param) for c in calls.get(name, [])):
+                    out.add(f"{rel}:{name}({param})")
+    return out
+
+
+def test_every_er_parameter_is_set_by_a_caller_or_kept():
+    unset = unset_params()
+    assert unset - set(KEEP_PARAMS) == set(), (
+        "defaulted parameters no caller outside tests/ sets (make them module "
+        "constants, or add them to KEEP_PARAMS with a reason): "
+        + ", ".join(sorted(unset - set(KEEP_PARAMS)))
+    )
+    assert set(KEEP_PARAMS) - unset == set(), (
+        "KEEP_PARAMS entries that a caller sets or that are gone (remove them): "
+        + ", ".join(sorted(set(KEEP_PARAMS) - unset))
+    )
+    assert all(reason.strip() for reason in KEEP_PARAMS.values())
+
+
+def test_parameter_rule_matches_keywords_positions_and_splats():
+    src = """
+def f(a, b=1, *, c=2):
+    pass
+
+class K:
+    def m(self, x=0):
+        pass
+
+@dataclass
+class C:
+    a: int
+    b: int = 1
+    c = 2
+"""
+    sigs = {name: (pos, d) for name, pos, d in _signatures(ast.parse(src))}
+    assert sigs == {
+        "f": (["a", "b"], ["b", "c"]),
+        "m": (["x"], ["x"]),
+        "C": (["a", "b"], ["b"]),
+    }
+
+    def sets(call: str, param: str, pos=("a", "b")) -> bool:
+        return _passes(ast.parse(call).body[0].value, list(pos), param)
+
+    assert sets("f(0, 1)", "b") and sets("f(0, b=1)", "b") and sets("f(c=1)", "c")
+    assert sets("f(*xs)", "b") and sets("f(**kw)", "c")
+    assert not sets("f(0)", "b") and not sets("f(0, 1)", "c") and not sets("f(*xs)", "c")
