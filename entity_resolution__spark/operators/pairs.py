@@ -63,9 +63,9 @@ def candidate_pairs(blocks: DataFrame) -> DataFrame:
 def attach_pair_payload(pairs: DataFrame, conv: DataFrame, cols: list[str]) -> DataFrame:
     """Join conversation payload columns onto both sides of each pair.
 
-    The reference does this with two driver-side dict lookups
-    (/root/reference/scripts/run_blocking.py:71-76); here it is two
-    shuffle hash joins keyed on conv_id — never a driver map.
+    The reference does this with two driver-side dict lookups (its
+    scripts/run_blocking.py:71-76); here it is two shuffle hash joins
+    keyed on conv_id — never a driver map.
     """
     # payload rows carry token/role arrays — broadcasting them makes the
     # driver build a huge relation single-threaded (measured ~60s serial
